@@ -21,9 +21,16 @@ entry without any ``clearCache``.
 
 At 100 TB nothing changes: persist spills to disk per partition, and the
 release is one unpersist per tracked handle — control-plane only.
+
+The module also owns the engine's one driver thread pool, :func:`overlap`:
+overlapped jobs can run tracked checkpoints, whose bookkeeping therefore
+serializes on a lock held here.
 """
 
 from __future__ import annotations
+
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
@@ -32,6 +39,32 @@ _TRACKED: list[DataFrame] = []
 #: JVM RDD handles holding localCheckpoint block sets (see
 #: local_checkpoint_tracked) — released alongside _TRACKED.
 _TRACKED_RDDS: list = []
+
+#: Serializes local_checkpoint_tracked's getPersistentRDDs snapshot-diff:
+#: two checkpoints materializing in the same window (overlapped driver
+#: threads) would each claim the other's blocks.
+_CKPT_LOCK = threading.Lock()
+
+#: Driver threads for overlap — medallion's 15 dimension writes are the
+#: widest fan-out in the package.
+_OVERLAP_MAX = 8
+
+
+def overlap(fns: list) -> list:
+    """Run independent Spark actions concurrently from a small driver
+    thread pool (optimization guide §2.6: actions are only sequential
+    because driver code calls them sequentially; overlapping independent
+    jobs lets each job's tasks back-fill capacity the others' scheduling
+    gaps and stragglers leave idle). Results in input order; a single
+    function runs inline; the first exception (in input order)
+    propagates only after every submitted function has settled, so a
+    failed sibling never leaves a half-running write racing the
+    caller's cleanup."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    with ThreadPoolExecutor(max_workers=min(_OVERLAP_MAX, len(fns))) as pool:
+        futs = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futs]
 
 
 def local_checkpoint_tracked(df: DataFrame, free: list | None = None):
@@ -47,8 +80,9 @@ def local_checkpoint_tracked(df: DataFrame, free: list | None = None):
     checkpoint generation would leak until JVM GC — tests/test_cache.py
     sweeps ``getPersistentRDDs`` to zero between entries precisely to
     catch that class. The new blocks are found by snapshot-diffing
-    ``getPersistentRDDs`` around the eager checkpoint (single-driver
-    engine: no concurrent persists to confuse the diff), KEEPING only
+    ``getPersistentRDDs`` around the eager checkpoint, under a lock so
+    checkpoints running in :func:`overlap`'s threads take turns and
+    never see each other's blocks, KEEPING only
     locally-checkpointed RDDs (``isLocallyCheckpointed`` on the JVM
     handle): the eager action may be the FIRST action over an upstream
     ``track_persist`` SQL cache, whose cache RDD then also first appears
@@ -76,14 +110,15 @@ def local_checkpoint_tracked(df: DataFrame, free: list | None = None):
             out[t._1()] = t._2()
         return out
 
-    before = set(_rdds())
-    out = df.localCheckpoint(eager=True)
-    handles = [
-        r
-        for i, r in _rdds().items()
-        if i not in before and r.isLocallyCheckpointed()
-    ]
-    _TRACKED_RDDS.extend(handles)
+    with _CKPT_LOCK:
+        before = set(_rdds())
+        out = df.localCheckpoint(eager=True)
+        handles = [
+            r
+            for i, r in _rdds().items()
+            if i not in before and r.isLocallyCheckpointed()
+        ]
+        _TRACKED_RDDS.extend(handles)
     for h in free or []:
         try:
             h.unpersist(True)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from data_engineer_development_spark.cache import overlap
 from data_engineer_development_spark.catalog import create_zone, materialize
 from data_engineer_development_spark.functions import (
     decode_map,
@@ -175,22 +176,16 @@ def run_civil_cases_pipeline(
         # shared trusted scan is cached once instead of 15 disk scans, and
         # each ≤100-row code→name dim coalesces to a single part file — the
         # layout a broadcast-joined dim wants at any scale.
-        from concurrent.futures import ThreadPoolExecutor
-
         trusted = s.table(f"{z['trusted']}.civil_cases").persist()
         trusted.count()  # materialize the cache before the parallel fan-out
+
+        def _write_dim(key: str, mapping: dict):
+            dim = build_dim(trusted, key, mapping).coalesce(1)
+            table = f"{z['dimensions']}.Dim{key.capitalize()}"
+            return lambda: materialize(dim, table)
+
         try:
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                futs = [
-                    pool.submit(
-                        materialize,
-                        build_dim(trusted, key, mapping).coalesce(1),
-                        f"{z['dimensions']}.Dim{key.capitalize()}",
-                    )
-                    for key, mapping in DIM_DECODES.items()
-                ]
-                for f in futs:
-                    f.result()
+            overlap([_write_dim(k, m) for k, m in DIM_DECODES.items()])
         finally:
             trusted.unpersist()
 

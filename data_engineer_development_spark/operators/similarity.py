@@ -329,11 +329,13 @@ _LONG_MIN = -(1 << 63)
 
 def _quantize_rows(embs, np=np):
     """(qv_list, qn_list) for a sequence of embedding arrays — the int8
-    max-abs grid, numerically IDENTICAL to the JVM HOF formulation: each
-    element is ``floor(cast(x as double) * 127.0 / mx + 0.5)`` with the
-    same IEEE operation order, ``mx`` is an exact max (order-free), and
-    ``qn`` an exact int64 sum of squares. Rows are grouped by width so
-    the arithmetic is one vectorized pass per distinct width."""
+    max-abs grid with Spark-SQL semantics (the reference expression is
+    pinned in tests/test_semdedup.py): each element is
+    ``cast(floor(cast(x as double) * 127.0 / mx + 0.5) as bigint)`` with
+    the same IEEE operation order, ``mx`` is an exact max (order-free),
+    and ``qn`` the int64 sum of squares (wrapping like non-ANSI bigint
+    math). Rows are grouped by width so the arithmetic is one vectorized
+    pass per distinct width."""
     n = len(embs)
     qv_out: list = [None] * n
     qn_out: list = [None] * n
@@ -353,82 +355,62 @@ def _quantize_rows(embs, np=np):
                 qn_out[i] = 0
             continue
         M = np.vstack([arrs[i] for i in idxs])
-        finite = np.isfinite(M).all(axis=1)
         mx = np.max(np.abs(M), axis=1)
         with np.errstate(all="ignore"):
             Q = np.floor(M * 127.0 / mx[:, None] + 0.5)
         Q = np.where(mx[:, None] == 0.0, 0.0, Q)
+        # a finite grid value is within ±128, so the C cast is exact; a
+        # non-finite one (NaN/inf input, or x·127 overflowing past
+        # ~1.4e306) takes Spark's non-ANSI double→bigint cast instead
+        finite = np.isfinite(Q).all(axis=1)
         for r, i in enumerate(idxs):
             if finite[r]:
                 qi = Q[r].astype(np.int64)
-                qv_out[i] = qi.tolist()
-                qn_out[i] = int(np.dot(qi, qi))
             else:
-                # non-finite input: mimic Spark's non-ANSI double→bigint
-                # cast per element (NaN → 0, ±inf saturates)
-                qi2 = []
-                for x in Q[r]:
-                    if x != x:
-                        qi2.append(0)
-                    elif x >= float(_LONG_MAX):
-                        qi2.append(_LONG_MAX)
-                    elif x <= float(_LONG_MIN):
-                        qi2.append(_LONG_MIN)
-                    else:
-                        qi2.append(int(x))
-                qv_out[i] = qi2
-                qn_out[i] = sum(q * q for q in qi2)
+                qi = np.array(
+                    [
+                        0 if x != x
+                        else _LONG_MAX if x >= float(_LONG_MAX)
+                        else _LONG_MIN if x <= float(_LONG_MIN)
+                        else int(x)
+                        for x in Q[r]
+                    ],
+                    dtype=np.int64,
+                )
+            qv_out[i] = qi.tolist()
+            qn_out[i] = int(np.dot(qi, qi))  # int64: wraps like the JVM
     return qv_out, qn_out
 
 
 def _with_quantized(
-    vectors: DataFrame, id_col: str, vec_col: str, *extra_cols: str,
-    via: str = "numpy",
+    vectors: DataFrame, id_col: str, vec_col: str, *extra_cols: str
 ) -> DataFrame:
     """(id, vec[, extra...], qv, qn): int8 max-abs quantization
     (`operators/inference.py` grid) + integer self-dot — the shared front
-    of the semantic-dedup family. ``extra_cols`` ride along untouched
-    (e.g. a shard key).
+    of the semantic-dedup family and the streaming near-dup gate.
+    ``extra_cols`` ride along untouched (e.g. a shard key, or the gate's
+    event-time column — watermark it on this frame, downstream of the
+    Python node).
 
-    Two physical paths, bit-identical by construction (pinned by
-    tests/test_semdedup.py::test_numpy_quantizer_equals_jvm):
+    One Arrow-batched ``mapInPandas`` pass over ``_quantize_rows``
+    (OPTIMIZATION r18 — guide §4.2/§4.4), pinned bit-for-bit against the
+    Spark-SQL higher-order-function formulation by
+    tests/test_semdedup.py::test_numpy_quantizer_equals_jvm. That SQL
+    form is INTERPRETED per row (~0.15 ms/row), and worse, Catalyst
+    pushes every downstream ``qn > 0`` filter below the projection by
+    INLINING the whole quantization chain into the scan filter —
+    re-evaluating the max-abs fold 3× and the qv/qn folds once more per
+    row (measured: the 8-row semdedup seed collect cost 2.0 s at sf0.1,
+    ~5× the projection itself). The opaque Python node computes each
+    quantity exactly once and is a pushdown barrier, so no consumer can
+    accidentally multiply it.
 
-    - ``via='numpy'`` (default, OPTIMIZATION r18 — guide §4.2/§4.4): one
-      Arrow-batched ``mapInPandas`` pass. The JVM formulation's
-      higher-order functions are INTERPRETED per row (~0.15 ms/row), and
-      worse, Catalyst pushes every downstream ``qn > 0`` filter below the
-      projection by INLINING the whole quantization chain into the scan
-      filter — re-evaluating the max-abs fold 3× and the qv/qn folds once
-      more per row (measured: the 8-row semdedup seed collect cost 2.0 s
-      at sf0.1, ~5× the projection itself). The opaque Python node
-      computes each quantity exactly once and is a pushdown barrier, so
-      no consumer can accidentally multiply it. Math is element-wise IEEE
-      on doubles plus exact integer sums — identical numbers.
-    - ``via='jvm'``: the pure-SQL HOF projection. REQUIRED where an
-      opaque node is unusable — the streaming gate keeps it because an
-      event-time watermark tag does not survive a Python node.
-
-    Caveat (numpy path, documented divergence on degenerate data only):
-    a NULL *element* inside an embedding arrives through Arrow as NaN,
-    so such rows quantize like NaN-bearing rows (elements → 0) instead
-    of the JVM's NULL-poisoned qn; NULL/empty ARRAYS and all-finite rows
+    Caveat (documented divergence on degenerate data only): a NULL
+    *element* inside an embedding arrives through Arrow as NaN, so such
+    rows quantize like NaN-bearing rows (elements → 0) instead of the
+    SQL form's NULL-poisoned qn; NULL/empty ARRAYS and all-finite rows
     — everything the fixtures and oracles exercise — agree exactly."""
     df = vectors.select(id_col, vec_col, *extra_cols)
-    if via == "jvm":
-        return (
-            df
-            .withColumn("__sd_mx", F.expr(
-                f"aggregate(transform({vec_col}, x -> abs(cast(x as double))),"
-                " cast(0.0 as double), (a, x) -> greatest(a, x))"))
-            .withColumn("qv", F.expr(
-                f"transform({vec_col}, x -> cast(if(__sd_mx = 0.0d, 0.0d,"
-                f" floor(cast(x as double) * 127.0d / __sd_mx + 0.5d)) as bigint))"))
-            .withColumn("qn", F.expr(
-                "aggregate(transform(qv, x -> x * x),"
-                " cast(0 as bigint), (a, x) -> a + x)"))
-            .drop("__sd_mx")
-        )
-
     in_cols = df.columns
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -530,69 +512,23 @@ def quantized_neardup_pairs(
     )
 
 
-
-def _codebook_argmax_expr(cents: list[tuple[int, list[int], int]]) -> F.Column:
-    """argmax over a LITERAL codebook: (cosine DESC, cent_id ASC) via
-    array_max on (s, -cent_id) structs — one projection, no shuffle.
-    Expects (id, qv, qn) columns in scope (``_with_quantized`` output)."""
-    lit_cents = ", ".join(
-        f"struct(cast({cid} as bigint) as cent_id,"
-        f" array({', '.join(str(int(x)) + 'L' for x in cqv)}) as cqv,"
-        f" cast({int(cqn)} as bigint) as cqn)"
-        for cid, cqv, cqn in cents
-    )
-    return F.expr(
-        f"array_max(transform(array({lit_cents}), c -> struct("
-        "cast(aggregate(zip_with(qv, c.cqv, (x, y) -> x * y),"
-        " cast(0 as bigint), (a, x) -> a + x) as double)"
-        " / sqrt(cast(qn * c.cqn as double)) as s,"
-        " -c.cent_id as nc)))"
-    )
-
-
-#: Codebook size above which cell assignment switches from the literal
-#: array-of-structs projection to the broadcast-numpy scorer. The literal
-#: expression embeds K·dims integer literals into the plan — fine for tens
-#: of centroids, quadratic trouble for Catalyst (analysis + codegen) past
-#: a few hundred. The numpy path closes auto-K's former scale hole: the
-#: codebook rides to executors as a closure capture (K·dims int64 ≈ 0.5 MB
-#: per 1k centroids at 64 dims) and each Arrow batch scores via one exact
-#: int64 matmul.
-LITERAL_CODEBOOK_MAX = 64
-
-
 def _assign_cells(
-    df: DataFrame, cents: list[tuple[int, list[int], int]], dims: int,
-    via: str = "auto",
+    df: DataFrame, cents: list[tuple[int, list[int], int]], dims: int
 ) -> DataFrame:
     """Add the ``cell`` column: argmax_c cosine(qv, c) with (s DESC,
     cent_id ASC) tie-break, over a ``_with_quantized`` frame.
 
-    Two physical paths, BIT-IDENTICAL by construction (pinned by
-    tests/test_semdedup.py::test_numpy_assignment_equals_literal): the
-    dot is exact int64 in both (JVM ``zip_with``/``aggregate`` vs numpy
-    matmul — integer math, no accumulation-order concern), the cast to
-    double is exact, sqrt/divide are IEEE on identical inputs, so equal
-    scores are EXACTLY equal and the tie-break is the same lowest
-    cent_id (cents sorted ascending; ``np.argmax`` returns the first
-    maximum). ``via='literal'`` is a pure projection (zero shuffle,
-    whole-stage codegen); ``via='numpy'`` is a ``mapInPandas`` projection
-    (zero shuffle, Arrow-batched) whose plan cost is independent of K —
-    the 100 TB path for trained codebooks past ``LITERAL_CODEBOOK_MAX``.
+    A ``mapInPandas`` projection (zero shuffle, Arrow-batched) whose plan
+    is independent of the codebook's size and values: the codebook rides
+    to executors as a closure capture (K·dims int64 ≈ 0.5 MB per 1k
+    centroids at 64 dims), so each Lloyd round's new centroids cost no
+    fresh codegen compile. Each batch scores via one exact int64 matmul;
+    the cast to double is exact, sqrt/divide are IEEE on the exact
+    integer ``qn·cqn``, and ties go to the lowest cent_id (cents sorted
+    ascending; ``np.argmax`` returns the first maximum) — pinned against
+    a pure-Python argmax by
+    tests/test_semdedup.py::test_numpy_assignment_equals_reference.
     """
-    if via == "auto":
-        # OPTIMIZATION r18: numpy for every codebook size. The literal
-        # projection embeds the codebook VALUES into the generated code,
-        # so each Lloyd round's new centroids force a fresh Janino
-        # compile (measured: 2.34 s first-run vs 0.95 via numpy at K=8,
-        # sf0.1; hot runs 0.79 vs 0.66) — the numpy scorer's plan is
-        # value-independent. Bit-identical by the pinned equality test;
-        # 'literal' remains for explicit use/tests.
-        via = "numpy"
-    if via == "literal":
-        a = _codebook_argmax_expr(cents)
-        return df.withColumn("cell", -a.getField("nc"))
-
     cents = sorted(cents, key=lambda c: c[0])
     cent_ids = np.array([c[0] for c in cents], dtype=np.int64)
     C = np.vstack([np.array(c[1], dtype=np.int64) for c in cents])
@@ -665,7 +601,7 @@ def _lloyd_rounds(
     train_iters: int,
 ) -> list[tuple[int, list[int], int]]:
     """``train_iters`` Lloyd rounds on the quantized grid: assign by the
-    current literal codebook (projection, no shuffle), per-cell
+    current codebook (projection, no shuffle), per-cell
     elementwise BIGINT sums (ONE K-group shuffle), new centroid = the
     ROUNDED INTEGER mean ``floor(sum/n + 0.5)`` per dimension —
     computed as the EXACT integer floor division ``(2·s + n) fld (2·n)``
@@ -712,9 +648,8 @@ def _lloyd_rounds(
 #: (~16 bytes/pair), so avg cell 1024 → ~16 MB per cell task at the
 #: measured ~1.1× fixture skew, comfortably inside an executor core's
 #: budget with ~4× headroom for skewier corpora. k_max bounds the
-#: CODEBOOK, not the expression — past LITERAL_CODEBOOK_MAX the
-#: assignment runs the broadcast-numpy scorer (plan cost independent of
-#: K), so the binding constraints are the codebook's closure-capture
+#: CODEBOOK: the numpy assignment scorer's plan cost is independent of
+#: K, so the binding constraints are the codebook's closure-capture
 #: size (K·dims int64 ≈ 34 MB per task at the clamp, 64 dims) and the
 #: K-row Lloyd aggregate. Past the clamp (N > 64 M rows/pass at
 #: target 1024) shard the corpus on a coarse key (language/domain/
@@ -784,10 +719,9 @@ def semdedup(
        toward genuine k-means centroids). The codebook is a bounded
        driver-side collect (K rows); assignment is a pure projection over
        the scan — ZERO corpus shuffle, no N×K intermediate, no window —
-       via a LITERAL array-of-struct expression for small K, or the
-       bit-identical broadcast-numpy ``mapInPandas`` scorer past
-       ``LITERAL_CODEBOOK_MAX`` (see ``_assign_cells``). At 100 TB this
-       is the codebook-broadcast pattern every IVF/k-means scorer uses.
+       via the numpy ``mapInPandas`` scorer (see ``_assign_cells``). At
+       100 TB this is the codebook-broadcast pattern every IVF/k-means
+       scorer uses.
     3. **Per-cell pairs only, never as Spark rows**: one shuffle groups
        vectors by ``cell``; each cell's pair matrix is scored INSIDE numpy
        (``applyInPandas`` — int64 matmul, exact) and only the per-vector
@@ -807,7 +741,7 @@ def semdedup(
     grid before the final assignment (VERDICT r9 #2: id-seeded cells
     measured recall 0.285 at sf0.1/K=8/τ=0.4 — trained centroids lift
     it; see BASELINE.md round-10 notes for the measured numbers). Each
-    round: assign by the current literal codebook (projection, no
+    round: assign by the current codebook (projection, no
     shuffle), per-cell elementwise BIGINT sums (ONE K-group shuffle),
     then the new centroid is the ROUNDED INTEGER mean
     ``floor(sum/n + 0.5)`` per dimension — computed as the exact integer
@@ -1065,12 +999,12 @@ SHARDED_SEED_MAX_ROWS = 100_000
 def _assign_cells_sharded(
     df: DataFrame, cents_by_shard: dict, shard_col: str
 ) -> DataFrame:
-    """Per-shard cell assignment: the broadcast-numpy scorer of
-    ``_assign_cells(via='numpy')`` with one codebook PER SHARD (rows
-    grouped by the shard key inside each Arrow batch, each group scored
-    against its own codebook — same exact int64/IEEE math and
-    (s DESC, cent_id ASC) tie-break, bit-identical to a per-shard
-    literal argmax). Zero corpus shuffle."""
+    """Per-shard cell assignment: the numpy scorer of ``_assign_cells``
+    with one codebook PER SHARD (rows grouped by the shard key inside
+    each Arrow batch, each group scored against its own codebook — same
+    exact int64/IEEE math and (s DESC, cent_id ASC) tie-break,
+    bit-identical to a per-shard ``_assign_cells``). Zero corpus
+    shuffle."""
     cb = {
         s: (
             np.array([c[0] for c in cents], dtype=np.int64),
@@ -1179,7 +1113,7 @@ def semdedup_sharded(
     assignment is one broadcast-numpy ``mapInPandas`` projection scoring
     each row against ITS shard's codebook (zero corpus shuffle, same
     exact int64/IEEE math as ``_assign_cells`` — bit-identical to a
-    per-shard literal argmax), and the pair kernel groups by
+    per-shard ``_assign_cells``), and the pair kernel groups by
     (shard, cell) so the Σ|cell|² work is per-shard. A duplicate pair
     SPLIT ACROSS SHARDS is deliberately not detected — that is the
     shard contract, identical to running ``semdedup`` per language.

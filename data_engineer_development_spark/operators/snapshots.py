@@ -34,6 +34,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import overlap
+
 #: ``schema`` is the committed file's Spark schema (simpleString) for
 #: ``add`` actions, '' otherwise — captured at COMMIT time so readers
 #: detect schema divergence from the manifest alone, never by opening
@@ -75,26 +77,6 @@ def _stats_rows_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     from data_engineer_development_spark.functions import jvm_rows_df
 
     return jvm_rows_df(spark, _STATS_SCHEMA, rows)
-
-
-def _overlap(fns: list) -> list:
-    """Run independent Spark actions concurrently from a small driver
-    thread pool (optimization guide §2.6: actions are only sequential
-    because driver code calls them sequentially; overlapping independent
-    jobs lets each job's tasks back-fill capacity the others' scheduling
-    gaps and stragglers leave idle). The commit path is dominated by
-    per-job constants at manifest scale, so overlapping N ~equal jobs
-    approaches an N-fold cut of that constant. Results in input order;
-    the first exception propagates after all submitted work settles (a
-    failed sibling never leaves a half-running write racing the caller's
-    cleanup)."""
-    if len(fns) <= 1:
-        return [fn() for fn in fns]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(fns))) as pool:
-        futs = [pool.submit(fn) for fn in fns]
-        return [f.result() for f in futs]
 
 
 def key_bounds(df: DataFrame, key_col: str) -> tuple:
@@ -158,10 +140,10 @@ def append_snapshot(
             "append_snapshot: stats for file(s) not added this version "
             f"{sorted(unknown_stats)}"
         )
-    overlap = set(dvs) & set(removes)
-    if overlap:
+    dv_removed = set(dvs) & set(removes)
+    if dv_removed:
         raise ValueError(
-            f"append_snapshot: dv on removed file(s) {sorted(overlap)} — "
+            f"append_snapshot: dv on removed file(s) {sorted(dv_removed)} — "
             "a vector on a file this version removes can never apply"
         )
     if not adds and not removes and not dvs:
@@ -175,7 +157,7 @@ def append_snapshot(
             os.path.join(base_dir, "data", fid)
         )
 
-    _overlap([_write_add(fid, df) for fid, df in adds.items()])
+    overlap([_write_add(fid, df) for fid, df in adds.items()])
 
     # measure bounds from the files JUST WRITTEN (a key-column-only
     # read of fresh, page-cached parquet) instead of re-executing
@@ -201,7 +183,7 @@ def append_snapshot(
         ).parquet(os.path.join(base_dir, "dv", f"{fid}@{version}"))
 
     unmeasured = sorted(set(adds) - set(stats)) if auto_stats else []
-    round2 = _overlap(
+    round2 = overlap(
         [_measure(fid) for fid in unmeasured]
         + [_write_dv(fid, keys) for fid, keys in dvs.items()]
     )
@@ -900,7 +882,7 @@ def merge_cdc(
     # bounded jobs — one overlap round instead of three sequential ones
     # (r17 overlapped only the guards). Guard semantics unchanged: both
     # reads are read-only, nothing is written before any guard settles
-    # (_overlap re-raises the first exception after all submitted work
+    # (overlap re-raises the first exception after all submitted work
     # completes).
     fns = (
         ([_dup_guard] if up_counts is not None else [])
@@ -911,7 +893,7 @@ def merge_cdc(
             lambda: _key_stats(spark, base_dir, key_col, None),
         ]
     )
-    acts, all_stats = _overlap(fns)[-2:]
+    acts, all_stats = overlap(fns)[-2:]
     added = {r["file_id"] for r in acts if r["action"] == "add"}
     removed = {r["file_id"] for r in acts if r["action"] == "remove"}
     live = sorted(added - removed)

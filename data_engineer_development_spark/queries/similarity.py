@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import overlap
 from data_engineer_development_spark.functions.portable_hash import (
     duck_md5_int,
     hyperplane,
@@ -354,20 +355,14 @@ def q_semdedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them from two driver threads lets each chain's jobs back-fill the
     # other's scheduling gaps. Both DataFrames are identical to the
     # sequential build — only the job submission order changes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_truth = pool.submit(
-            S.quantized_neardup_pairs, vecs, _SD_TAU, dims=DIMS
-        )
-        f_asg = pool.submit(
-            lambda: S.semdedup(  # auto-K, loudly pinned to the oracle
-                vecs, k_cells=_auto_k_pinned(vecs, (sf_dir, "full")),
-                tau=_SD_TAU, dims=DIMS, train_iters=_SD_ITERS,
-            )
-        )
-        truth = f_truth.result()
-        asg = f_asg.result().select("vec_id", "cell")
+    truth, asg = overlap([
+        lambda: S.quantized_neardup_pairs(vecs, _SD_TAU, dims=DIMS),
+        lambda: S.semdedup(  # auto-K, loudly pinned to the oracle
+            vecs, k_cells=_auto_k_pinned(vecs, (sf_dir, "full")),
+            tau=_SD_TAU, dims=DIMS, train_iters=_SD_ITERS,
+        ),
+    ])
+    asg = asg.select("vec_id", "cell")
     a1 = asg.select(F.col("vec_id").alias("id1"), F.col("cell").alias("cell1"))
     a2 = asg.select(F.col("vec_id").alias("id2"), F.col("cell").alias("cell2"))
     return (

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import overlap
 from data_engineer_development_spark.sources import load_table, register_views
 
 
@@ -1375,8 +1376,6 @@ def q_cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (read_asof) plus a live_files collect — four independent
         # bounded jobs; build both versions' frames from two driver
         # threads (OPTIMIZATION r18, guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _per_version(v: int) -> DataFrame:
             return (
                 read_asof(spark, base, v, dv_key="o_orderkey")
@@ -1394,9 +1393,8 @@ def q_cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            per_version = list(pool.map(_per_version, (1, 2)))
-        out = per_version[0].unionByName(per_version[1])
+        v1, v2 = overlap([lambda: _per_version(1), lambda: _per_version(2)])
+        out = v1.unionByName(v2)
         # materialize BEFORE the landing dir vanishes
         return out.orderBy("version").localCheckpoint()
     finally:
@@ -1635,8 +1633,7 @@ def q_stream_cdc_merge_snapshot(
         )
         q.awaitTermination()
 
-        def _summary(args: tuple) -> DataFrame:
-            version, label = args
+        def _summary(version: int, label: str) -> DataFrame:
             return (
                 read_asof(spark, base, version, dv_key="o_orderkey")
                 .agg(
@@ -1648,12 +1645,9 @@ def q_stream_cdc_merge_snapshot(
 
         # each summary pays a read_asof manifest collect — independent
         # bounded jobs, built from two driver threads (r18, guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            s_base, s_head = pool.map(
-                _summary, ((1, "base"), (2**61, "head"))
-            )
+        s_base, s_head = overlap([
+            lambda: _summary(1, "base"), lambda: _summary(2**61, "head")
+        ])
         out = s_base.unionByName(s_head)
         # materialize BEFORE the landing dirs vanish
         return out.orderBy("state").localCheckpoint()

@@ -587,13 +587,14 @@ def stream_neardup_gate(
             raise ValueError(
                 "ttl_ms and event_ttl_ms are mutually exclusive"
             )
-        # watermark BEFORE the projections (it must bind to the raw
-        # event-time column); EventTimeTimeout without a watermark is a
-        # query-start error, so failure is loud, not silent
-        vectors = vectors.withWatermark(event_time_col, watermark_delay)
+        # the event-time column rides through the quantizer's Python node
+        # unchanged, so the watermark binds to it on the quantized frame
+        # (a tag set upstream would not survive that node);
+        # EventTimeTimeout without a watermark is a query-start error, so
+        # failure is loud, not silent
         q = _with_quantized(
-            vectors, id_col, vec_col, event_time_col, via="jvm"
-        )  # jvm: a watermark tag cannot survive an opaque Python node
+            vectors, id_col, vec_col, event_time_col
+        ).withWatermark(event_time_col, watermark_delay)
         usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
         if tables == 1:
             bucketed = bucket_assign(
@@ -653,7 +654,7 @@ def stream_neardup_gate(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
 
-    q = _with_quantized(vectors, id_col, vec_col, via="jvm")
+    q = _with_quantized(vectors, id_col, vec_col)
     usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
     timeout = (
         GroupStateTimeout.NoTimeout

@@ -8,6 +8,10 @@ their load-bearing persists; ``release_tracked()`` frees exactly those.
 
 from __future__ import annotations
 
+import threading
+import time
+
+import pytest
 from conftest import SF_SMOKE
 
 from data_engineer_development_spark import cache
@@ -127,3 +131,62 @@ def test_local_checkpoint_does_not_capture_upstream_persist(spark):
     cache.release_tracked()
     spark.catalog.clearCache()
     assert _n_cached(spark) == 0
+
+
+def test_overlap_orders_results_runs_single_inline_and_settles_siblings():
+    """cache.overlap's contract, pure Python: results in input order
+    (whatever order the functions finish in), one function runs on the
+    caller's thread, and a failure reaches the caller only after every
+    sibling has settled — a failed guard must never leave a write still
+    running while the caller cleans up."""
+
+    def after(delay, value):
+        def fn():
+            time.sleep(delay)
+            return value
+
+        return fn
+
+    assert cache.overlap([after(0.2, "a"), after(0.0, "b"), after(0.1, "c")]) == [
+        "a", "b", "c",
+    ]
+    assert cache.overlap([]) == []
+    assert cache.overlap([threading.get_ident]) == [threading.get_ident()]
+
+    finished = []
+
+    def boom():
+        raise RuntimeError("guard failed")
+
+    def slow():
+        time.sleep(0.3)
+        finished.append("slow")
+
+    with pytest.raises(RuntimeError, match="guard failed"):
+        cache.overlap([boom, slow])
+    assert finished == ["slow"]
+
+
+def test_overlapped_checkpoints_each_track_only_their_own_blocks(spark):
+    """ADVICE r18 #2: two tracked checkpoints started together from
+    overlap's threads. The getPersistentRDDs diff is serialized, so each
+    call reports exactly its own checkpoint RDD — never the sibling's —
+    and one release frees both."""
+    spark.catalog.clearCache()
+    cache.release_tracked()
+    assert _n_cached(spark) == 0
+    start = threading.Barrier(2)
+
+    def checkpoint(n: int):
+        def fn():
+            start.wait(timeout=60)
+            return cache.local_checkpoint_tracked(spark.range(n).repartition(4))
+
+        return fn
+
+    (out_a, h_a), (out_b, h_b) = cache.overlap([checkpoint(1000), checkpoint(2000)])
+    for out, handles in ((out_a, h_a), (out_b, h_b)):
+        assert [h.id() for h in handles] == [out._jdf.logicalPlan().rdd().id()]
+    assert (out_a.count(), out_b.count()) == (1000, 2000)
+    cache.release_tracked()
+    assert _n_cached(spark) == 0 and not cache._TRACKED_RDDS

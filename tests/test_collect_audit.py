@@ -36,8 +36,8 @@ _ALLOWED = {
     "operators/similarity.py": (8, "documented bounded brute-force path "
                                    "behind the LSH auto-switch cap; semdedup "
                                    "codebook seed collect (≤ k_cells rows, "
-                                   "folded into a literal assignment "
-                                   "expression); Lloyd per-round centroid "
+                                   "captured by the numpy assignment "
+                                   "scorer); Lloyd per-round centroid "
                                    "sums collect (≤ k_cells rows — one per "
                                    "cell, the distributed-k-means driver "
                                    "round-trip); quantized truth-set matrix "

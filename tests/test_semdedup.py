@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from conftest import SF_CORRECT
@@ -535,13 +537,29 @@ def test_auto_k_matches_oracle_constant_at_fixture_scale():
         assert any("clamped" in str(x.message) for x in w)
 
 
-def test_numpy_assignment_equals_literal(spark):
-    """The broadcast-numpy cell scorer (the K > LITERAL_CODEBOOK_MAX
-    path that closes auto-K's scale hole) must be BIT-IDENTICAL to the
-    literal array-of-structs projection: exact int64 dots in both, exact
-    cast to double, IEEE sqrt/divide, and the same (s DESC, cent_id ASC)
-    tie-break (cents ascending + np.argmax first-max). Checked on the
-    fixture with both a raw seed and a Lloyd-trained codebook."""
+def _argmax_cells(rows, cents):
+    """Pure-Python cell reference: exact integer dot, ONE sqrt over the
+    exact integer qn·cqn, highest score wins, ties to the lowest
+    cent_id."""
+    out = {}
+    for vid, qv, qn in rows:
+        best = None
+        for cid, cqv, cqn in sorted(cents):
+            dot = sum(a * b for a, b in zip(qv, cqv))
+            s = float(dot) / math.sqrt(float(qn * cqn))
+            if best is None or s > best[0]:
+                best = (s, cid)
+        out[vid] = best[1]
+    return out
+
+
+def test_numpy_assignment_equals_reference(spark):
+    """The numpy cell scorer must be BIT-IDENTICAL to a pure-Python
+    argmax: exact int64 dots, exact cast to double, IEEE sqrt/divide,
+    and the same (s DESC, cent_id ASC) tie-break (cents ascending +
+    np.argmax first-max). Checked on the fixture with a raw seed, a
+    Lloyd-trained codebook, and an exact-tie codebook (two identical
+    centroids under different ids, the lower id listed last)."""
     from data_engineer_development_spark.operators.similarity import (
         _assign_cells,
         _lloyd_rounds,
@@ -556,49 +574,29 @@ def test_numpy_assignment_equals_literal(spark):
     usable = q.filter(
         (F.size("embedding") == dims) & (F.col("qn") > 0)
     ).select("vec_id", "qv", "qn")
+    rows = [(r["vec_id"], r["qv"], r["qn"]) for r in usable.collect()]
+    hi = 10**6
+    tie = [(hi + cid, cqv, cqn) for cid, cqv, cqn in cents[:2]] + [
+        (hi - 1, *cents[0][1:])
+    ]
 
-    for cb in (cents, _lloyd_rounds(usable, cents, dims, 2)):
-        lit = {
-            r["vec_id"]: r["cell"]
-            for r in _assign_cells(usable, cb, dims, via="literal").collect()
-        }
+    for cb in (cents, _lloyd_rounds(usable, cents, dims, 2), tie):
         npy = {
             r["vec_id"]: r["cell"]
-            for r in _assign_cells(usable, cb, dims, via="numpy").collect()
+            for r in _assign_cells(usable, cb, dims).collect()
         }
-        assert lit == npy
+        assert npy == _argmax_cells(rows, cb)
+    tie_cells = set(_argmax_cells(rows, tie).values())
+    assert hi - 1 in tie_cells and hi + cents[0][0] not in tie_cells
 
-    # scale path stays a projection: no exchange between scan and scorer
+    # a projection: no exchange between scan and scorer
     plan = (
-        _assign_cells(usable, cents, dims, via="numpy")
+        _assign_cells(usable, cents, dims)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "Exchange" not in plan, plan
-
-
-def test_semdedup_end_to_end_identical_on_numpy_path(spark, monkeypatch):
-    """Forcing every assignment through the numpy scorer (threshold 0)
-    must leave semdedup's full verdict set — training rounds included —
-    unchanged from the literal default."""
-    import data_engineer_development_spark.operators.similarity as S_mod
-
-    from data_engineer_development_spark.sources import load_table
-
-    vecs = load_table(spark, SF_CORRECT, "embeddings")
-
-    def run():
-        return {
-            r["vec_id"]: (r["cell"], r["dup_of"], r["keep"])
-            for r in S_mod.semdedup(
-                vecs, k_cells=8, tau=0.4, dims=64, train_iters=2
-            ).collect()
-        }
-
-    base = run()
-    monkeypatch.setattr(S_mod, "LITERAL_CODEBOOK_MAX", 0)
-    assert run() == base
 
 
 def test_semdedup_sharded_isolates_shards(spark):
@@ -922,18 +920,38 @@ def test_semdedup_sharded_rejects_duplicate_ids_within_shard(spark):
         semdedup_sharded(df, shard_col="label", k_cells=2, tau=0.9, dims=4)
 
 
+def _sql_quantized(df, vec_col="embedding"):
+    """The Spark-SQL reference for ``_with_quantized``: the max-abs grid
+    as higher-order functions, under non-ANSI cast semantics (NaN → 0,
+    ±inf saturates to the bigint bounds, bigint products wrap) that the
+    numpy quantizer mimics."""
+    return (
+        df.withColumn("__mx", F.expr(
+            f"aggregate(transform({vec_col}, x -> abs(cast(x as double))),"
+            " cast(0.0 as double), (a, x) -> greatest(a, x))"))
+        .withColumn("qv", F.expr(
+            f"transform({vec_col}, x -> cast(if(__mx = 0.0d, 0.0d,"
+            " floor(cast(x as double) * 127.0d / __mx + 0.5d)) as bigint))"))
+        .withColumn("qn", F.expr(
+            "aggregate(transform(qv, x -> x * x),"
+            " cast(0 as bigint), (a, x) -> a + x)"))
+        .drop("__mx")
+    )
+
+
 def test_numpy_quantizer_equals_jvm(spark):
     """r18 optimization pin (guide §4.2/§4.4): the Arrow/numpy
-    ``_with_quantized`` path must reproduce the JVM HOF formulation
+    ``_with_quantized`` must reproduce the Spark-SQL HOF formulation
     BIT-FOR-BIT — same max-abs grid (element-wise IEEE double ops in the
-    same order), same exact int64 self-dot, same NULL-array/empty-array/
+    same order), same int64 self-dot, same NULL-array/empty-array/
     zero-norm/off-width handling — on a corpus that exercises every edge
-    the fixtures and oracles can reach."""
+    the fixtures and oracles can reach, plus doubles so large that
+    x·127 overflows to inf (the cast then saturates)."""
     from data_engineer_development_spark.operators.similarity import (
         _with_quantized,
     )
 
-    rows = [
+    floats = [
         (0, [1.0, -2.5, 3.25, 0.125]),          # plain
         (1, [0.0, 0.0, 0.0, 0.0]),              # zero-norm → qn 0
         (2, [1e-30, -1e-30, 1e-30, -1e-30]),    # tiny mx (rounding stress)
@@ -945,35 +963,39 @@ def test_numpy_quantizer_equals_jvm(spark):
         (8, [-0.1, 0.1, -0.1, 0.1]),             # sign symmetry
         (9, [0.7000001, -0.6999999, 0.35, 0.0]), # near-tie magnitudes
     ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
+    doubles = [
+        (10, [1e307, -1e307, 1.0, 0.0]),        # x·127 overflows to ±inf
+        (11, [1.0, -2.5, 3.25, 0.125]),
+    ]
 
-    def grab(via):
+    def grab(df):
         return {
             r["vec_id"]: (
                 None if r["qv"] is None else tuple(r["qv"]),
                 r["qn"],
             )
-            for r in _with_quantized(
-                df, "vec_id", "embedding", via=via
-            ).collect()
+            for r in df.collect()
         }
 
-    assert grab("numpy") == grab("jvm")
-
-    # the fixture corpus end-to-end, both paths, bit-for-bit
     from data_engineer_development_spark.sources import load_table
 
-    vecs = load_table(spark, SF_CORRECT, "embeddings")
-    a = {
-        r["vec_id"]: (tuple(r["qv"]), r["qn"])
-        for r in _with_quantized(vecs, "vec_id", "embedding").collect()
-    }
-    b = {
-        r["vec_id"]: (tuple(r["qv"]), r["qn"])
-        for r in _with_quantized(
-            vecs, "vec_id", "embedding", via="jvm"
-        ).collect()
-    }
-    assert a == b
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for rows, typ in ((floats, "float"), (doubles, "double")):
+            df = spark.createDataFrame(
+                rows, f"vec_id long, embedding array<{typ}>"
+            )
+            assert grab(
+                _with_quantized(df, "vec_id", "embedding")
+            ) == grab(_sql_quantized(df))
+
+        # the fixture corpus end-to-end, bit-for-bit
+        vecs = load_table(spark, SF_CORRECT, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        assert grab(
+            _with_quantized(vecs, "vec_id", "embedding")
+        ) == grab(_sql_quantized(vecs))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -506,6 +506,33 @@ def test_stream_neardup_gate_banded_single_stateful_op(spark):
     assert plan.count("Generate stack") == 1
 
 
+@pytest.mark.parametrize("event_time", [False, True])
+def test_stream_neardup_gate_quantizes_without_sql_folds(spark, event_time):
+    """The gate quantizes through the same numpy node as batch semdedup:
+    no interpreted max-abs / self-dot fold (``aggregate(transform(``) in
+    its plan — the chain Catalyst would copy into every pushed-down
+    filter. The event-time branch keeps its watermark, set on the
+    quantized frame. (Analyzed plan: an unstarted stream has no
+    optimized plan.)"""
+    from pyspark.sql import functions as F
+
+    from data_engineer_development_spark.streaming.stateful import (
+        stream_neardup_gate,
+    )
+    from data_engineer_development_spark.streaming.windows import stream_table
+    from tests.conftest import SF_SMOKE
+
+    src = stream_table(spark, SF_SMOKE, "embeddings")
+    kw = {}
+    if event_time:
+        src = src.withColumn("ts", F.timestamp_seconds("vec_id"))
+        kw = {"event_time_col": "ts", "event_ttl_ms": 600_000}
+    g = stream_neardup_gate(src, tau=0.4, planes=2, dims=64, **kw)
+    plan = g._jdf.queryExecution().analyzed().toString()
+    assert "aggregate(transform(" not in plan
+    assert ("EventTimeWatermark" in plan) == event_time
+
+
 def test_stream_neardup_gate_banded_with_ttl_e2e(spark):
     """The two dials compose: a banded (tables=2) gate under a
     ProcessingTimeTimeout TTL must run end-to-end and, within a single
