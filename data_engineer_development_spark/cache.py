@@ -22,6 +22,13 @@ entry without any ``clearCache``.
 At 100 TB nothing changes: persist spills to disk per partition, and the
 release is one unpersist per tracked handle — control-plane only.
 
+Scratch data has one lifetime rule. Every checkpoint goes through
+:func:`local_checkpoint_tracked`, so :func:`release_tracked` frees it; a
+raw ``localCheckpoint()`` would park blocks that only JVM GC frees. Every
+scratch directory a query lands files in is a
+``tempfile.TemporaryDirectory``, and a result read from it is checkpointed
+inside the ``with`` block, before the files go.
+
 The module also owns the engine's one driver thread pool, :func:`overlap`:
 overlapped jobs can run tracked checkpoints, whose bookkeeping therefore
 serializes on a lock held here.
@@ -59,11 +66,29 @@ def overlap(fns: list) -> list:
     function runs inline; the first exception (in input order)
     propagates only after every submitted function has settled, so a
     failed sibling never leaves a half-running write racing the
-    caller's cleanup."""
+    caller's cleanup. Each function runs under a clone of the caller's
+    Spark local properties (job group, description), taken on submit as
+    ``pyspark.InheritableThread`` does, so its jobs are attributed to the
+    caller's query."""
     if len(fns) <= 1:
         return [fn() for fn in fns]
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+
+    def inherit(fn):
+        if sc is None:
+            return fn
+        props = sc._jsc.sc().getLocalProperties().clone()
+
+        def run():
+            sc._jsc.sc().setLocalProperties(props)
+            return fn()
+
+        return run
+
     with ThreadPoolExecutor(max_workers=min(_OVERLAP_MAX, len(fns))) as pool:
-        futs = [pool.submit(fn) for fn in fns]
+        futs = [pool.submit(inherit(fn)) for fn in fns]
         return [f.result() for f in futs]
 
 

@@ -26,6 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import (
+    local_checkpoint_tracked,
+    track_persist,
+)
+
 #: count_triangles broadcasts the degree table into the orientation join
 #: only while the canonical edge list is under this bound (|V| ≤ 2·m, so
 #: this caps the broadcast hash relation); past it the co-partitioned
@@ -78,12 +83,14 @@ def connected_components(
     # localCheckpoint: the final singleton anti-join runs AFTER und is
     # unpersisted — without materializing ``touched``, that action would
     # recompute the (potentially expensive) edge input from scratch.
-    touched = und.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    touched, _ = local_checkpoint_tracked(
+        und.select(F.col("src").alias("node")).distinct()
+    )
     all_nodes = nodes.select(F.col(id_col).alias("node"))
-    labels = (
-        all_nodes.join(touched, "node")
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
+    labels, handles = local_checkpoint_tracked(
+        all_nodes.join(touched, "node").select(
+            "node", F.col("node").alias("label")
+        )
     )
 
     for _ in range(max_iter):
@@ -104,7 +111,7 @@ def connected_components(
         )
         # Pointer jump: follow the label to ITS label (labels are node ids,
         # so the self-join always hits; left+coalesce guards regardless).
-        new_labels = (
+        new_labels, handles = local_checkpoint_tracked(
             cand.alias("a")
             .join(
                 cand.alias("b"),
@@ -118,8 +125,8 @@ def connected_components(
                     F.col("a.label"),
                     F.coalesce(F.col("b.label"), F.col("a.label")),
                 ).alias("label"),
-            )
-            .localCheckpoint()
+            ),
+            free=handles,
         )
         changed = (
             new_labels.filter(F.col("label") != F.col("old")).limit(1).count()
@@ -192,7 +199,7 @@ def pagerank(
         deg = F.broadcast(
             e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         )
-        ed = e.join(deg, "src").localCheckpoint()
+        ed, _ = local_checkpoint_tracked(e.join(deg, "src"))
         e.unpersist()
     else:
         # co-partitioned layout for rank tables too big to broadcast:
@@ -202,14 +209,13 @@ def pagerank(
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         # outdegree rides WITH the edge list so the per-round join is
         # single: (src, dst, deg) ⋈ ranks on src
-        ed = e.join(deg, "src").localCheckpoint()
+        ed, _ = local_checkpoint_tracked(e.join(deg, "src"))
         e.unpersist()
 
-    nodes = (
+    nodes, _ = local_checkpoint_tracked(
         ed.select(F.col("src").alias("id"))
         .union(ed.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     teleport = scale * 15 // 100
     ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank"))
@@ -265,11 +271,6 @@ def label_propagation(
     by the harness via ``cache.release_tracked``) because two consumers
     read it — the neighbor join and the self-vote union.
     """
-    from data_engineer_development_spark.cache import (
-        local_checkpoint_tracked,
-        track_persist,
-    )
-
     # the edge list is read every round, but an explicit persist measured
     # SLOWER at sf0.1 (9.6 vs 7.8 s min-of-3): the per-round subtrees are
     # canonically identical, so AQE's ReusedExchange already shares one
@@ -382,10 +383,6 @@ def count_triangles(
     # shape: every real triangle count materializes the canonical edge
     # list once rather than recomputing the dedup per consumer. Tracked
     # so the bench/harness release frees the checkpoint blocks.
-    from data_engineer_development_spark.cache import (
-        local_checkpoint_tracked,
-    )
-
     e = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),

@@ -100,14 +100,11 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape). The merge state (count sum, max ts) is associative and
     commutative, so the final store equals the batch GROUP BY no matter
     how the source splits into batches — which is what the oracle pins."""
-    import os
     import shutil
 
+    from data_engineer_development_spark.cache import local_checkpoint_tracked
     from data_engineer_development_spark.streaming import stream_events
-
-    state_dir = os.path.join(
-        tempfile.gettempdir(), f"febu-{uuid.uuid4().hex}"
-    )
+    from data_engineer_development_spark.streaming.windows import _CKPT_ROOT
 
     def upsert(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -141,28 +138,27 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RAM-backed ephemeral checkpoint, same rationale as run_to_memory_sink
     # (a real deployment points this at durable storage — the checkpoint is
     # what makes foreachBatch exactly-once across restarts)
-    ckpt_base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
-    ckpt = os.path.join(ckpt_base, f"febu-ckpt-{uuid.uuid4().hex}")
     try:
-        q = (
-            stream_events(spark, sf_dir)
-            .select("user_id", "ts")
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = (
-            spark.read.parquet(state_dir)
-            .orderBy("user_id")
-            .localCheckpoint()  # materialize BEFORE the store dir vanishes
-        )
+        with tempfile.TemporaryDirectory(
+            prefix="febu-", ignore_cleanup_errors=True
+        ) as d, tempfile.TemporaryDirectory(
+            prefix="febu-ckpt-", dir=_CKPT_ROOT, ignore_cleanup_errors=True
+        ) as ckpt:
+            state_dir = os.path.join(d, "state")
+            q = (
+                stream_events(spark, sf_dir)
+                .select("user_id", "ts")
+                .writeStream.foreachBatch(upsert)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return local_checkpoint_tracked(
+                spark.read.parquet(state_dir).orderBy("user_id")
+            )[0]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 _FOREACHBATCH_SQL = """
@@ -182,23 +178,24 @@ def q_kv_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, with the overwrite applied), so this entry gets a real oracle."""
     from data_engineer_development_spark.kv import KVStore
 
-    kv = KVStore(
-        spark, os.path.join(tempfile.gettempdir(), f"kvq-{uuid.uuid4().hex}")
-    )
     nations = load_table(spark, sf_dir, "nation").orderBy("n_nationkey").limit(5)
-    with kv.batch():
-        kv.put_many(
-            "nation",
-            {
-                str(r["n_nationkey"]): {"name": r["n_name"]}
-                for r in nations.collect()
-            },
-        )
-        kv.put("nation", "0", {"name": "OVERWRITTEN"})
-        kv.delete("nation", "1")
+    with tempfile.TemporaryDirectory(
+        prefix="kvq-", ignore_cleanup_errors=True
+    ) as d:
+        kv = KVStore(spark, d)
+        with kv.batch():
+            kv.put_many(
+                "nation",
+                {
+                    str(r["n_nationkey"]): {"name": r["n_name"]}
+                    for r in nations.collect()
+                },
+            )
+            kv.put("nation", "0", {"name": "OVERWRITTEN"})
+            kv.delete("nation", "1")
+        resolved = [(e["key"], e["name"]) for e in kv.query("nation")]
     import pandas as pd
 
-    resolved = [(e["key"], e["name"]) for e in kv.query("nation")]
     # pandas+Arrow so the returned frame is a JVM LocalRelation (no Python
     # worker when the driver executes it)
     return spark.createDataFrame(
@@ -455,8 +452,8 @@ def q_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-class Spark source. The oracle is plain SELECT over nation: a
     lossless roundtrip IS the check."""
     import json
-    import uuid as _uuid
 
+    from data_engineer_development_spark.cache import local_checkpoint_tracked
     from data_engineer_development_spark.sources.manifest_source import (
         ManifestDataSource,
     )
@@ -467,26 +464,28 @@ def q_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("n_nationkey")
         .collect()  # 25-row dim seed: bounded control-plane landing write
     )
-    d = tempfile.mkdtemp(prefix=f"manifest-{_uuid.uuid4().hex[:8]}-")
-    files = []
-    for shard in range(3):
-        p = os.path.join(d, f"part-{shard}.tsv")
-        with open(p, "w", encoding="utf-8") as fh:
-            for r in rows[shard::3]:
-                fh.write(
-                    f"{r['n_nationkey']}\t{r['n_name']}\t{r['n_regionkey']}\n"
-                )
-        files.append(p)
-    mf = os.path.join(d, "manifest.json")
-    with open(mf, "w", encoding="utf-8") as fh:
-        json.dump({"files": files, "delimiter": "\t"}, fh)
-    return (
-        spark.read.format("manifest")
-        .schema("n_nationkey int, n_name string, n_regionkey int")
-        .option("manifest", mf)
-        .load()
-        .orderBy("n_nationkey")
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="manifest-", ignore_cleanup_errors=True
+    ) as d:
+        files = []
+        for shard in range(3):
+            p = os.path.join(d, f"part-{shard}.tsv")
+            with open(p, "w", encoding="utf-8") as fh:
+                for r in rows[shard::3]:
+                    fh.write(
+                        f"{r['n_nationkey']}\t{r['n_name']}\t{r['n_regionkey']}\n"
+                    )
+            files.append(p)
+        mf = os.path.join(d, "manifest.json")
+        with open(mf, "w", encoding="utf-8") as fh:
+            json.dump({"files": files, "delimiter": "\t"}, fh)
+        return local_checkpoint_tracked(
+            spark.read.format("manifest")
+            .schema("n_nationkey int, n_name string, n_regionkey int")
+            .option("manifest", mf)
+            .load()
+            .orderBy("n_nationkey")
+        )[0]
 
 
 _MANIFEST_SOURCE_SQL = """

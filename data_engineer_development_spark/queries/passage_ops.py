@@ -27,9 +27,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import local_checkpoint_tracked
 from data_engineer_development_spark.operators import text as T
 from data_engineer_development_spark.sources import load_table
 
@@ -104,7 +107,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 3.6 s → 2.35 s at sf0.1; at cluster scale the same trade
     # holds: one scan+explode written to local scratch beats two full
     # recomputations whenever the stream has >1 consumer)
-    grams = _grams(docs, _PHRASE_N, with_pos=True).localCheckpoint()
+    grams, _ = local_checkpoint_tracked(_grams(docs, _PHRASE_N, with_pos=True))
     top1 = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -441,11 +444,6 @@ _EXPORT_BUCKETS = 8
 
 
 def q_export_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions.portable_hash import (
         spark_md5_int,
     )
@@ -456,10 +454,9 @@ def q_export_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.expr(
         f"{spark_md5_int('cast(doc_id as string)')} % {_EXPORT_BUCKETS}"
     ).cast("int")
-    out = os.path.join(
-        tempfile.gettempdir(), f"jsonl-export-{uuid.uuid4().hex}"
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonl-export-", ignore_cleanup_errors=True
+    ) as out:
         docs.withColumn("bucket", bucket).write.partitionBy(
             "bucket"
         ).mode("overwrite").json(out)
@@ -467,7 +464,7 @@ def q_export_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, text string, lang string, source string, "
             "n_chars long, bucket int"
         ).json(out)
-        return (
+        return local_checkpoint_tracked(
             back.groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -475,10 +472,7 @@ def q_export_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("text")).alias("total_text_len"),
             )
             .orderBy("bucket")
-            .localCheckpoint()  # materialize BEFORE the export dir vanishes
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        )[0]
 
 
 _EXPORT_SQL = f"""
@@ -509,11 +503,6 @@ def q_export_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV is NOT splittable within a file — at 100 TB keep hostile-field
     exports in many moderate files (the partitioned write here) or prefer
     JSONL/parquet (export_jsonl_roundtrip)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -526,8 +515,9 @@ def q_export_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lang"),
         ).alias("tricky"),
     )
-    out = os.path.join(tempfile.gettempdir(), f"csv-export-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="csv-export-", ignore_cleanup_errors=True
+    ) as out:
         docs.write.option("header", True).option("escape", '"').mode(
             "overwrite"
         ).csv(out)
@@ -540,7 +530,7 @@ def q_export_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("multiLine", True)
             .csv(out)
         )
-        return (
+        return local_checkpoint_tracked(
             back.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -548,10 +538,7 @@ def q_export_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("tricky")).alias("total_tricky_len"),
             )
             .orderBy("lang")
-            .localCheckpoint()  # materialize BEFORE the export dir vanishes
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        )[0]
 
 
 _EXPORT_CSV_SQL = """
@@ -580,21 +567,17 @@ def q_export_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ORC is splittable and predicate-pushdown-capable like parquet;
     the partitioned parallel write and schema'd read are exactly the shape
     a 100 TB export takes."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "text"
     )
-    out = os.path.join(tempfile.gettempdir(), f"orc-export-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orc-export-", ignore_cleanup_errors=True
+    ) as out:
         docs.write.mode("overwrite").orc(out)
         back = spark.read.schema(
             "doc_id long, lang string, n_chars long, text string"
         ).orc(out)
-        return (
+        return local_checkpoint_tracked(
             back.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -602,10 +585,7 @@ def q_export_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("text")).alias("total_text_len"),
             )
             .orderBy("lang")
-            .localCheckpoint()  # materialize BEFORE the export dir vanishes
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        )[0]
 
 
 _EXPORT_ORC_SQL = """

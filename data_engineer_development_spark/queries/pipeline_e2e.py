@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,17 +68,6 @@ def q_civil_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") < _KEY_CAP
     )
-    landing = os.path.join(
-        tempfile.gettempdir(), f"civil-landing-{uuid.uuid4().hex}"
-    )
-    # land the derived raw TSV the way the reference's download stage does
-    # (a blob arrives in the landing area, export_svg.py:85-105) — written
-    # executor-side as one part file rather than serializing 46 × 10k cells
-    # through the driver (toPandas cost ~2 s per bench run at this cap)
-    _derive_raw(orders).coalesce(1).write.option("sep", "\t").option(
-        "header", "true"
-    ).mode("overwrite").csv(landing)
-
     # fresh zones: drop metastore entries AND any orphaned warehouse dirs a
     # previous (killed) run left, else saveAsTable hits LOCATION_ALREADY_EXISTS
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -88,12 +76,20 @@ def q_civil_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         shutil.rmtree(os.path.join(wh, f"{db}.db"), ignore_errors=True)
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="civil-landing-", ignore_cleanup_errors=True
+    ) as landing:
+        # land the derived raw TSV the way the reference's download stage
+        # does (a blob arrives in the landing area, export_svg.py:85-105) —
+        # written executor-side as one part file rather than serializing
+        # 46 × 10k cells through the driver (toPandas cost ~2 s per bench
+        # run at this cap)
+        _derive_raw(orders).coalesce(1).write.option("sep", "\t").option(
+            "header", "true"
+        ).mode("overwrite").csv(landing)
         run_civil_cases_pipeline(
             spark, landing, zone_prefix=_ZONE_PREFIX
         ).run(spark)
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
 
     trusted = spark.table(f"{_ZONE_PREFIX}trusted.civil_cases")
     dim_c = spark.table(f"{_ZONE_PREFIX}dimensions.DimCircuit")

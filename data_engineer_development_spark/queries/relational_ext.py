@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import local_checkpoint_tracked
 from data_engineer_development_spark.sources import load_table, register_views
 
 
@@ -877,10 +878,9 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    und = (
+    und, _ = local_checkpoint_tracked(
         pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
         .union(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-        .localCheckpoint()
     )
     und.createOrReplaceTempView("rec_edges")
     return spark.sql(_RECURSIVE_REACH_SPARK_SQL)

@@ -18,9 +18,12 @@ semantically identity.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineer_development_spark.cache import local_checkpoint_tracked
 from data_engineer_development_spark.operators.joins import salted_join
 from data_engineer_development_spark.sources import load_table
 
@@ -71,17 +74,13 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 # tests/test_plans.py.
 # --------------------------------------------------------------------------
 def q_dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    out = os.path.join(tempfile.gettempdir(), f"dpp-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dpp-", ignore_cleanup_errors=True
+    ) as out:
         # fact laid out partitioned by priority (low-cardinality category)
         orders.write.partitionBy("o_orderpriority").mode("overwrite").parquet(out)
         fact = spark.read.parquet(out)
@@ -105,17 +104,14 @@ def q_dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (fact["o_custkey"] == dim["c_custkey"])
             & (fact["o_orderpriority"] == dim["d_priority"]),
         )
-        return (
+        return local_checkpoint_tracked(
             joined.groupBy("o_orderpriority")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
                 dsum("o_totalprice", "total_value"),
             )
             .orderBy("o_orderpriority")
-            .localCheckpoint()  # materialize BEFORE the scratch dir vanishes
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        )[0]
 
 
 _DPP_SQL = """

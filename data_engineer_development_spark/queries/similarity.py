@@ -940,7 +940,7 @@ def q_stream_neardup_gate_dials(
         )
     # finish EVERY started run even when one raises (ADVICE r17): an
     # early failure must not leave the sibling stream unawaited with its
-    # /dev/shm checkpoint leaked; the first exception re-raises after all
+    # scratch checkpoint leaked; the first exception re-raises after all
     # runs have been awaited and cleaned.
     first_exc: Exception | None = None
     for *_, run in runs:

@@ -9,10 +9,13 @@ dimensions, rule-tagged quarantine, and distribution monitoring.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineer_development_spark.cache import overlap
+from data_engineer_development_spark.cache import local_checkpoint_tracked, overlap
 from data_engineer_development_spark.sources import load_table, register_views
 
 
@@ -751,16 +754,12 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # every scan; the merge here is the DISCOVERY step, not the steady state.
 # --------------------------------------------------------------------------
 def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    out = os.path.join(tempfile.gettempdir(), f"evolve-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="evolve-", ignore_cleanup_errors=True
+    ) as out:
         docs.filter(F.col("doc_id") % 2 == 0).write.parquet(
             os.path.join(out, "batch=old")
         )
@@ -768,7 +767,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score", (F.col("n_chars") * 3).cast("bigint")
         ).write.parquet(os.path.join(out, "batch=new"))
         back = spark.read.option("mergeSchema", True).parquet(out)
-        return (
+        return local_checkpoint_tracked(
             back.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -776,10 +775,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.sum("score"), F.lit(0)).alias("score_sum"),
             )
             .orderBy("lang")
-            .localCheckpoint()  # materialize BEFORE the landing dir vanishes
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        )[0]
 
 
 _SCHEMA_EVOLUTION_SQL = """
@@ -814,19 +810,15 @@ def _snapshot_versions_summary(
     orders table in a throwaway dir via ``build(spark, base, orders)``,
     then summarize (count, decimal revenue) AS OF versions 1–3 and
     materialize before the landing dir vanishes."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import read_asof
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapq-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapq-", ignore_cleanup_errors=True
+    ) as base:
         build(spark, base, orders)
         per_version = [
             read_asof(spark, base, v, dv_key=dv_key)
@@ -840,10 +832,7 @@ def _snapshot_versions_summary(
         out = per_version[0]
         for df in per_version[1:]:
             out = out.unionByName(df)
-        # materialize BEFORE the landing dir vanishes
-        return out.orderBy("version").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out.orderBy("version"))[0]
 
 
 def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,7 +954,7 @@ def q_bucketed_join_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = f"bjcq_{uuid.uuid4().hex[:12]}"
     try:
         ob, lb = _write_bucketed_sides(spark, sf_dir, db)
-        return (
+        return local_checkpoint_tracked(
             ob.join(lb.hint("merge"), ob.o_orderkey == lb.l_orderkey)
             .groupBy("o_orderpriority")
             .agg(
@@ -973,9 +962,7 @@ def q_bucketed_join_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum("l_extendedprice", "revenue"),
             )
             .orderBy("o_orderpriority")
-            # materialize BEFORE the database (and its files) is dropped
-            .localCheckpoint()
-        )
+        )[0]
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
@@ -1005,11 +992,6 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 # expired. Metadata-scale collects only (manifest + dropped-id list).
 # --------------------------------------------------------------------------
 def q_snapshot_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1020,8 +1002,9 @@ def q_snapshot_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapv-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapv-", ignore_cleanup_errors=True
+    ) as base:
         m = F.col("o_orderkey") % 4
         append_snapshot(
             spark, base, 1,
@@ -1074,10 +1057,7 @@ def q_snapshot_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        # materialize BEFORE the landing dir vanishes
-        return out.orderBy("file_id").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out.orderBy("file_id"))[0]
 
 
 _VACUUM_AUDIT_SQL = """
@@ -1107,11 +1087,6 @@ ORDER BY f.file_id
 # tests). Summary equals the closed-form %2 split of orders.
 # --------------------------------------------------------------------------
 def q_snapshot_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1119,8 +1094,9 @@ def q_snapshot_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    base = os.path.join(tempfile.gettempdir(), f"snape-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snape-", ignore_cleanup_errors=True
+    ) as base:
         m = F.col("o_orderkey") % 2
         append_snapshot(
             spark, base, 1,
@@ -1145,10 +1121,7 @@ def q_snapshot_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("priority")
         )
-        # materialize BEFORE the landing dir vanishes
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out)[0]
 
 
 _SNAPSHOT_EVOLUTION_SQL = """
@@ -1179,11 +1152,6 @@ GROUP BY 1 ORDER BY 1
 # writes exactly the small-file bytes — never the table.
 # --------------------------------------------------------------------------
 def q_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1197,8 +1165,9 @@ def q_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapc-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapc-", ignore_cleanup_errors=True
+    ) as base:
         m = F.col("o_orderkey") % 6
         append_snapshot(
             spark, base, 1,
@@ -1224,10 +1193,7 @@ def q_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             for v in (1, 2)
         ]
         out = per_version[0].unionByName(per_version[1])
-        # materialize BEFORE the landing dir vanishes
-        return out.orderBy("version").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out.orderBy("version"))[0]
 
 
 # both versions read the ENTIRE table (v1 = all six slices; v2 = the
@@ -1335,11 +1301,6 @@ _CDC_INS_OFFSET = 1 << 40
 
 
 def q_cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1351,8 +1312,9 @@ def q_cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapm-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapm-", ignore_cleanup_errors=True
+    ) as base:
         k = F.col("o_orderkey")
         m = k % 4
         append_snapshot(
@@ -1395,10 +1357,7 @@ def q_cdc_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         v1, v2 = overlap([lambda: _per_version(1), lambda: _per_version(2)])
         out = v1.unionByName(v2)
-        # materialize BEFORE the landing dir vanishes
-        return out.orderBy("version").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out.orderBy("version"))[0]
 
 
 # v1 = the whole table; v2 = the table with the three change classes
@@ -1438,11 +1397,6 @@ ORDER BY version
 # frame (metadata scale).
 # --------------------------------------------------------------------------
 def q_snapshot_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import jvm_rows_df
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1454,8 +1408,9 @@ def q_snapshot_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapp-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapp-", ignore_cleanup_errors=True
+    ) as base:
         m = F.col("o_orderkey") % 4
         append_snapshot(
             spark, base, 1,
@@ -1488,8 +1443,6 @@ def q_snapshot_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         return jvm_rows_df(
             spark, "item string, n_files long, n_rows long", rows
         ).orderBy("item")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 _SNAPSHOT_MAINTENANCE_SQL = """
@@ -1530,11 +1483,6 @@ ORDER BY item
 def q_stream_cdc_merge_snapshot(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
@@ -1542,120 +1490,116 @@ def q_stream_cdc_merge_snapshot(
         read_asof,
         snapshot_log,
     )
+    from data_engineer_development_spark.streaming.windows import _CKPT_ROOT
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    run = uuid.uuid4().hex
-    base = os.path.join(tempfile.gettempdir(), f"scdc-{run}")
-    chg_dir = os.path.join(tempfile.gettempdir(), f"scdc-chg-{run}")
-    ckpt_base = (
-        "/dev/shm" if os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    ckpt = os.path.join(ckpt_base, f"scdc-ckpt-{run}")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        k = F.col("o_orderkey")
-        m = k % 4
-        append_snapshot(
-            spark, base, 1,
-            {"f0": orders.filter(m == 0), "f2": orders.filter(m == 2)},
-        )
-        changes = (
-            orders.filter((m == 0) & (k % 13 == 0))
-            .select(
-                k.alias("o_orderkey"),
-                (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
-                F.lit("U").alias("op"),
+    with tempfile.TemporaryDirectory(
+        prefix="scdc-", ignore_cleanup_errors=True
+    ) as d, tempfile.TemporaryDirectory(
+        prefix="scdc-ckpt-", dir=_CKPT_ROOT, ignore_cleanup_errors=True
+    ) as ckpt:
+        base = os.path.join(d, "table")
+        chg_dir = os.path.join(d, "changes")
+        try:
+            k = F.col("o_orderkey")
+            m = k % 4
+            append_snapshot(
+                spark, base, 1,
+                {"f0": orders.filter(m == 0), "f2": orders.filter(m == 2)},
             )
-            .unionByName(
-                orders.filter((m == 2) & (k % 17 == 0)).select(
+            changes = (
+                orders.filter((m == 0) & (k % 13 == 0))
+                .select(
                     k.alias("o_orderkey"),
-                    F.lit(None).cast("double").alias("o_totalprice"),
-                    F.lit("D").alias("op"),
+                    (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
+                    F.lit("U").alias("op"),
+                )
+                .unionByName(
+                    orders.filter((m == 2) & (k % 17 == 0)).select(
+                        k.alias("o_orderkey"),
+                        F.lit(None).cast("double").alias("o_totalprice"),
+                        F.lit("D").alias("op"),
+                    )
+                )
+                .unionByName(
+                    orders.filter(k % 2 == 1).select(
+                        "o_orderkey", "o_totalprice", F.lit("U").alias("op")
+                    )
                 )
             )
-            .unionByName(
-                orders.filter(k % 2 == 1).select(
-                    "o_orderkey", "o_totalprice", F.lit("U").alias("op")
+            changes.repartition(2).write.parquet(chg_dir)
+
+            # sequential foreachBatch + single availableNow run: a closure
+            # counter seeded from the committed head assigns versions with
+            # no per-batch manifest read (a restartable deployment would
+            # re-derive it from the log, which stays the source of truth)
+            head0 = (
+                snapshot_log(spark, base)
+                .agg(F.max("version").alias("v"))
+                .collect()[0]["v"]
+            )
+            next_version = [int(head0) + 1]
+
+            def apply_batch(batch_df, batch_id: int) -> None:
+                sess = batch_df.sparkSession
+                # ONE presence aggregate, not a limit-count per side: every
+                # per-batch job pays the full scheduling constant
+                pres = batch_df.agg(
+                    F.sum((F.col("op") != "D").cast("int")).alias("u"),
+                    F.sum((F.col("op") == "D").cast("int")).alias("d"),
+                ).collect()[0]
+                has_ups, has_dels = bool(pres["u"]), bool(pres["d"])
+                if not has_ups and not has_dels:
+                    return
+                ups = batch_df.filter(F.col("op") != "D").drop("op")
+                dels = batch_df.filter(F.col("op") == "D").select("o_orderkey")
+                res = merge_cdc(
+                    sess, base, next_version[0],
+                    ups if has_ups else None,
+                    dels if has_dels else None,
+                    "o_orderkey",
                 )
+                # bump ONLY on a committed action (ADVICE r16): merge_cdc
+                # returns the empty dict WITHOUT committing for a
+                # matches-nothing batch — burning the version there would
+                # leave gaps in a restartable deployment's history
+                if res["rewritten"] or res["inserted"] or res["dv"]:
+                    next_version[0] += 1
+
+            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            q = (
+                spark.readStream.schema(changes.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(chg_dir)
+                .writeStream.foreachBatch(apply_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        )
-        changes.repartition(2).write.parquet(chg_dir)
+            q.awaitTermination()
 
-        # sequential foreachBatch + single availableNow run: a closure
-        # counter seeded from the committed head assigns versions with
-        # no per-batch manifest read (a restartable deployment would
-        # re-derive it from the log, which stays the source of truth)
-        head0 = (
-            snapshot_log(spark, base)
-            .agg(F.max("version").alias("v"))
-            .collect()[0]["v"]
-        )
-        next_version = [int(head0) + 1]
-
-        def apply_batch(batch_df, batch_id: int) -> None:
-            sess = batch_df.sparkSession
-            # ONE presence aggregate, not a limit-count per side: every
-            # per-batch job pays the full scheduling constant
-            pres = batch_df.agg(
-                F.sum((F.col("op") != "D").cast("int")).alias("u"),
-                F.sum((F.col("op") == "D").cast("int")).alias("d"),
-            ).collect()[0]
-            has_ups, has_dels = bool(pres["u"]), bool(pres["d"])
-            if not has_ups and not has_dels:
-                return
-            ups = batch_df.filter(F.col("op") != "D").drop("op")
-            dels = batch_df.filter(F.col("op") == "D").select("o_orderkey")
-            res = merge_cdc(
-                sess, base, next_version[0],
-                ups if has_ups else None,
-                dels if has_dels else None,
-                "o_orderkey",
-            )
-            # bump ONLY on a committed action (ADVICE r16): merge_cdc
-            # returns the empty dict WITHOUT committing for a
-            # matches-nothing batch — burning the version there would
-            # leave gaps in a restartable deployment's history
-            if res["rewritten"] or res["inserted"] or res["dv"]:
-                next_version[0] += 1
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chg_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        def _summary(version: int, label: str) -> DataFrame:
-            return (
-                read_asof(spark, base, version, dv_key="o_orderkey")
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    dsum("o_totalprice", "revenue"),
+            def _summary(version: int, label: str) -> DataFrame:
+                return (
+                    read_asof(spark, base, version, dv_key="o_orderkey")
+                    .agg(
+                        F.count(F.lit(1)).alias("n_rows"),
+                        dsum("o_totalprice", "revenue"),
+                    )
+                    .select(F.lit(label).alias("state"), "n_rows", "revenue")
                 )
-                .select(F.lit(label).alias("state"), "n_rows", "revenue")
-            )
 
-        # each summary pays a read_asof manifest collect — independent
-        # bounded jobs, built from two driver threads (r18, guide §2.6)
-        s_base, s_head = overlap([
-            lambda: _summary(1, "base"), lambda: _summary(2**61, "head")
-        ])
-        out = s_base.unionByName(s_head)
-        # materialize BEFORE the landing dirs vanish
-        return out.orderBy("state").localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(chg_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            # each summary pays a read_asof manifest collect — independent
+            # bounded jobs, built from two driver threads (r18, guide §2.6)
+            s_base, s_head = overlap([
+                lambda: _summary(1, "base"), lambda: _summary(2**61, "head")
+            ])
+            out = s_base.unionByName(s_head)
+            return local_checkpoint_tracked(out.orderBy("state"))[0]
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 # base = the %4 in {0,2} slice; head = base with the stream applied
@@ -1698,10 +1642,6 @@ ORDER BY state
 # --------------------------------------------------------------------------
 def q_snapshot_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
     from data_engineer_development_spark.functions import dsum
     from data_engineer_development_spark.operators.snapshots import (
@@ -1713,8 +1653,9 @@ def q_snapshot_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(tempfile.gettempdir(), f"snapk-{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="snapk-", ignore_cleanup_errors=True
+    ) as base:
         m = F.col("o_orderkey") % 4
         for v in range(1, 5):
             append_snapshot(
@@ -1754,10 +1695,7 @@ def q_snapshot_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts_after = n_log_parts()
         after = summary(5, "d_after_commit", parts_after)
         out = pre.unionByName(post).unionByName(after)
-        # materialize BEFORE the landing dir vanishes
-        return out.orderBy("state").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return local_checkpoint_tracked(out.orderBy("state"))[0]
 
 
 # every read is a closed-form %4 slice; log-part counts 4 (one per

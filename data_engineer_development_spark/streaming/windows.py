@@ -23,6 +23,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: Parent dir for streaming checkpoints: RAM-backed when the host has it;
+#: None lets ``tempfile`` pick its temp dir at call time.
+_CKPT_ROOT = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+
 
 def _as_stream_dir(src: str, key: str) -> str:
     """The file-stream source requires a directory; expose a single-file
@@ -242,14 +246,9 @@ def start_to_memory_sink(
     thread (guide §2.6: independent jobs overlap; each stream's batches
     back-fill executor capacity the other's stragglers leave idle), each
     with its own frozen conf set."""
-    import uuid as _uuid
-
     spark = stream_df.sparkSession
-    ckpt_base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = (
-        os.path.join(ckpt_base, f"ckpt-{name}-{_uuid.uuid4().hex[:8]}")
-        if ckpt_base
-        else None
+    ckpt = tempfile.TemporaryDirectory(
+        prefix=f"ckpt-{name}-", dir=_CKPT_ROOT, ignore_cleanup_errors=True
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -265,15 +264,14 @@ def start_to_memory_sink(
     if not no_data_batches:
         spark.conf.set(ndb_key, "false")
     try:
-        writer = (
+        q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
+            .option("checkpointLocation", ckpt.name)
             .trigger(availableNow=True)
+            .start()
         )
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if state_store_provider:
@@ -298,8 +296,6 @@ def start_to_memory_sink(
 def finish_memory_sink(run: dict) -> None:
     """Await a :func:`start_to_memory_sink` run, apply its post-run checks,
     and clean up its checkpoint."""
-    import shutil
-
     q = run["query"]
     try:
         q.awaitTermination()
@@ -319,8 +315,7 @@ def finish_memory_sink(run: dict) -> None:
                     "unset maxFilesPerTrigger / use a single source file"
                 )
     finally:
-        if run["ckpt"]:
-            shutil.rmtree(run["ckpt"], ignore_errors=True)
+        run["ckpt"].cleanup()
 
 
 def latest_snapshots(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:

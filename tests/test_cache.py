@@ -8,6 +8,8 @@ their load-bearing persists; ``release_tracked()`` frees exactly those.
 
 from __future__ import annotations
 
+import os
+import tempfile
 import threading
 import time
 
@@ -35,7 +37,10 @@ def test_sweep_without_clearcache_leaves_no_cached_rdds(spark):
     (ntile_deciles, dictionary_encode), the posting-list dedups
     (dedup_jaccard, dedup_incremental), MinHash/LSH (dedup_minhash_lsh,
     lsh_candidate_recall), SimHash pairs, and the shingled contamination
-    frame."""
+    frame — plus one entry per checkpointing family (connected components,
+    pagerank, a shared gram stream, a recursive CTE's edge list, a dropped
+    database, a snapshot landing dir, an export round trip): every
+    checkpoint is tracked, so the release frees those too."""
     spark.catalog.clearCache()  # clean slate from earlier test modules
     cache.release_tracked()
     assert _n_cached(spark) == 0
@@ -46,12 +51,29 @@ def test_sweep_without_clearcache_leaves_no_cached_rdds(spark):
         "dedup_minhash_lsh",
         "dedup_simhash_pairs",
         "contamination_check",
+        "dedup_clusters",
+        "supplier_pagerank",
+        "phrase_search",
+        "recursive_reachability",
+        "bucketed_join_colocate",
+        "snapshot_evolution_read",
+        "export_orc_roundtrip",
     ]:
-        before = _n_cached(spark)
         _run(spark, name)
-        assert _n_cached(spark) >= before, name  # persist actually engaged
+        assert _n_cached(spark) > 0, name  # persist actually engaged
         cache.release_tracked()
     assert _n_cached(spark) == 0
+
+
+def test_scratch_entries_leave_tmpdir_empty(spark, tmp_path, monkeypatch):
+    """Entries that land scratch files (a KV log, manifest shards, evolving
+    parquet batches) remove them: pointed at an empty temp dir, the runs
+    leave it empty."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ["kv_store_roundtrip", "manifest_source", "schema_evolution_read"]:
+        _run(spark, name)
+    cache.release_tracked()
+    assert os.listdir(tmp_path) == []
 
 
 def test_release_tracked_reports_count_and_is_idempotent(spark):
@@ -190,3 +212,19 @@ def test_overlapped_checkpoints_each_track_only_their_own_blocks(spark):
     assert (out_a.count(), out_b.count()) == (1000, 2000)
     cache.release_tracked()
     assert _n_cached(spark) == 0 and not cache._TRACKED_RDDS
+
+
+def test_overlap_carries_callers_local_properties(spark):
+    """Jobs submitted from overlap's threads carry the caller's job group
+    and description, so they are attributed to the caller's query."""
+    sc = spark.sparkContext
+    sc.setJobGroup("g1", "overlap probe")
+    try:
+        got = cache.overlap(
+            [lambda: (sc.getLocalProperty("spark.jobGroup.id"),
+                      sc.getLocalProperty("spark.job.description"))] * 2
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert [g for g, _ in got] == ["g1", "g1"]
+    assert [d for _, d in got] == ["overlap probe"] * 2

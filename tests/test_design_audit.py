@@ -5,7 +5,10 @@ checkpoint bookkeeping in ``cache.py`` serializes on a lock there, which
 only holds if no other thread pool submits Spark jobs. And each vector
 kernel (quantizer, cell scorer) has ONE physical path; a ``via=`` switch
 between alternates kept only for tests must not grow back — an
-equivalence reference belongs in the test that pins it.
+equivalence reference belongs in the test that pins it. Scratch data has
+one lifetime rule: checkpoints go through ``cache.local_checkpoint_tracked``,
+query scratch dirs are ``tempfile.TemporaryDirectory``, and the choice of
+RAM-backed checkpoint storage is made in one module.
 """
 
 from __future__ import annotations
@@ -40,3 +43,30 @@ def test_no_function_takes_a_via_switch():
                 if "via" in names:
                     found.append(f"{py.relative_to(PKG)}:{node.lineno}")
     assert not found, f"alternate-path switches: {found}"
+
+
+def _modules_containing(pattern: str, root: Path = PKG) -> list[str]:
+    return sorted(
+        str(py.relative_to(PKG))
+        for py in root.rglob("*.py")
+        if pattern in py.read_text()
+    )
+
+
+def test_every_checkpoint_is_tracked():
+    assert _modules_containing(".localCheckpoint(") == ["cache.py"], (
+        "raw localCheckpoint outside cache.py — use local_checkpoint_tracked"
+    )
+
+
+def test_query_scratch_dirs_are_temporary_directories():
+    found = [
+        m
+        for pattern in ("gettempdir(", "mkdtemp(")
+        for m in _modules_containing(pattern, PKG / "queries")
+    ]
+    assert not found, f"hand-rolled scratch dirs: {found}"
+
+
+def test_ram_scratch_rule_lives_in_one_module():
+    assert _modules_containing("/dev/shm") == ["streaming/windows.py"]
