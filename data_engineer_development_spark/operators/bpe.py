@@ -157,69 +157,8 @@ def bpe_train(
             "(see docstring); raise the bound deliberately or batch "
             "merges at the call site"
         )
-    spark = docs.sparkSession
-    words = (
-        docs.select(
-            F.explode(
-                F.expr(
-                    f"regexp_extract_all(lower({text_col}), "
-                    f"{_sql_quote(token_re)}, 0)"
-                )
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    segs = track_persist(
-        words.select(
-            "w",
-            "f",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
-        )
-    )
-    persisted = segs
-    ckpt_handles: list = []
-
-    merges: list[tuple[int, str, str, int]] = []
-    for r in range(k_merges):
-        top = (
-            segs.select("f", F.explode(F.expr(_PAIRS_SQL)).alias("p"))
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("f").alias("c"))
-            .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()  # bounded: ONE row per round (argmax pair)
-        )
-        if not top:
-            # caller-facing contract (ADVICE r11): a real error, not an
-            # assert — under `python -O` the assert strips and the next
-            # line becomes an IndexError far from the cause
-            raise ValueError(f"bpe_train: corpus exhausted after {r} merges")
-        a, b, c = top[0]["a"], top[0]["b"], int(top[0]["c"])
-        merges.append((r + 1, a, b, c))
-        pa, pb = _sql_quote(a), _sql_quote(b)
-        segs = segs.withColumn("__ms", F.expr(_merged_mask_sql(pa, pb)))
-        segs = segs.select(
-            "w", "f", F.expr(_apply_merge_sql(pa, pb)).alias("syms")
-        )
-        if (r + 1) % BPE_PERSIST_EVERY == 0 and r + 1 < k_merges:
-            # eager + lineage-truncating: the NEXT round's plan starts
-            # from a LogicalRDD, not a (k-deep) projection chain — see
-            # the BPE_PERSIST_EVERY comment for the measured difference.
-            # Tracked (cache.py): the blocks are freed by release_tracked
-            # after the consumer drains; the superseded generation frees
-            # immediately so long trainings hold ONE vocab copy, not k/8.
-            segs, ckpt_handles = local_checkpoint_tracked(
-                segs, free=ckpt_handles
-            )
-            if persisted is not None:
-                persisted.unpersist()
-                persisted = None
-
-    merges_df = spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count long"
+    merges_df, segs = _merge_loop(
+        "bpe_train", docs, k_merges, 1, 1, text_col, token_re
     )
     return (merges_df, segs) if return_segments else merges_df
 
@@ -295,6 +234,29 @@ def bpe_train_batched(
             f"BPE_MAX_MERGES*batch_m={BPE_MAX_MERGES * batch_m} "
             "sequential-job-equivalents; raise batch_m"
         )
+    merges_df, segs = _merge_loop(
+        "bpe_train_batched", docs, k_merges, batch_m, candidate_factor,
+        text_col, token_re,
+    )
+    return (merges_df, segs) if return_segments else merges_df
+
+
+def _merge_loop(
+    name: str,
+    docs: DataFrame,
+    k_merges: int,
+    batch_m: int,
+    candidate_factor: int,
+    text_col: str,
+    token_re: str,
+):
+    """The merge rounds both trainers run: (merges_df, final segments).
+    Per round ONE bounded job collects the top ``want ·
+    candidate_factor`` pairs by (count DESC, lhs, rhs), where ``want =
+    min(batch_m, merges left)``; ``select_noninteracting`` accepts up to
+    ``want`` of them and every accepted merge applies as a projection.
+    ``batch_m = candidate_factor = 1`` is the exact sequential trainer:
+    a ``limit(1)`` argmax per round. ``name`` prefixes the errors."""
     spark = docs.sparkSession
     words = (
         docs.select(
@@ -327,14 +289,14 @@ def bpe_train_batched(
         # the job-count contract is on ROUNDS, not merges: a round only
         # guarantees >= 1 accepted pair, so a conflict-heavy corpus
         # (every top candidate sharing a hot symbol) degrades toward one
-        # merge per round — without this check the k_merges guard above
-        # (which assumes ~batch_m accepts/round) would let exactly the
+        # merge per round — without this check the caller's k_merges
+        # guard (which assumes ~batch_m accepts/round) would let exactly the
         # runaway it exists to prevent schedule BPE_MAX_MERGES*batch_m
         # sequential jobs (review r12)
         rounds += 1
         if rounds > BPE_MAX_MERGES:
             raise ValueError(
-                f"bpe_train_batched: round {rounds} exceeds BPE_MAX_MERGES="
+                f"{name}: round {rounds} exceeds BPE_MAX_MERGES="
                 f"{BPE_MAX_MERGES} with only {len(merges)}/{k_merges} "
                 "merges accepted — candidate conflicts are degrading the "
                 "batch toward sequential; raise candidate_factor/batch_m "
@@ -350,9 +312,11 @@ def bpe_train_batched(
             .collect()  # bounded: ≤ batch_m·candidate_factor rows/round
         )
         if not top:
+            # caller-facing contract (ADVICE r11): a real error, not an
+            # assert — under `python -O` the assert strips and the next
+            # line would fail far from the cause
             raise ValueError(
-                f"bpe_train_batched: corpus exhausted after {len(merges)} "
-                "merges"
+                f"{name}: corpus exhausted after {len(merges)} merges"
             )
         accepted = select_noninteracting(
             [(r["a"], r["b"], int(r["c"])) for r in top], want
@@ -366,6 +330,12 @@ def bpe_train_batched(
             )
         since_ckpt += len(accepted)
         if since_ckpt >= BPE_PERSIST_EVERY and len(merges) < k_merges:
+            # eager + lineage-truncating: the NEXT round's plan starts
+            # from a LogicalRDD, not a (k-deep) projection chain — see
+            # the BPE_PERSIST_EVERY comment for the measured difference.
+            # Tracked (cache.py): the blocks are freed by release_tracked
+            # after the consumer drains; the superseded generation frees
+            # immediately so long trainings hold ONE vocab copy, not k/8.
             segs, ckpt_handles = local_checkpoint_tracked(
                 segs, free=ckpt_handles
             )
@@ -377,7 +347,7 @@ def bpe_train_batched(
     merges_df = spark.createDataFrame(
         merges, "rank int, lhs string, rhs string, pair_count long"
     )
-    return (merges_df, segs) if return_segments else merges_df
+    return merges_df, segs
 
 
 def bpe_encode_stats(

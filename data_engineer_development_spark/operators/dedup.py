@@ -69,8 +69,6 @@ def jaccard_pairs(
     shingles_col: str,
     tau: float,
     max_doc_freq: int | None = None,
-    persist_posts: bool = True,
-    hash_join_keys: bool = True,
 ) -> DataFrame:
     """All pairs with shingle-set Jaccard ≥ tau.
 
@@ -80,22 +78,19 @@ def jaccard_pairs(
     plus one aggregate (the plan a warehouse engine would pick). The division
     is int/int in IEEE double so both engines agree exactly.
 
-    ``hash_join_keys=True`` replaces each shingle string with its 60-bit md5
-    int BEFORE the self-join: the shuffled join key drops from ~25 bytes of
-    text to 8 bytes, which at 100 TB is a ~3× cut in shuffle volume for the
+    Each shingle string is replaced with its 60-bit md5 int BEFORE the
+    self-join: the shuffled join key drops from ~25 bytes of text to 8
+    bytes, which at 100 TB is a ~3× cut in shuffle volume for the
     operator's dominant exchange. Distinct shingles stay distinct with
     probability ≈ 1 − k²/2⁶¹; the DuckDB oracle applies the IDENTICAL hash,
-    so the comparison is exact either way. Pass ``False`` to join on raw
-    strings (e.g. when postings feed a debugging view).
+    so the comparison is exact.
 
-    ``persist_posts=True`` caches the exploded postings so the two join sides
-    don't each re-run tokenize→shingle→explode; at cluster scale the same
-    role is played by materializing the posting table — recomputing the
-    tokenizer per consumer is the thing to avoid at 100 TB.
+    The exploded postings are cached so the two join sides don't each
+    re-run tokenize→shingle→explode; at cluster scale the same role is
+    played by materializing the posting table — recomputing the tokenizer
+    per consumer is the thing to avoid at 100 TB.
     """
-    sh_expr = shingles_col
-    if hash_join_keys:
-        sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
+    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
     if max_doc_freq is not None:
         # Pruned mode: set sizes must reflect the pruned sets, so recount.
         posts = shingle_sets(
@@ -109,8 +104,7 @@ def jaccard_pairs(
             F.explode(F.expr(sh_expr)).alias("s"),
             F.size(shingles_col).alias("n"),
         )
-    if persist_posts:
-        posts = track_persist(posts)
+    posts = track_persist(posts)
     a = posts.select(F.col(id_col).alias("id1"), "s", F.col("n").alias("n1"))
     b = posts.select(F.col(id_col).alias("id2"), "s", F.col("n").alias("n2"))
     inter = (
@@ -140,7 +134,6 @@ def jaccard_cross_pairs(
     id_col: str,
     shingles_col: str,
     tau: float,
-    hash_join_keys: bool = True,
 ) -> DataFrame:
     """Bipartite near-dup join: ``(id1 ∈ left, id2 ∈ right)`` pairs with
     shingle-set Jaccard ≥ tau ACROSS two corpora — the incremental-dedup
@@ -154,9 +147,7 @@ def jaccard_cross_pairs(
     not the corpus self-join. Same 60-bit md5 join-key compression and
     exact int/int→double Jaccard as the self-join variant.
     """
-    sh_expr = shingles_col
-    if hash_join_keys:
-        sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
+    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
 
     def posts(df: DataFrame, out_id: str, out_n: str) -> DataFrame:
         return df.select(
@@ -297,7 +288,6 @@ def containment_pairs(
     id_col: str,
     shingles_col: str,
     tau: float,
-    hash_join_keys: bool = True,
 ) -> DataFrame:
     """All pairs with max-directional shingle containment
     ``|A∩B| / min(|A|,|B|) ≥ tau``.
@@ -317,9 +307,7 @@ def containment_pairs(
     ``shingle_sets``'s max_doc_freq) — a shingle in every document would
     otherwise quadratically dominate the pair stream.
     """
-    sh_expr = shingles_col
-    if hash_join_keys:
-        sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
+    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
     posts = df.select(
         F.col(id_col),
         F.explode(F.expr(sh_expr)).alias("s"),

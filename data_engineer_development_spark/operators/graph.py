@@ -149,7 +149,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 3,
     scale: int = 1_000_000,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Integer-exact PageRank over a directed edge list (damping 0.85).
 
@@ -168,19 +167,11 @@ def pagerank(
     simplification.
 
     Scale shape — keyed on |nodes| ≪ |edges|, the usual link-graph shape:
-
-    * ``broadcast_ranks=False`` (default): co-partitioned shuffle join,
-      the connected_components layout — edges partitioned once on ``src``
-      and reused every round; each round shuffles only the |nodes|-sized
-      rank/contribution tables. MEASURED (local[32], sf0.1 trading graph,
-      16k nodes / 1.2M directed edges, idle A/B min-of-2):
-      3.7 s vs 9.1 s for broadcast mode — per-round broadcasts serialize
-      through the driver and barrier the rounds, losing even though the
-      edge list never shuffles. On a real cluster the driver round-trip
-      per iteration only gets worse; broadcast stays an explicit opt-in
-      for topologies where the edge side is hopelessly skewed on ``src``.
-    * ``broadcast_ranks=True``: per-round map-side join; edge list never
-      shuffled after materialization.
+    a co-partitioned shuffle join, the connected_components layout —
+    edges partitioned once on ``src`` and reused every round; each round
+    shuffles only the |nodes|-sized rank/contribution tables. MEASURED
+    (local[32], sf0.1 trading graph, 16k nodes / 1.2M directed edges,
+    idle A/B min-of-2): 3.7 s.
 
     Fixed ``iterations`` keeps total plan depth bounded (3 rounds ≈ depth
     the optimizer handles comfortably), so intermediate ranks are NOT
@@ -191,26 +182,14 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    if broadcast_ranks:
-        # per-node tables broadcast, so the edge list is NEVER shuffled:
-        # deg (≤ |nodes| rows after map-side partials) joins map-side, and
-        # the one materialization below is the only pass over the edges
-        e = e.persist()
-        deg = F.broadcast(
-            e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        )
-        ed, _ = local_checkpoint_tracked(e.join(deg, "src"))
-        e.unpersist()
-    else:
-        # co-partitioned layout for rank tables too big to broadcast:
-        # partition the edges once on ``src`` (the key every round's join
-        # probes) and reuse that layout across all rounds
-        e = e.repartition(F.col("src")).persist()
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # outdegree rides WITH the edge list so the per-round join is
-        # single: (src, dst, deg) ⋈ ranks on src
-        ed, _ = local_checkpoint_tracked(e.join(deg, "src"))
-        e.unpersist()
+    # partition the edges once on ``src`` (the key every round's join
+    # probes) and reuse that layout across all rounds
+    e = e.repartition(F.col("src")).persist()
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # outdegree rides WITH the edge list so the per-round join is
+    # single: (src, dst, deg) ⋈ ranks on src
+    ed, _ = local_checkpoint_tracked(e.join(deg, "src"))
+    e.unpersist()
 
     nodes, _ = local_checkpoint_tracked(
         ed.select(F.col("src").alias("id"))
@@ -220,9 +199,8 @@ def pagerank(
     teleport = scale * 15 // 100
     ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank"))
     for _ in range(iterations):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
         contrib = (
-            ed.join(r, ed.src == r.id)
+            ed.join(ranks, ed.src == ranks.id)
             .select(
                 "dst",
                 F.expr("(85 * rank) div (100 * deg)").alias("c"),

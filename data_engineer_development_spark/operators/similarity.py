@@ -382,6 +382,26 @@ def _quantize_rows(embs, np=np):
     return qv_out, qn_out
 
 
+def _qcos(A, aqn, B, bqn) -> "np.ndarray":
+    """Quantized cosine matrix: ``A @ B.T`` in float64 over ``sqrt`` of the
+    exact integer ``aqn·bqn'`` — the semantic-dedup family's one scoring
+    rule (pair truth set, cell scorer, cell kernels, streaming gate).
+
+    Exact, not approximate, on the int8 grid: every product is an
+    integer ≤ 127² and every partial sum an integer < 2⁵³, so no BLAS
+    accumulation order can round and the Gram equals int64 math. The
+    denominator is ONE sqrt over the exact integer product (≤
+    (dims·127²)² < 2⁵³), matching the oracle's ``sqrt(CAST(a.qn * b.qn
+    AS DOUBLE))`` bit-for-bit; the algebraically equal ``sqrt(qn_a) *
+    sqrt(qn_b)`` differs by 1 ulp for ~a third of integer pairs and can
+    flip membership for a cosine within an ulp of tau. (Rows saturated
+    by the quantizer's overflow corner score in float64 instead of
+    wrapping; no engine's oracle defines them.)"""
+    den = np.outer(np.asarray(aqn, np.int64), np.asarray(bqn, np.int64))
+    gram = np.asarray(A, np.float64) @ np.asarray(B, np.float64).T
+    return gram / np.sqrt(den.astype(np.float64))
+
+
 def _with_quantized(
     vectors: DataFrame, id_col: str, vec_col: str, *extra_cols: str
 ) -> DataFrame:
@@ -444,18 +464,10 @@ def quantized_neardup_pairs(
 
     Same block-nested-loop shape as ``neardup_pairs_cosine``: the whole
     quantized matrix (ids, qv, qn) broadcasts; each task scores its row
-    block against it in ONE float64 matmul and emits only the surviving
-    id pairs — the O(N²) pair set never materializes as rows. The float64
-    path is EXACT here, not approximate: every product is an integer
-    ≤ 127² and every partial sum an integer < 2⁵³, so BLAS accumulation
-    order cannot round — the numbers equal int64 math (and therefore the
-    DuckDB oracle) bit-for-bit, at BLAS speed. The denominator is
-    ``sqrt(qn_a * qn_b)`` — ONE sqrt over the exact integer product
-    (≤ (dims·127²)² < 2⁵³), matching the oracle's
-    ``sqrt(CAST(a.qn * b.qn AS DOUBLE))`` bit-for-bit; the algebraically
-    equal ``sqrt(qn_a) * sqrt(qn_b)`` differs by 1 ulp for ~a third of
-    integer pairs and can flip membership for a cosine within an ulp
-    of tau.
+    block against it in ONE ``_qcos`` float64 matmul (exact on the int8
+    grid — equal to the DuckDB oracle bit-for-bit, at BLAS speed) and
+    emits only the surviving id pairs — the O(N²) pair set never
+    materializes as rows.
 
     O(N²·d) BY DEFINITION (it is the exactness baseline); the broadcast
     ceiling guards the driver the same way the brute cosine path does.
@@ -496,10 +508,7 @@ def quantized_neardup_pairs(
             a_ids = pdf[id_col].to_numpy().astype(np.int64)
             a_mat = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
             a_qn = pdf["qn"].to_numpy().astype(np.int64)
-            # sqrt of the exact INTEGER product (< 2⁵³), not a product of
-            # sqrts — the oracle's sqrt(CAST(a.qn*b.qn AS DOUBLE)) exactly
-            den = np.sqrt((a_qn[:, None] * b_qn[None, :]).astype(np.float64))
-            cos = (a_mat @ b_mat.T) / den
+            cos = _qcos(a_mat, a_qn, b_mat, b_qn)
             keep = (a_ids[:, None] < b_ids[None, :]) & (cos >= tau)
             i, j = np.nonzero(keep)
             yield pd.DataFrame({"id1": a_ids[i], "id2": b_ids[j]})
@@ -513,26 +522,34 @@ def quantized_neardup_pairs(
 
 
 def _assign_cells(
-    df: DataFrame, cents: list[tuple[int, list[int], int]], dims: int
+    df: DataFrame, codebooks: dict, shard_col: str | None = None
 ) -> DataFrame:
     """Add the ``cell`` column: argmax_c cosine(qv, c) with (s DESC,
     cent_id ASC) tie-break, over a ``_with_quantized`` frame.
 
+    ``codebooks`` maps a shard key to that shard's codebook (cent_id, qv,
+    qn); each row is scored against the codebook of its ``shard_col``
+    value. The one-shot pass has no shard column and a single codebook
+    under the key ``None``.
+
     A ``mapInPandas`` projection (zero shuffle, Arrow-batched) whose plan
-    is independent of the codebook's size and values: the codebook rides
-    to executors as a closure capture (K·dims int64 ≈ 0.5 MB per 1k
+    is independent of the codebooks' size and values: they ride to
+    executors as a closure capture (K·dims float64 ≈ 0.5 MB per 1k
     centroids at 64 dims), so each Lloyd round's new centroids cost no
-    fresh codegen compile. Each batch scores via one exact int64 matmul;
-    the cast to double is exact, sqrt/divide are IEEE on the exact
-    integer ``qn·cqn``, and ties go to the lowest cent_id (cents sorted
-    ascending; ``np.argmax`` returns the first maximum) — pinned against
-    a pure-Python argmax by
+    fresh codegen compile. Each chunk scores via one ``_qcos`` matmul,
+    and ties go to the lowest cent_id (cents sorted ascending;
+    ``np.argmax`` returns the first maximum) — pinned against a
+    pure-Python argmax by
     tests/test_semdedup.py::test_numpy_assignment_equals_reference.
     """
-    cents = sorted(cents, key=lambda c: c[0])
-    cent_ids = np.array([c[0] for c in cents], dtype=np.int64)
-    C = np.vstack([np.array(c[1], dtype=np.int64) for c in cents])
-    cqn = np.array([c[2] for c in cents], dtype=np.int64)
+    cb = {}
+    for key, cents in codebooks.items():
+        cents = sorted(cents, key=lambda c: c[0])
+        cb[key] = (
+            np.array([c[0] for c in cents], dtype=np.int64),
+            np.array([c[1] for c in cents], dtype=np.float64),
+            np.array([c[2] for c in cents], dtype=np.int64),
+        )
     in_cols = df.columns
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -541,23 +558,28 @@ def _assign_cells(
     # bound the m×K score matrix per matmul (~32 MB of float64) so huge
     # codebooks don't blow task memory — chunking rows keeps the matmul
     # fully vectorized over K, which is the expensive axis
-    rows_per_chunk = max(1, 4_000_000 // max(1, len(cent_ids)))
+    k_max = max(len(c[0]) for c in cb.values())
+    rows_per_chunk = max(1, 4_000_000 // k_max)
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             pdf = pdf[in_cols].reset_index(drop=True)
+            qv = pdf["qv"].to_numpy()
+            qn = pdf["qn"].to_numpy(dtype=np.int64)
             cells = np.empty(len(pdf), dtype=np.int64)
-            for lo in range(0, len(pdf), rows_per_chunk):
-                chunk = pdf.iloc[lo : lo + rows_per_chunk]
-                M = np.vstack(chunk["qv"].to_numpy()).astype(np.int64)
-                qn = chunk["qn"].to_numpy(dtype=np.int64)
-                s = (M @ C.T).astype(np.float64) / np.sqrt(
-                    np.outer(qn, cqn).astype(np.float64)
-                )
-                cells[lo : lo + len(chunk)] = cent_ids[np.argmax(s, axis=1)]
-            pdf = pdf.copy()
+            groups = (
+                pdf.groupby(shard_col).indices.items()
+                if shard_col
+                else [(None, np.arange(len(pdf)))]
+            )
+            for key, idx in groups:
+                cent_ids, C, cqn = cb[key]
+                for lo in range(0, len(idx), rows_per_chunk):
+                    rows = idx[lo : lo + rows_per_chunk]
+                    s = _qcos(np.vstack(qv[rows]), qn[rows], C, cqn)
+                    cells[rows] = cent_ids[np.argmax(s, axis=1)]
             pdf["cell"] = cells
             yield pdf
 
@@ -596,14 +618,16 @@ def _seed_codebook(
 
 def _lloyd_rounds(
     usable: DataFrame,
-    cents: list[tuple[int, list[int], int]],
+    codebooks: dict,
     dims: int,
     train_iters: int,
-) -> list[tuple[int, list[int], int]]:
-    """``train_iters`` Lloyd rounds on the quantized grid: assign by the
-    current codebook (projection, no shuffle), per-cell
-    elementwise BIGINT sums (ONE K-group shuffle), new centroid = the
-    ROUNDED INTEGER mean ``floor(sum/n + 0.5)`` per dimension —
+    shard_col: str | None = None,
+) -> dict:
+    """``train_iters`` Lloyd rounds on the quantized grid, per codebook
+    (keyed as in ``_assign_cells``): assign by the current codebooks
+    (projection, no shuffle), per-(shard, cell) elementwise BIGINT sums
+    (ONE grouped shuffle, ≤ n_shards·K rows collected), new centroid =
+    the ROUNDED INTEGER mean ``floor(sum/n + 0.5)`` per dimension —
     computed as the EXACT integer floor division ``(2·s + n) fld (2·n)``
     (mathematically identical: (2s+n)/(2n) = s/n + 1/2 in the rationals,
     and Python's ``//`` floors), so the trained codebook is
@@ -614,11 +638,14 @@ def _lloyd_rounds(
     are arbitrary precision; the Spark-side BIGINT sum itself is the
     only overflow surface and |s| ≤ 127·n keeps it exact to n < 7×10¹⁶.
     A cell that empties, or whose mean rounds to the zero vector, keeps
-    its previous centroid."""
+    its previous centroid — shard by shard, so training a shard of
+    ``semdedup_sharded`` equals training ``semdedup`` on that shard
+    alone."""
+    keys = [shard_col] if shard_col else []
     for _ in range(train_iters):
         sums = (
-            _assign_cells(usable, cents, dims)
-            .groupBy("cell")
+            _assign_cells(usable, codebooks, shard_col)
+            .groupBy(*keys, "cell")
             .agg(
                 F.count(F.lit(1)).alias("__n"),
                 *[
@@ -626,7 +653,7 @@ def _lloyd_rounds(
                     for d in range(dims)
                 ],
             )
-            .collect()  # bounded: ≤ k_cells rows — one row per cell
+            .collect()  # bounded: ≤ n_shards·k_cells rows — one per cell
         )
         updated = {}
         for r in sums:
@@ -634,23 +661,59 @@ def _lloyd_rounds(
             nqv = [(2 * int(r[f"__s{d}"]) + n) // (2 * n) for d in range(dims)]
             nqn = sum(x * x for x in nqv)
             if nqn > 0:
-                updated[int(r["cell"])] = (nqv, nqn)
-        cents = [
-            (cid, *updated[cid]) if cid in updated else (cid, cqv, cqn)
-            for cid, cqv, cqn in cents
-        ]
-    return cents
+                key = r[shard_col] if shard_col else None
+                updated[(key, int(r["cell"]))] = (nqv, nqn)
+        codebooks = {
+            key: [
+                (cid, *updated.get((key, cid), (cqv, cqn)))
+                for cid, cqv, cqn in cents
+            ]
+            for key, cents in codebooks.items()
+        }
+    return codebooks
+
+
+def _dedup_cell(id_col: str, tau: float, keys: dict[str, str]):
+    """The per-cell greedy kernel for ``groupBy(...).applyInPandas``: a
+    vector's ``dup_of`` is the LOWEST id in its group that covers it at
+    quantized cosine ≥ tau (``_qcos`` Gram, exact), ``keep`` = 1 iff
+    none does. Output: the id, then each group key column — ``keys``
+    maps output name → input column — then ``dup_of`` and ``keep``."""
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        M = np.vstack(pdf["qv"].to_numpy())
+        qn = pdf["qn"].to_numpy(dtype=np.int64)
+        # row i covers column j, i < j
+        covered = np.triu(_qcos(M, qn, M, qn) >= tau, k=1)
+        has_dup = covered.any(axis=0)
+        first = covered.argmax(axis=0)  # ids sorted asc → argmax = min id
+        dup_of = pd.array(
+            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
+            dtype="Int64",
+        )
+        return pd.DataFrame(
+            {
+                id_col: ids,
+                **{out: pdf[col].to_numpy() for out, col in keys.items()},
+                "dup_of": dup_of,
+                "keep": (~has_dup).astype(np.int32),
+            }
+        )
+
+    return kernel
 
 
 #: Auto-K policy constants (VERDICT r10 #4 — MEASURED, see BASELINE.md
 #: round-11 K-sweep table). target_cell sizes the per-cell numpy kernel:
-#: an m-row cell costs an m×m int64 Gram + float64 cosine matrix
+#: an m-row cell costs an m×m float64 Gram + cosine matrix
 #: (~16 bytes/pair), so avg cell 1024 → ~16 MB per cell task at the
 #: measured ~1.1× fixture skew, comfortably inside an executor core's
 #: budget with ~4× headroom for skewier corpora. k_max bounds the
 #: CODEBOOK: the numpy assignment scorer's plan cost is independent of
 #: K, so the binding constraints are the codebook's closure-capture
-#: size (K·dims int64 ≈ 34 MB per task at the clamp, 64 dims) and the
+#: size (K·dims float64 ≈ 34 MB per task at the clamp, 64 dims) and the
 #: K-row Lloyd aggregate. Past the clamp (N > 64 M rows/pass at
 #: target 1024) shard the corpus on a coarse key (language/domain/
 #: bucket) and semdedup each shard — the warning says so loudly.
@@ -724,10 +787,11 @@ def semdedup(
        scorer uses.
     3. **Per-cell pairs only, never as Spark rows**: one shuffle groups
        vectors by ``cell``; each cell's pair matrix is scored INSIDE numpy
-       (``applyInPandas`` — int64 matmul, exact) and only the per-vector
-       verdict comes back. A vector's ``dup_of`` is the LOWEST id that
-       covers it at quantized cosine ≥ tau (drop-if-any-earlier-neighbor —
-       the same greedy representative rule as ``dedup_cleaned_corpus``).
+       (``applyInPandas`` — one ``_qcos`` Gram, exact) and only the
+       per-vector verdict comes back. A vector's ``dup_of`` is the LOWEST
+       id that covers it at quantized cosine ≥ tau
+       (drop-if-any-earlier-neighbor — the same greedy representative rule
+       as ``dedup_cleaned_corpus``).
        This mirrors ``neardup_pairs_cosine``'s design rule: the O(Σ|cell|²)
        pair set never materializes as rows and never crosses the Arrow
        boundary. (A first cut as a cell self-equi-join + per-pair JVM
@@ -759,9 +823,9 @@ def semdedup(
     identically in the oracle — instead of leaking NaN/NULL orderings.
 
     Exactness across engines: the numpy path computes the same numbers as
-    the SQL oracle because every dot is int64 (exact), the cast to double
-    is exact (|dot| ≤ dims·127² < 2⁵³), and sqrt/divide are
-    correctly-rounded IEEE ops on identical inputs.
+    the SQL oracle because every dot is an integer the float64 matmul
+    holds exactly (|dot| ≤ dims·127² < 2⁵³ — see ``_qcos``), and
+    sqrt/divide are correctly-rounded IEEE ops on identical inputs.
     """
     q = _with_quantized(vectors, id_col, vec_col)
     if k_cells is None:
@@ -785,39 +849,14 @@ def semdedup(
         # scoped release, not a global clearCache)
         usable = track_persist(usable)
 
-    cents = _lloyd_rounds(usable, cents, dims, train_iters)
-    assigned = _assign_cells(usable, cents, dims).select(
-        id_col, "qv", "qn", "cell"
-    )
-
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        qn = pdf["qn"].to_numpy(dtype=np.int64)
-        # exact int64 Gram matrix; cast + sqrt + divide identical to the
-        # JVM/DuckDB expression on the same integers
-        cos = (M @ M.T).astype(np.float64) / np.sqrt(
-            np.outer(qn, qn).astype(np.float64)
+    codebooks = _lloyd_rounds(usable, {None: cents}, dims, train_iters)
+    return (
+        _assign_cells(usable, codebooks)
+        .groupBy("cell")
+        .applyInPandas(
+            _dedup_cell(id_col, tau, {"cell": "cell"}),
+            f"{id_col} long, cell long, dup_of long, keep int",
         )
-        covered = np.triu(cos >= tau, k=1)  # row i covers column j, i < j
-        has_dup = covered.any(axis=0)
-        first = covered.argmax(axis=0)  # ids sorted asc → argmax = min id
-        dup_of = pd.array(
-            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
-            dtype="Int64",
-        )
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "cell": pdf["cell"].to_numpy(dtype=np.int64),
-                "dup_of": dup_of,
-                "keep": (~has_dup).astype(np.int32),
-            }
-        )
-
-    return assigned.groupBy("cell").applyInPandas(
-        dedup_cell, f"{id_col} long, cell long, dup_of long, keep int"
     )
 
 
@@ -909,7 +948,7 @@ def semdedup_incremental(
     ).select(id_col, "qv", "qn")
     if train_iters > 0:
         usable_b = track_persist(usable_b)
-    cents = _lloyd_rounds(usable_b, cents, dims, train_iters)
+    codebooks = _lloyd_rounds(usable_b, {None: cents}, dims, train_iters)
 
     qn_ = _with_quantized(new, id_col, vec_col)
     usable_n = qn_.filter(
@@ -920,8 +959,7 @@ def semdedup_incremental(
         usable_b.withColumn("is_new", F.lit(0)).unionByName(
             usable_n.withColumn("is_new", F.lit(1))
         ),
-        cents,
-        dims,
+        codebooks,
     ).select(id_col, "qv", "qn", "cell", "is_new")
 
     def dedup_cell_incr(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -937,7 +975,7 @@ def semdedup_incremental(
         if not len(nd):
             return empty
         ids_n = nd[id_col].to_numpy(dtype=np.int64)
-        N = np.vstack(nd["qv"].to_numpy()).astype(np.int64)
+        N = np.vstack(nd["qv"].to_numpy())
         nqn = nd["qn"].to_numpy(dtype=np.int64)
         dup = np.full(len(ids_n), -1, dtype=np.int64)
 
@@ -954,21 +992,15 @@ def semdedup_incremental(
                     "semdedup_incremental: base/new ids must be disjoint; "
                     f"overlapping ids (first 10): {overlap[:10].tolist()}"
                 )
-            B = np.vstack(bd["qv"].to_numpy()).astype(np.int64)
+            B = np.vstack(bd["qv"].to_numpy())
             bqn = bd["qn"].to_numpy(dtype=np.int64)
             # |base|·|new| scores — the only base work in the whole pass
-            cos_bn = (B @ N.T).astype(np.float64) / np.sqrt(
-                np.outer(bqn, nqn).astype(np.float64)
-            )
-            cov_b = cos_bn >= tau
+            cov_b = _qcos(B, bqn, N, nqn) >= tau
             for j in range(len(ids_n)):
                 if cov_b[:, j].any():
                     dup[j] = int(ids_b[cov_b[:, j]].min())
 
-        cos_nn = (N @ N.T).astype(np.float64) / np.sqrt(
-            np.outer(nqn, nqn).astype(np.float64)
-        )
-        cov_n = np.triu(cos_nn >= tau, k=1)
+        cov_n = np.triu(_qcos(N, nqn, N, nqn) >= tau, k=1)
         for j in range(len(ids_n)):
             # base cover wins (virtual ordering: base < new); else the
             # LOWEST-id covering new vector (ids sorted asc → argmax)
@@ -996,100 +1028,6 @@ def semdedup_incremental(
 SHARDED_SEED_MAX_ROWS = 100_000
 
 
-def _assign_cells_sharded(
-    df: DataFrame, cents_by_shard: dict, shard_col: str
-) -> DataFrame:
-    """Per-shard cell assignment: the numpy scorer of ``_assign_cells``
-    with one codebook PER SHARD (rows grouped by the shard key inside
-    each Arrow batch, each group scored against its own codebook — same
-    exact int64/IEEE math and (s DESC, cent_id ASC) tie-break,
-    bit-identical to a per-shard ``_assign_cells``). Zero corpus
-    shuffle."""
-    cb = {
-        s: (
-            np.array([c[0] for c in cents], dtype=np.int64),
-            np.vstack([np.array(c[1], dtype=np.int64) for c in cents]),
-            np.array([c[2] for c in cents], dtype=np.int64),
-        )
-        for s, cents in cents_by_shard.items()
-    }
-    in_cols = df.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", cell long"
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf[in_cols].reset_index(drop=True)
-            cells = np.empty(len(pdf), dtype=np.int64)
-            for s, idx in pdf.groupby(shard_col).groups.items():
-                cent_ids, C, cqn = cb[s]
-                sub = pdf.loc[idx]
-                M = np.vstack(sub["qv"].to_numpy()).astype(np.int64)
-                qn = sub["qn"].to_numpy(dtype=np.int64)
-                sc = (M @ C.T).astype(np.float64) / np.sqrt(
-                    np.outer(qn, cqn).astype(np.float64)
-                )
-                cells[np.asarray(idx, dtype=np.int64)] = cent_ids[
-                    np.argmax(sc, axis=1)
-                ]
-            pdf = pdf.copy()
-            pdf["cell"] = cells
-            yield pdf
-
-    return df.mapInPandas(assign, out_schema)
-
-
-def _lloyd_rounds_sharded(
-    usable: DataFrame,
-    cents_by_shard: dict,
-    dims: int,
-    train_iters: int,
-    shard_col: str,
-    id_col: str,
-) -> dict:
-    """Per-shard Lloyd rounds — the one-shot ``_lloyd_rounds`` with the
-    shard key added to the aggregate: assign by the current per-shard
-    codebooks (projection), per-(shard, cell) elementwise BIGINT sums
-    (ONE grouped shuffle, ≤ n_shards·K rows collected), new centroid =
-    the exact integer floor division ``(2·s + n) fld (2·n)`` per
-    dimension. A cell that empties or rounds to zero keeps its previous
-    centroid — shard by shard, exactly the one-shot rule, so training a
-    shard here equals training ``semdedup`` on that shard alone."""
-    for _ in range(train_iters):
-        sums = (
-            _assign_cells_sharded(usable, cents_by_shard, shard_col)
-            .groupBy(shard_col, "cell")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[
-                    F.sum(F.element_at("qv", d + 1)).alias(f"__s{d}")
-                    for d in range(dims)
-                ],
-            )
-            .collect()  # bounded: ≤ n_shards·k_cells rows
-        )
-        updated: dict = {}
-        for r in sums:
-            n = int(r["__n"])
-            nqv = [(2 * int(r[f"__s{d}"]) + n) // (2 * n) for d in range(dims)]
-            nqn = sum(x * x for x in nqv)
-            if nqn > 0:
-                updated[(r[shard_col], int(r["cell"]))] = (nqv, nqn)
-        cents_by_shard = {
-            s: [
-                (cid, *updated[(s, cid)])
-                if (s, cid) in updated
-                else (cid, cqv, cqn)
-                for cid, cqv, cqn in cents
-            ]
-            for s, cents in cents_by_shard.items()
-        }
-    return cents_by_shard
-
-
 def semdedup_sharded(
     vectors: DataFrame,
     shard_col: str = "label",
@@ -1110,13 +1048,12 @@ def semdedup_sharded(
     bounding EVERYTHING per shard — each shard gets its own K-lowest-id
     codebook (seeded via one windowed rank, collected bounded at
     n_shards·k_cells rows and guarded by ``SHARDED_SEED_MAX_ROWS``), the
-    assignment is one broadcast-numpy ``mapInPandas`` projection scoring
-    each row against ITS shard's codebook (zero corpus shuffle, same
-    exact int64/IEEE math as ``_assign_cells`` — bit-identical to a
-    per-shard ``_assign_cells``), and the pair kernel groups by
-    (shard, cell) so the Σ|cell|² work is per-shard. A duplicate pair
-    SPLIT ACROSS SHARDS is deliberately not detected — that is the
-    shard contract, identical to running ``semdedup`` per language.
+    assignment is ``semdedup``'s ``_assign_cells`` projection scoring
+    each row against ITS shard's codebook (zero corpus shuffle), and
+    ``semdedup``'s cell kernel groups by (shard, cell) so the Σ|cell|²
+    work is per-shard. A duplicate pair SPLIT ACROSS SHARDS is
+    deliberately not detected — that is the shard contract, identical
+    to running ``semdedup`` per language.
     Ids must be unique within a shard; the guard enforces this for the
     SEED ZONE only (rank ≤ k_cells per shard — driver-side on rows the
     seed collect already holds, zero extra jobs). A duplicate id
@@ -1127,13 +1064,13 @@ def semdedup_sharded(
 
     NULL shard keys are excluded with the same loudness as unusable
     vectors (documented, mirrored in the oracle's inner join + IS NOT
-    NULL). ``train_iters`` runs per-shard Lloyd rounds
-    (``_lloyd_rounds_sharded`` — the one-shot trainer with the shard key
-    in the aggregate, exact integer means); training a shard here equals
-    training ``semdedup`` on that shard alone, pinned by the composition
-    test. The staged registry entry keeps train_iters=0 (its oracle pins
-    the id-seeded codebook); the dedup verdict rule, quantization grid,
-    and tie-breaks are byte-identical to ``semdedup``'s either way.
+    NULL). ``train_iters`` runs per-shard Lloyd rounds (``semdedup``'s
+    trainer with the shard key in the aggregate, exact integer means);
+    training a shard here equals training ``semdedup`` on that shard
+    alone, pinned by the composition test. The staged registry entry
+    keeps train_iters=0 (its oracle pins the id-seeded codebook); the
+    dedup verdict rule, quantization grid, and tie-breaks are
+    byte-identical to ``semdedup``'s either way.
     """
     q = _with_quantized(
         vectors.filter(F.col(shard_col).isNotNull()), id_col, vec_col,
@@ -1226,38 +1163,16 @@ def semdedup_sharded(
 
     if train_iters > 0:
         usable = track_persist(usable)
-        cents_by_shard = _lloyd_rounds_sharded(
-            usable, cents_by_shard, dims, train_iters, shard_col, id_col
-        )
-    assigned = _assign_cells_sharded(usable, cents_by_shard, shard_col)
+    cents_by_shard = _lloyd_rounds(
+        usable, cents_by_shard, dims, train_iters, shard_col
+    )
     shard_t = usable.schema[shard_col].dataType.simpleString()
-
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        qn = pdf["qn"].to_numpy(dtype=np.int64)
-        cos = (M @ M.T).astype(np.float64) / np.sqrt(
-            np.outer(qn, qn).astype(np.float64)
+    return (
+        _assign_cells(usable, cents_by_shard, shard_col)
+        .groupBy(shard_col, "cell")
+        .applyInPandas(
+            _dedup_cell(id_col, tau, {"shard": shard_col, "cell": "cell"}),
+            f"{id_col} long, shard {shard_t}, cell long, dup_of long, "
+            "keep int",
         )
-        covered = np.triu(cos >= tau, k=1)
-        has_dup = covered.any(axis=0)
-        first = covered.argmax(axis=0)
-        dup_of = pd.array(
-            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
-            dtype="Int64",
-        )
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "shard": pdf[shard_col].to_numpy(),
-                "cell": pdf["cell"].to_numpy(dtype=np.int64),
-                "dup_of": dup_of,
-                "keep": (~has_dup).astype(np.int32),
-            }
-        )
-
-    return assigned.groupBy(shard_col, "cell").applyInPandas(
-        dedup_cell,
-        f"{id_col} long, shard {shard_t}, cell long, dup_of long, keep int",
     )

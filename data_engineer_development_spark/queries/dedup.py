@@ -85,10 +85,10 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def duck_jaccard_pairs_cte() -> str:
     """DuckDB CTE chain ending in ``vp(id1, id2, jaccard)`` — the verified
     near-dup pairs. Shared with the clustering oracle
-    (queries/corpus_ops.py). Mirrors the operator's hashed join keys
-    (jaccard_pairs hash_join_keys=True): postings carry the 60-bit md5 int
-    of each shingle, so candidate generation AND the narrow-key join are
-    both inside the cross-engine check."""
+    (queries/corpus_ops.py). Mirrors jaccard_pairs' hashed join keys:
+    postings carry the 60-bit md5 int of each shingle, so candidate
+    generation AND the narrow-key join are both inside the cross-engine
+    check."""
     return f"""{_DUCK_SHINGLES},
 p AS (SELECT doc_id, unnest(list_transform(sh, x -> {duck_md5_int('x')})) AS sg,
              len(sh) AS n FROM s),

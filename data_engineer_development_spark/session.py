@@ -16,8 +16,13 @@ Scale stance (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: the directory holding this package: Python workers import it from
+#: there, whatever the caller's working directory or PYTHONPATH
+_PKG_PARENT = str(Path(__file__).resolve().parent.parent)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -47,6 +52,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # JIT code cache: the default 240 MB fills after a few hundred
         # codegen-heavy query runs in one JVM (a 155-query bench sweep

@@ -396,6 +396,8 @@ def make_neardup_gate_update(
     """
     import numpy as np
 
+    from data_engineer_development_spark.operators.similarity import _qcos
+
     if ttl_ms is not None and event_ttl_ms is not None:
         raise ValueError("ttl_ms and event_ttl_ms are mutually exclusive dials")
 
@@ -444,19 +446,12 @@ def make_neardup_gate_update(
             dup = np.full(len(ids), -1, dtype=np.int64)
             if len(seen_ids):
                 sqn = (seen * seen).sum(axis=1)
-                # sqrt of the exact INTEGER product — the family's
-                # oracle-exact denominator (see quantized_neardup_pairs)
-                cos_s = (B @ seen.T).astype(np.float64) / np.sqrt(
-                    np.outer(bqn, sqn).astype(np.float64)
-                )
-                cov_s = cos_s >= tau
+                cov_s = _qcos(B, bqn, seen, sqn) >= tau
                 for j in range(len(ids)):
                     if cov_s[j].any():
                         dup[j] = int(seen_ids[cov_s[j]].min())
-            gram = (B @ B.T).astype(np.float64) / np.sqrt(
-                np.outer(bqn, bqn).astype(np.float64)
-            )
-            cov_b = np.triu(gram >= tau, k=1)  # row i covers column j, i < j
+            # row i covers column j, i < j
+            cov_b = np.triu(_qcos(B, bqn, B, bqn) >= tau, k=1)
             for j in range(len(ids)):
                 if cov_b[:, j].any():
                     # ids sorted asc → argmax (first True) = lowest id

@@ -27,27 +27,26 @@ _PAT = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.toLocalIterator\(\)")
 _ALLOWED = {
     "kv.py": (2, "eager KV facade — the reference's Datastore surface is "
                  "likewise eager (datastore.py:14); single-key/small scans"),
-    "operators/bpe.py": (2, "BPE argmax round-trips — ONE row per merge "
-                            "round (sequential trainer) and ≤ batch_m·"
-                            "candidate_factor rows per round (batched "
-                            "trainer), the same bounded control-plane "
-                            "shape as Lloyd's centroid collect"),
+    "operators/bpe.py": (1, "BPE argmax round-trip of the one merge "
+                            "loop — ≤ batch_m·candidate_factor rows per "
+                            "round (ONE row for the sequential trainer), "
+                            "the same bounded control-plane shape as "
+                            "Lloyd's centroid collect"),
     "catalog.py": (1, "SHOW TBLPROPERTIES — metadata rows, never data"),
-    "operators/similarity.py": (8, "documented bounded brute-force path "
+    "operators/similarity.py": (7, "documented bounded brute-force path "
                                    "behind the LSH auto-switch cap; semdedup "
                                    "codebook seed collect (≤ k_cells rows, "
                                    "captured by the numpy assignment "
                                    "scorer); Lloyd per-round centroid "
-                                   "sums collect (≤ k_cells rows — one per "
-                                   "cell, the distributed-k-means driver "
+                                   "sums collect (≤ n_shards·k_cells rows "
+                                   "— one per (shard, cell), the "
+                                   "distributed-k-means driver "
                                    "round-trip); quantized truth-set matrix "
                                    "collect (ceiling-guarded exactness "
                                    "baseline); sharded dims probe (limit-1), "
                                    "per-shard seed collect (≤ n_shards·"
                                    "k_cells rows, SHARDED_SEED_MAX_ROWS "
-                                   "guarded), the sharded Lloyd "
-                                   "per-round sums collect (≤ n_shards·"
-                                   "k_cells rows — one per (shard, cell)), "
+                                   "guarded), "
                                    "and semdedup_incremental's OPT-IN "
                                    "strict-mode overlap probe (limit-10 "
                                    "semi-join, off the default hot path)"),

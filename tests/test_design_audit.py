@@ -8,7 +8,8 @@ between alternates kept only for tests must not grow back — an
 equivalence reference belongs in the test that pins it. Scratch data has
 one lifetime rule: checkpoints go through ``cache.local_checkpoint_tracked``,
 query scratch dirs are ``tempfile.TemporaryDirectory``, and the choice of
-RAM-backed checkpoint storage is made in one module.
+RAM-backed checkpoint storage is made in one module. The quantized cosine
+of the semantic-dedup family is one function, ``similarity._qcos``.
 """
 
 from __future__ import annotations
@@ -70,3 +71,19 @@ def test_query_scratch_dirs_are_temporary_directories():
 
 def test_ram_scratch_rule_lives_in_one_module():
     assert _modules_containing("/dev/shm") == ["streaming/windows.py"]
+
+
+def test_quantized_cosine_has_one_formula():
+    """The semantic-dedup family scores through ONE function: the integer
+    denominator ``outer(qn, qn')`` is written once, inside ``_qcos``."""
+    import inspect
+
+    from data_engineer_development_spark.operators.similarity import _qcos
+
+    found = {
+        str(py.relative_to(PKG)): n
+        for py in sorted(PKG.rglob("*.py"))
+        if (n := py.read_text().count("np.outer("))
+    }
+    assert found == {"operators/similarity.py": 1}, found
+    assert "np.outer(" in inspect.getsource(_qcos)

@@ -69,25 +69,19 @@ def _pr_reference(edges, iterations=3, scale=1_000_000):
     return rank
 
 
-def _pr(spark, edges, **kw):
+def _pr(spark, edges):
     from data_engineer_development_spark.operators.graph import pagerank
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {r["id"]: r["rank"] for r in pagerank(df, **kw).collect()}
+    return {r["id"]: r["rank"] for r in pagerank(df).collect()}
 
 
 def test_pagerank_matches_reference_recurrence(spark):
-    edges = [
-        (1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (2, 4),
-    ]
-    assert _pr(spark, edges) == _pr_reference(edges)
-
-
-def test_pagerank_broadcast_and_shuffle_modes_agree(spark):
-    edges = [(i, (i * 3) % 7 + 1) for i in range(1, 8)] + [(7, 1), (2, 5)]
-    a = _pr(spark, edges, broadcast_ranks=False)
-    b = _pr(spark, edges, broadcast_ranks=True)
-    assert a == b == _pr_reference(edges)
+    for edges in (
+        [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (2, 4)],
+        [(i, (i * 3) % 7 + 1) for i in range(1, 8)] + [(7, 1), (2, 5)],
+    ):
+        assert _pr(spark, edges) == _pr_reference(edges)
 
 
 def test_pagerank_dangling_node_keeps_teleport_only(spark):

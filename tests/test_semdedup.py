@@ -555,11 +555,13 @@ def _argmax_cells(rows, cents):
 
 def test_numpy_assignment_equals_reference(spark):
     """The numpy cell scorer must be BIT-IDENTICAL to a pure-Python
-    argmax: exact int64 dots, exact cast to double, IEEE sqrt/divide,
-    and the same (s DESC, cent_id ASC) tie-break (cents ascending +
-    np.argmax first-max). Checked on the fixture with a raw seed, a
-    Lloyd-trained codebook, and an exact-tie codebook (two identical
-    centroids under different ids, the lower id listed last)."""
+    argmax: exact integer dots, IEEE sqrt/divide, and the same (s DESC,
+    cent_id ASC) tie-break (cents ascending + np.argmax first-max).
+    Checked on the fixture with a raw seed, a Lloyd-trained codebook,
+    and an exact-tie codebook (two identical centroids under different
+    ids, the lower id listed last) — and with a shard column: two
+    shards, each row scored against its own shard's codebook, one shard
+    holding the exact tie."""
     from data_engineer_development_spark.operators.similarity import (
         _assign_cells,
         _lloyd_rounds,
@@ -580,18 +582,35 @@ def test_numpy_assignment_equals_reference(spark):
         (hi - 1, *cents[0][1:])
     ]
 
-    for cb in (cents, _lloyd_rounds(usable, cents, dims, 2), tie):
+    trained = _lloyd_rounds(usable, {None: cents}, dims, 2)[None]
+    for cb in (cents, trained, tie):
         npy = {
             r["vec_id"]: r["cell"]
-            for r in _assign_cells(usable, cb, dims).collect()
+            for r in _assign_cells(usable, {None: cb}).collect()
         }
         assert npy == _argmax_cells(rows, cb)
     tie_cells = set(_argmax_cells(rows, tie).values())
     assert hi - 1 in tie_cells and hi + cents[0][0] not in tie_cells
 
+    # two shards by id parity: shard 0 scores against the raw seed,
+    # shard 1 against the exact-tie codebook
+    by_shard = {0: cents, 1: tie}
+    sharded = usable.withColumn("shard", (F.col("vec_id") % 2).cast("int"))
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in _assign_cells(sharded, by_shard, "shard").collect()
+    }
+    for s, cb in by_shard.items():
+        shard_rows = [r for r in rows if r[0] % 2 == s]
+        assert shard_rows
+        assert {v: got[v] for v, _, _ in shard_rows} == _argmax_cells(
+            shard_rows, cb
+        )
+    assert hi - 1 in {got[v] for v in got if v % 2 == 1}
+
     # a projection: no exchange between scan and scorer
     plan = (
-        _assign_cells(usable, cents, dims)
+        _assign_cells(usable, {None: cents})
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
