@@ -9,8 +9,16 @@ Layout under ``base_dir``:
   file; file_ids are IMMUTABLE and never re-added after a remove
   (Delta's add/remove-file semantics — a compaction writes NEW file_ids
   and removes the old ones, it never mutates bytes in place).
-- ``_log/part-*.parquet`` — append-only rows
-  ``(version BIGINT, action 'add'|'remove', file_id STRING)``.
+- ``dv/<file_id>@<version>/part-*.parquet`` — a deletion vector: the
+  keys (one ``_dv_key`` column) deleted from ``file_id`` at ``version``.
+- ``_log/part-*.parquet`` — append-only rows ``(version BIGINT, action
+  'add'|'remove'|'dv', file_id STRING, schema STRING)``; one part file
+  per commit. ``schema`` is the added file's committed Spark schema,
+  '' for the other actions.
+- ``_stats/part-*.parquet`` — per-file ``(min, max)`` bounds of the
+  merge key, written when a commit names a ``stats_key``.
+- ``_log_ckpt/v<N>/`` — a manifest checkpoint: the whole log at version
+  N in one file, counted only once its ``_SUCCESS`` marker exists.
 
 Scale contract: the log is METADATA-scale (one row per file action, the
 same listing granularity as ``compaction_plan``), so ``read_asof``
@@ -30,7 +38,10 @@ surface (VERDICT r13 #8 explicitly queues snapshot/time-travel reads).
 from __future__ import annotations
 
 import os
+import shutil
+from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +55,39 @@ _LOG_SCHEMA = "version long, action string, file_id string, schema string"
 
 #: the single column every deletion-vector file carries
 _DV_COL = "_dv_key"
+
+
+def _data_dir(base_dir: str, fid: str) -> str:
+    return os.path.join(base_dir, "data", fid)
+
+
+def _dv_dir(base_dir: str, fid: str, version: int) -> str:
+    return os.path.join(base_dir, "dv", f"{fid}@{version}")
+
+
+def _fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the Hadoop FileSystem API
+    resolved from the path itself, so every scheme the cluster can read
+    (file://, s3a://, hdfs://) works — an ``os`` call would be
+    local-only (ADVICE r15)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _read_or_none(
+    spark: SparkSession, schema: str, path: str
+) -> DataFrame | None:
+    """``path`` read as parquet with ``schema``, or None if it was never
+    written. Catches the READER's PATH_NOT_FOUND rather than pre-checking
+    with ``os.path`` (ADVICE r15): an ``isdir`` probe is always False for
+    non-local URIs, which would make an EXISTING remote table silently
+    masquerade as empty."""
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e):
+            return None
+        raise
 
 
 def _log_rows_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -79,17 +123,6 @@ def _stats_rows_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     return jvm_rows_df(spark, _STATS_SCHEMA, rows)
 
 
-def key_bounds(df: DataFrame, key_col: str) -> tuple:
-    """(min, max) of ``key_col`` — one aggregate over ``df``. The
-    caller-side helper for :func:`append_snapshot`'s ``stats`` when the
-    bounds aren't already known (a writer that just range-partitioned
-    knows them for free; a generic writer pays this one pass)."""
-    r = df.agg(
-        F.min(key_col).alias("mn"), F.max(key_col).alias("mx")
-    ).collect()[0]
-    return (r["mn"], r["mx"])
-
-
 def append_snapshot(
     spark: SparkSession,
     base_dir: str,
@@ -99,8 +132,6 @@ def append_snapshot(
     dvs: dict[str, DataFrame] | None = None,
     dv_key: str | None = None,
     stats_key: str | None = None,
-    stats: dict[str, tuple] | None = None,
-    auto_stats: bool = False,
 ) -> None:
     """Write one snapshot version: materialize each added DataFrame as a
     new immutable file directory, then append the version's add/remove
@@ -109,37 +140,30 @@ def append_snapshot(
     before their log rows exist).
 
     ``dvs`` maps surviving file_ids to key frames deleted from them at
-    this version (``dv_key`` names the key column) — logged in the SAME
-    batch as the adds/removes, so a multi-action version (the CDC MERGE
-    shape: rewrite + delete + insert) is atomic at the manifest; the
-    single-action :func:`append_deletion_vector` remains for standalone
-    deletes.
+    this version (``dv_key`` names the key column) — row-level deletes
+    WITHOUT rewriting the data file (the Delta/Iceberg deletion-vector
+    idea): the keys land as their own immutable ``dv/<file_id>@<version>``
+    dir, key-count-sized, so deleting 0.1% of a TB-scale file costs MBs,
+    not a rewrite. Readers at or past ``version`` anti-join the file's
+    accumulated vectors; readers before it still see every row. Logged
+    in the SAME batch as the adds/removes, so a multi-action version
+    (the CDC MERGE shape: rewrite + delete + insert) is atomic at the
+    manifest.
 
-    ``stats`` maps added file_ids to ``(min, max)`` bounds of
-    ``stats_key`` in that file (int or str values, typed into the
-    ``_stats`` sidecar manifest) — the Delta data-skipping move:
-    :func:`merge_cdc` prunes its routing read to files whose recorded
-    range can contain a change key, so a batch touching 1 of N files
-    READS 1 of N files. Bounds are caller-declared (often known for
-    free at write time; else :func:`key_bounds` is one pass) and
-    trusted — a lying bound mis-prunes, same as a corrupt parquet
-    footer would. Stats land in the same commit (sidecar written
-    before the log rows, so a crash leaves stats debris, never a
-    committed version without its declared stats)."""
+    ``stats_key`` records each added file's ``(min, max)`` bounds of
+    that column in the ``_stats`` sidecar manifest — the Delta
+    data-skipping move: :func:`merge_cdc` prunes its routing read to
+    files whose recorded range can contain a change key, so a batch
+    touching 1 of N files READS 1 of N files. Bounds are measured from
+    the files just written; int and str keys get bounds, other key
+    types (and empty files) none. Stats land in the same commit
+    (sidecar written before the log rows, so a crash leaves stats
+    debris, never a committed version without its stats)."""
     adds = adds or {}
     removes = removes or []
     dvs = dvs or {}
-    stats = stats or {}
     if dvs and dv_key is None:
         raise ValueError("append_snapshot: dvs given without dv_key")
-    if (stats or auto_stats) and stats_key is None:
-        raise ValueError("append_snapshot: stats given without stats_key")
-    unknown_stats = set(stats) - set(adds)
-    if unknown_stats:
-        raise ValueError(
-            "append_snapshot: stats for file(s) not added this version "
-            f"{sorted(unknown_stats)}"
-        )
     dv_removed = set(dvs) & set(removes)
     if dv_removed:
         raise ValueError(
@@ -153,9 +177,7 @@ def append_snapshot(
     # are unchanged (file_ids are immutable — a re-used id is a caller
     # bug that must fail loudly, not silently append)
     def _write_add(fid: str, df: DataFrame):
-        return lambda: df.write.mode("error").parquet(
-            os.path.join(base_dir, "data", fid)
-        )
+        return lambda: df.write.mode("error").parquet(_data_dir(base_dir, fid))
 
     overlap([_write_add(fid, df) for fid, df in adds.items()])
 
@@ -169,7 +191,7 @@ def append_snapshot(
     def _measure(fid: str):
         return lambda: (
             fid,
-            spark.read.parquet(os.path.join(base_dir, "data", fid))
+            spark.read.parquet(_data_dir(base_dir, fid))
             .agg(
                 F.min(stats_key).alias("mn"),
                 F.max(stats_key).alias("mx"),
@@ -180,47 +202,24 @@ def append_snapshot(
     def _write_dv(fid: str, keys: DataFrame):
         return lambda: keys.select(F.col(dv_key).alias(_DV_COL)).write.mode(
             "error"
-        ).parquet(os.path.join(base_dir, "dv", f"{fid}@{version}"))
+        ).parquet(_dv_dir(base_dir, fid, version))
 
-    unmeasured = sorted(set(adds) - set(stats)) if auto_stats else []
+    measured = sorted(adds) if stats_key is not None else []
     round2 = overlap(
-        [_measure(fid) for fid in unmeasured]
+        [_measure(fid) for fid in measured]
         + [_write_dv(fid, keys) for fid, keys in dvs.items()]
     )
-    for fid, r in round2[: len(unmeasured)]:
-        if (
-            r["mn"] is not None
-            and isinstance(r["mn"], (int, str))
-            and not isinstance(r["mn"], bool)
-        ):
-            # unsupported key types (date, decimal, …) simply carry
-            # no skipping stats — auto mode never fails a commit
-            stats[fid] = (r["mn"], r["mx"])
-    if stats:
-        srows = []
-        for fid in sorted(stats):
-            mn, mx = stats[fid]
-            if isinstance(mn, bool) or isinstance(mx, bool) or not (
-                type(mn) is type(mx)
-            ):
-                raise ValueError(
-                    f"append_snapshot: stats for {fid!r} must be a "
-                    f"same-typed (min, max) pair, got ({mn!r}, {mx!r})"
-                )
-            if isinstance(mn, int):
-                srows.append(
-                    (int(version), fid, stats_key, mn, mx, None, None)
-                )
-            elif isinstance(mn, str):
-                srows.append(
-                    (int(version), fid, stats_key, None, None, mn, mx)
-                )
-            else:
-                raise ValueError(
-                    "append_snapshot: stats bounds must be int or str "
-                    f"(got {type(mn).__name__} for {fid!r}) — other key "
-                    "types carry no skipping stats"
-                )
+    srows = []
+    for fid, r in round2[: len(measured)]:
+        mn, mx = r["mn"], r["mx"]
+        if isinstance(mn, bool) or not isinstance(mn, (int, str)):
+            continue  # no skipping stats — never fails a commit
+        srows.append(
+            (int(version), fid, stats_key, mn, mx, None, None)
+            if isinstance(mn, int)
+            else (int(version), fid, stats_key, None, None, mn, mx)
+        )
+    if srows:
         _stats_rows_df(spark, srows).coalesce(1).write.mode(
             "append"
         ).parquet(os.path.join(base_dir, "_stats"))
@@ -245,14 +244,8 @@ def snapshot_log(spark: SparkSession, base_dir: str) -> DataFrame:
     AnalysisException (ADVICE r14): zero committed actions is a valid
     table state, and every downstream surface degrades sensibly from
     it (live_files → [], orphan_files → all on-disk dirs, read_asof →
-    its named no-live-files ValueError).
-
-    The never-committed probe catches the READER's PATH_NOT_FOUND
-    rather than pre-checking with ``os.path`` (ADVICE r15): an
-    ``isdir`` probe is always False for non-local URIs (``s3a://``,
-    ``hdfs://``), which would make an EXISTING remote table silently
-    masquerade as empty — the reader's own resolution is
-    filesystem-correct for every scheme.
+    its named no-live-files ValueError). The never-committed probe is
+    :func:`_read_or_none`'s, filesystem-correct for every scheme.
 
     With a manifest checkpoint present (:func:`checkpoint_log`), the
     log = latest checkpoint ∪ the surviving ``_log`` tail,
@@ -260,25 +253,14 @@ def snapshot_log(spark: SparkSession, base_dir: str) -> DataFrame:
     so a crash between checkpoint-write and tail-compaction (which
     briefly leaves rows in both places) double-reads harmlessly
     instead of double-counting."""
-
-    def _read(path: str) -> DataFrame | None:
-        try:
-            return spark.read.schema(_LOG_SCHEMA).parquet(path)
-        except Exception as e:  # noqa: BLE001 — PATH_NOT_FOUND filter
-            from pyspark.errors import AnalysisException
-
-            if isinstance(e, AnalysisException) and (
-                "PATH_NOT_FOUND" in str(e)
-            ):
-                return None
-            raise
-
-    tail = _read(os.path.join(base_dir, "_log"))
+    tail = _read_or_none(spark, _LOG_SCHEMA, os.path.join(base_dir, "_log"))
     ckpt = None
     ckpt_version = _latest_checkpoint_version(spark, base_dir)
     if ckpt_version is not None:
-        ckpt = _read(
-            os.path.join(base_dir, "_log_ckpt", f"v{ckpt_version}")
+        ckpt = _read_or_none(
+            spark,
+            _LOG_SCHEMA,
+            os.path.join(base_dir, "_log_ckpt", f"v{ckpt_version}"),
         )
     if ckpt is None and tail is None:
         return _log_rows_df(spark, [])
@@ -304,10 +286,7 @@ def _latest_checkpoint_version(
     simply skipped — the prior checkpoint ∪ the still-uncompacted tail
     remains a complete log (tail compaction only ever runs AFTER the
     covering checkpoint committed)."""
-    conf = spark._jsc.hadoopConfiguration()
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(os.path.join(base_dir, "_log_ckpt"))
-    fs = p.getFileSystem(conf)
+    fs, p = _fs(spark, os.path.join(base_dir, "_log_ckpt"))
     if not fs.exists(p):
         return None
     best = None
@@ -315,7 +294,7 @@ def _latest_checkpoint_version(
         name = st.getPath().getName()
         if name.startswith("v") and name[1:].isdigit():
             if not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
+                spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
             ):
                 continue  # uncommitted (crashed mid-write) — skip
             v = int(name[1:])
@@ -345,11 +324,9 @@ def checkpoint_log(spark: SparkSession, base_dir: str) -> int:
     are unchanged (the checkpoint carries every action row, so time
     travel to ANY version still works). Returns the checkpoint
     version."""
-    from pyspark.sql import functions as _F
-
     tail_dir = os.path.join(base_dir, "_log")
     log = snapshot_log(spark, base_dir)
-    rows = log.agg(_F.max("version").alias("v")).collect()
+    rows = log.agg(F.max("version").alias("v")).collect()
     head = rows[0]["v"]
     if head is None:
         raise ValueError("checkpoint_log: nothing committed — no log")
@@ -363,11 +340,8 @@ def checkpoint_log(spark: SparkSession, base_dir: str) -> int:
         return head
     ckpt_dir = os.path.join(base_dir, "_log_ckpt", f"v{head}")
     log.coalesce(1).write.mode("overwrite").parquet(ckpt_dir)
-    conf0 = spark._jsc.hadoopConfiguration()
-    ckpt_path = spark._jvm.org.apache.hadoop.fs.Path(ckpt_dir)
-    if not ckpt_path.getFileSystem(conf0).exists(
-        spark._jvm.org.apache.hadoop.fs.Path(ckpt_path, "_SUCCESS")
-    ):
+    fs, marker = _fs(spark, os.path.join(ckpt_dir, "_SUCCESS"))
+    if not fs.exists(marker):
         # the committer's _SUCCESS marker IS the commit protocol here —
         # an environment that disables it (marksuccessfuljobs=false)
         # would make every checkpoint read as uncommitted; fail loudly
@@ -380,45 +354,96 @@ def checkpoint_log(spark: SparkSession, base_dir: str) -> int:
     # compact the covered tail: a _log part file is deletable iff every
     # row in it has version <= head (per-file max from the rows
     # themselves — no guessing from names)
-    conf = spark._jsc.hadoopConfiguration()
-    jvm = spark._jvm
-    tail_path = jvm.org.apache.hadoop.fs.Path(tail_dir)
-    fs = tail_path.getFileSystem(conf)
+    fs, tail_path = _fs(spark, tail_dir)
     if fs.exists(tail_path):
         per_file = (
             spark.read.schema(_LOG_SCHEMA)
             .parquet(tail_dir)
-            .groupBy(_F.input_file_name().alias("_f"))
-            .agg(_F.max("version").alias("_mx"))
+            .groupBy(F.input_file_name().alias("_f"))
+            .agg(F.max("version").alias("_mx"))
             .collect()  # bounded: one row per log part file (manifest scale)
         )
         for r in per_file:
             if int(r["_mx"]) <= head:
                 # input_file_name returns a full URI; Hadoop Path
                 # accepts it as-is for any scheme
-                fs.delete(jvm.org.apache.hadoop.fs.Path(r["_f"]), False)
+                fs.delete(spark._jvm.org.apache.hadoop.fs.Path(r["_f"]), False)
     return head
 
 
-def _actions(spark: SparkSession, base_dir: str, version: int) -> list:
-    """Log rows at or before ``version`` — the module's ONLY driver
-    materialization: one row per file ACTION ever taken, the manifest
-    scale (tests/test_collect_audit.py)."""
-    return (
+class _Manifest(NamedTuple):
+    """The action log decoded at one version.
+
+    ``adds`` maps file_id → committed schema, '' meaning unknown: logs
+    written before the schema column existed read NULL for it (parquet
+    schema merge NULL-fills), normalized here so unknown schemas can
+    never prove divergence yet can't crash a sort either (ADVICE r15).
+    ``removes`` maps file_id → remove version; ``dvs`` maps file_id →
+    its deletion-vector dirs."""
+
+    adds: dict[str, str]
+    removes: dict[str, int]
+    dvs: dict[str, list[str]]
+
+    @property
+    def live(self) -> list[str]:
+        """Added and not removed (ids are never re-added, so set
+        difference is the full semantics)."""
+        return sorted(set(self.adds) - set(self.removes))
+
+    def schemas(self, fids) -> list[str]:
+        """The distinct KNOWN committed schemas of ``fids``."""
+        return sorted({self.adds[f] for f in fids if self.adds.get(f)})
+
+
+def _manifest(spark: SparkSession, base_dir: str, version: int) -> _Manifest:
+    """Log rows at or before ``version``, decoded — the module's ONLY
+    manifest materialization: one row per file ACTION ever taken, the
+    manifest scale (tests/test_collect_audit.py)."""
+    m = _Manifest({}, {}, {})
+    for r in (
         snapshot_log(spark, base_dir)
         .filter(f"version <= {int(version)}")
         .collect()  # bounded: metadata-scale manifest (one row per file action)
+    ):
+        fid = r["file_id"]
+        if r["action"] == "add":
+            m.adds[fid] = r["schema"] or ""
+        elif r["action"] == "remove":
+            m.removes[fid] = r["version"]
+        elif r["action"] == "dv":
+            m.dvs.setdefault(fid, []).append(
+                _dv_dir(base_dir, fid, r["version"])
+            )
+    return m
+
+
+def _read_file(
+    spark: SparkSession,
+    base_dir: str,
+    fid: str,
+    manifest: _Manifest,
+    dv_key: str | None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """One data file read THROUGH its deletion vectors in ``manifest``:
+    the file dir anti-joined with exactly its own accumulated vectors
+    (FILE-SCOPED, the Delta/Iceberg semantics — a vector never masks a
+    sibling file's rows). Callers require ``dv_key`` once any vector
+    applies."""
+    df = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(
+        _data_dir(base_dir, fid)
     )
+    if fid not in manifest.dvs:
+        return df
+    gone = spark.read.parquet(*sorted(manifest.dvs[fid])).distinct()
+    return df.join(gone, df[dv_key] == gone[_DV_COL], "left_anti")
 
 
 def live_files(spark: SparkSession, base_dir: str, version: int) -> list[str]:
     """File ids live at ``version``: added at or before it and not
-    removed at or before it (ids are never re-added, so set difference
-    is the full semantics)."""
-    acts = _actions(spark, base_dir, version)
-    added = {r["file_id"] for r in acts if r["action"] == "add"}
-    removed = {r["file_id"] for r in acts if r["action"] == "remove"}
-    return sorted(added - removed)
+    removed at or before it."""
+    return _manifest(spark, base_dir, version).live
 
 
 def expire_versions(
@@ -438,30 +463,12 @@ def expire_versions(
     pinned by test; reads below the floor become invalid, which is the
     meaning of retention. The log keeps its rows: history METADATA
     stays auditable after the bytes are gone."""
-    import shutil
-
-    acts = _actions(spark, base_dir, 2**62)
-    dead = sorted(
-        {
-            r["file_id"]
-            for r in acts
-            if r["action"] == "remove" and r["version"] <= floor_version
-        }
-    )
+    m = _manifest(spark, base_dir, 2**62)
+    dead = sorted(f for f, v in m.removes.items() if v <= floor_version)
     if delete:
-        dead_set = set(dead)  # hoisted: one set, not one per action row
         for fid in dead:
-            shutil.rmtree(
-                os.path.join(base_dir, "data", fid), ignore_errors=True
-            )
-        for r in acts:
-            if r["action"] == "dv" and r["file_id"] in dead_set:
-                shutil.rmtree(
-                    os.path.join(
-                        base_dir, "dv", f"{r['file_id']}@{r['version']}"
-                    ),
-                    ignore_errors=True,
-                )
+            for path in [_data_dir(base_dir, fid), *m.dvs.get(fid, [])]:
+                shutil.rmtree(path, ignore_errors=True)
     return dead
 
 
@@ -475,36 +482,12 @@ def orphan_files(spark: SparkSession, base_dir: str) -> list[str]:
     this reports files the log never knew. Reporting only: physical
     deletion stays a caller decision (a concurrent writer may be
     mid-commit, which is exactly what an orphan mid-write looks like)."""
-    acts = _actions(spark, base_dir, 2**62)
-    added = {r["file_id"] for r in acts if r["action"] == "add"}
+    added = _manifest(spark, base_dir, 2**62).adds
     data_dir = os.path.join(base_dir, "data")
     on_disk = (
         set(os.listdir(data_dir)) if os.path.isdir(data_dir) else set()
     )
-    return sorted(on_disk - added)
-
-
-def append_deletion_vector(
-    spark: SparkSession,
-    base_dir: str,
-    version: int,
-    file_id: str,
-    keys: DataFrame,
-    key_col: str,
-) -> None:
-    """Row-level delete WITHOUT rewriting the data file (the Delta/
-    Iceberg deletion-vector idea): persist the deleted keys as their own
-    immutable file ``dv/<file_id>@<version>`` and log a ``dv`` action.
-    Readers at or past ``version`` anti-join the file's accumulated
-    vectors; readers BEFORE it still see every row — deletes are as
-    time-travelable as adds. The vector is key-count-sized, so deleting
-    0.1% of a TB-scale file costs MBs, not a file rewrite."""
-    keys.select(F.col(key_col).alias(_DV_COL)).write.mode("error").parquet(
-        os.path.join(base_dir, "dv", f"{file_id}@{version}")
-    )
-    _log_rows_df(spark, [(version, "dv", file_id, "")]).coalesce(
-        1
-    ).write.mode("append").parquet(os.path.join(base_dir, "_log"))
+    return sorted(on_disk - set(added))
 
 
 def read_asof(
@@ -542,63 +525,40 @@ def read_asof(
     — and divergence raises a named error instead of Spark's silent
     single-file schema inference, which would NULL-fill or drop the
     evolved column depending on which file won inference."""
-    acts = _actions(spark, base_dir, version)
-    added = {r["file_id"] for r in acts if r["action"] == "add"}
-    removed = {r["file_id"] for r in acts if r["action"] == "remove"}
-    live = added - removed  # hoisted: one set, not one per manifest row
-    files = sorted(live)
+    m = _manifest(spark, base_dir, version)
+    files = m.live
     if not files:
         raise ValueError(
             f"read_asof: no live files at or before version {version} — "
             "nothing was ever committed there"
         )
     if not merge_schema:
-        # Logs written before the schema column existed read NULL for
-        # it (parquet schema merge NULL-fills) — normalize those to the
-        # explicit "unknown" sentinel '' and EXCLUDE them from the
-        # divergence comparison (ADVICE r15: a {None, str} set crashed
-        # sorted(), and an all-None set silently disabled the check
-        # while looking enabled). Unknown-schema files can't prove
-        # divergence manifest-only; divergence among KNOWN schemas
-        # still fails loudly.
-        live_schemas = {
-            r["schema"] or ""
-            for r in acts
-            if r["action"] == "add" and r["file_id"] in live
-        }
-        known = sorted(s for s in live_schemas if s)
+        # unknown-schema files can't prove divergence manifest-only;
+        # divergence among KNOWN schemas still fails loudly
+        known = m.schemas(files)
         if len(known) > 1:
             raise ValueError(
                 "read_asof: live files carry divergent committed schemas "
                 f"({known}) — pass merge_schema=True to read the union "
                 "schema with NULLs for pre-evolution files"
             )
-    dv_by_file: dict[str, list[str]] = {}
-    for r in acts:
-        if r["action"] == "dv" and r["file_id"] in live:
-            dv_by_file.setdefault(r["file_id"], []).append(
-                os.path.join(base_dir, "dv", f"{r['file_id']}@{r['version']}")
-            )
-    if dv_by_file and dv_key is None:
+    with_dv = [f for f in files if f in m.dvs]
+    if with_dv and dv_key is None:
         raise ValueError(
             "read_asof: deletion vectors apply at this version — pass "
             "dv_key so deleted rows are filtered, not resurrected"
         )
-    plain = [f for f in files if f not in dv_by_file]
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
+    plain = [f for f in files if f not in m.dvs]
     parts: list[DataFrame] = []
     if plain:
         parts.append(
-            reader.parquet(
-                *[os.path.join(base_dir, "data", f) for f in plain]
-            )
+            spark.read.option("mergeSchema", str(merge_schema).lower())
+            .parquet(*[_data_dir(base_dir, f) for f in plain])
         )
-    for fid in sorted(dv_by_file):
-        df_f = reader.parquet(os.path.join(base_dir, "data", fid))
-        keys = spark.read.parquet(*sorted(dv_by_file[fid])).distinct()
-        parts.append(
-            df_f.join(keys, df_f[dv_key] == keys[_DV_COL], "left_anti")
-        )
+    parts += [
+        _read_file(spark, base_dir, fid, m, dv_key, merge_schema)
+        for fid in with_dv
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=merge_schema)
@@ -615,14 +575,9 @@ def live_file_sizes(
     every scheme the cluster can read (file://, s3a://, hdfs://) stats
     correctly — an ``os.stat`` walk would be local-only (the ADVICE r15
     snapshot_log lesson applied at design time)."""
-    conf = spark._jsc.hadoopConfiguration()
-    jvm = spark._jvm
     out = []
     for fid in live_files(spark, base_dir, version):
-        p = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(base_dir, "data", fid)
-        )
-        fs = p.getFileSystem(conf)
+        fs, p = _fs(spark, _data_dir(base_dir, fid))
         out.append((fid, int(fs.getContentSummary(p).getLength())))
     return out
 
@@ -694,58 +649,34 @@ def apply_compaction(
             f"apply_compaction: singleton group(s) {singles} — rewriting "
             "one file is a no-op that burns a version"
         )
-    acts = _actions(spark, base_dir, version - 1)
-    added = {r["file_id"] for r in acts if r["action"] == "add"}
-    removed = {r["file_id"] for r in acts if r["action"] == "remove"}
-    live = added - removed
-    dead = sorted(set(flat) - live)
+    m = _manifest(spark, base_dir, version - 1)
+    dead = sorted(set(flat) - set(m.live))
     if dead:
         raise ValueError(
             f"apply_compaction: {dead} not live at version {version - 1}"
         )
-    flat_set = set(flat)
     for g in groups:
-        schemas = sorted(
-            {
-                r["schema"] or ""
-                for r in acts
-                if r["action"] == "add" and r["file_id"] in set(g)
-            }
-            - {""}
-        )
+        schemas = m.schemas(g)
         if len(schemas) > 1:
             raise ValueError(
                 f"apply_compaction: group {g} mixes committed schemas "
                 f"({schemas}) — don't compact across an evolution "
                 "boundary; group files by schema instead"
             )
-    dv_paths: dict[str, list[str]] = {}
-    for r in acts:
-        if r["action"] == "dv" and r["file_id"] in flat_set:
-            dv_paths.setdefault(r["file_id"], []).append(
-                os.path.join(base_dir, "dv", f"{r['file_id']}@{r['version']}")
-            )
-    if dv_paths and dv_key is None:
+    with_dv = sorted(f for f in flat if f in m.dvs)
+    if with_dv and dv_key is None:
         raise ValueError(
-            f"apply_compaction: member(s) {sorted(dv_paths)} carry "
+            f"apply_compaction: member(s) {with_dv} carry "
             "deletion vectors — pass dv_key so deleted rows are "
             "materialized out, not resurrected"
         )
 
-    def _member(fid: str) -> DataFrame:
-        df = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(base_dir, "data", fid)
-        )
-        if fid in dv_paths:
-            gone = spark.read.parquet(*sorted(dv_paths[fid])).distinct()
-            df = df.join(gone, df[dv_key] == gone[_DV_COL], "left_anti")
-        return df
-
     adds = {}
     for i, g in enumerate(groups):
-        part = _member(g[0])
-        for fid in g[1:]:
-            part = part.unionByName(_member(fid), allowMissingColumns=True)
+        parts = [_read_file(spark, base_dir, f, m, dv_key, True) for f in g]
+        part = parts[0]
+        for p in parts[1:]:
+            part = part.unionByName(p, allowMissingColumns=True)
         adds[f"{prefix}{version}_{i}"] = part
     append_snapshot(spark, base_dir, version, adds=adds, removes=flat)
     return sorted(adds)
@@ -762,18 +693,11 @@ def _key_stats(
     then stays a merge candidate). Manifest-scale collect: ≤ one row
     per file ever given bounds. ``live=None`` skips the live filter so
     the read needs no manifest dependency (OPTIMIZATION r18: lets the
-    caller overlap this job with the ``_actions`` read, guide §2.6,
-    intersecting with the live set driver-side afterward)."""
-    try:
-        sdf = spark.read.schema(_STATS_SCHEMA).parquet(
-            os.path.join(base_dir, "_stats")
-        )
-    except Exception as e:  # noqa: BLE001 — PATH_NOT_FOUND filter
-        from pyspark.errors import AnalysisException
-
-        if isinstance(e, AnalysisException) and "PATH_NOT_FOUND" in str(e):
-            return {}
-        raise
+    caller overlap this job with the :func:`_manifest` read, guide
+    §2.6, intersecting with the live set driver-side afterward)."""
+    sdf = _read_or_none(spark, _STATS_SCHEMA, os.path.join(base_dir, "_stats"))
+    if sdf is None:
+        return {}
     filtered = sdf.filter(F.col("key_col") == key_col)
     if live is not None:
         filtered = filtered.filter(F.col("file_id").isin(live))
@@ -829,7 +753,8 @@ def merge_cdc(
     multi-event batches upstream (cdc_apply latest-wins) first.
 
     Scale shape: manifest min/max key stats (the ``_stats`` sidecar,
-    written by stats-declaring :func:`append_snapshot` callers) prune
+    written by :func:`append_snapshot` callers that name a
+    ``stats_key``) prune
     the candidate file list BEFORE any data read — a file whose
     recorded ``[min, max]`` contains no change key is never opened, so
     a batch touching 1 of N files reads 1 of N files; files without
@@ -889,14 +814,12 @@ def merge_cdc(
         + ([_clash_guard] if up_keys is not None and del_keys is not None
            else [])
         + [
-            lambda: _actions(spark, base_dir, version - 1),
+            lambda: _manifest(spark, base_dir, version - 1),
             lambda: _key_stats(spark, base_dir, key_col, None),
         ]
     )
-    acts, all_stats = overlap(fns)[-2:]
-    added = {r["file_id"] for r in acts if r["action"] == "add"}
-    removed = {r["file_id"] for r in acts if r["action"] == "remove"}
-    live = sorted(added - removed)
+    m, all_stats = overlap(fns)[-2:]
+    live = m.live
     # Every file read — routing AND rewrite — goes THROUGH the file's
     # accumulated deletion vectors: a raw read would route DV-deleted
     # keys as 'matches' (duplicating an upsert of a legitimately
@@ -904,12 +827,6 @@ def merge_cdc(
     # pointless full-file rewrite) and would resurrect deleted rows the
     # moment the file is rewritten (review r16 + the staged
     # split-invariance test).
-    dv_paths: dict[str, list[str]] = {}
-    for r in acts:
-        if r["action"] == "dv":
-            dv_paths.setdefault(r["file_id"], []).append(
-                os.path.join(base_dir, "dv", f"{r['file_id']}@{r['version']}")
-            )
 
     # ---- data skipping: prune candidates from manifest key bounds ----
     live_set = set(live)
@@ -963,9 +880,7 @@ def merge_cdc(
     # file list IS the pruned candidate set)
     tagged = None
     if candidates:
-        sample = spark.read.parquet(
-            os.path.join(base_dir, "data", candidates[0])
-        ).schema
+        sample = spark.read.parquet(_data_dir(base_dir, candidates[0])).schema
         kfields = [f2 for f2 in sample.fields if f2.name == key_col]
         if not kfields:
             raise ValueError(
@@ -976,9 +891,7 @@ def merge_cdc(
 
         tagged = (
             spark.read.schema(_ST(kfields))
-            .parquet(
-                *[os.path.join(base_dir, "data", f) for f in candidates]
-            )
+            .parquet(*[_data_dir(base_dir, f) for f in candidates])
             .select(
                 key.alias("_k"),
                 F.regexp_extract(
@@ -987,7 +900,7 @@ def merge_cdc(
             )
         )
         cand_dv = sorted(
-            p for fid in candidates for p in dv_paths.get(fid, [])
+            p for fid in candidates for p in m.dvs.get(fid, [])
         )
         if cand_dv:
             gone = spark.read.parquet(*cand_dv).select(
@@ -1059,12 +972,7 @@ def merge_cdc(
     adds: dict[str, DataFrame] = {}
     removes: list[str] = []
     for fid in sorted(upd_by_file):
-        old = spark.read.parquet(os.path.join(base_dir, "data", fid))
-        if fid in dv_paths:
-            gone = spark.read.parquet(*sorted(dv_paths[fid])).distinct()
-            old = old.join(
-                gone, old[key_col] == gone[_DV_COL], "left_anti"
-            )
+        old = _read_file(spark, base_dir, fid, m, key_col)
         survivors = old.join(up_keys, old[key_col] == up_keys["_k"],
                              "left_anti")
         if fid in del_by_file:
@@ -1116,7 +1024,6 @@ def merge_cdc(
         # live across merges (bounds measured from the written files —
         # one key-column read-back each, never a plan re-execution)
         stats_key=key_col if stats_by_fid else None,
-        auto_stats=bool(stats_by_fid),
     )
     return {
         "rewritten": sorted(upd_by_file),

@@ -56,7 +56,7 @@ _ALLOWED = {
                                  "row min() over a column-pruned scan, "
                                  "memoized per fixture (ADVICE r12: the "
                                  "outlier is derived, not hardcoded)"),
-    "operators/snapshots.py": (8, "live_files manifest collect — one row "
+    "operators/snapshots.py": (7, "_manifest's log collect — one row "
                                   "per file ACTION ever logged (metadata "
                                   "scale, the compaction_plan listing "
                                   "granularity), never data rows; "
@@ -68,8 +68,7 @@ _ALLOWED = {
                                   "per-log-part max collect — one row per "
                                   "log part file (manifest scale, r16); "
                                   "the r17 key-bounds skipping surface: "
-                                  "key_bounds' 1-row min/max agg, "
-                                  "append_snapshot's auto_stats 1-row "
+                                  "append_snapshot's 1-row stats_key "
                                   "read-back per added file, _key_stats' "
                                   "sidecar read (≤ one row per live "
                                   "file), and merge_cdc's pruned-"

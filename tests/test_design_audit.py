@@ -9,7 +9,9 @@ equivalence reference belongs in the test that pins it. Scratch data has
 one lifetime rule: checkpoints go through ``cache.local_checkpoint_tracked``,
 query scratch dirs are ``tempfile.TemporaryDirectory``, and the choice of
 RAM-backed checkpoint storage is made in one module. The quantized cosine
-of the semantic-dedup family is one function, ``similarity._qcos``.
+of the semantic-dedup family is one function, ``similarity._qcos``. The
+snapshot log is decoded in one function, ``snapshots._manifest``, and its
+on-disk paths and filesystem are resolved in one helper each.
 """
 
 from __future__ import annotations
@@ -87,3 +89,18 @@ def test_quantized_cosine_has_one_formula():
     }
     assert found == {"operators/similarity.py": 1}, found
     assert "np.outer(" in inspect.getsource(_qcos)
+
+
+def test_snapshot_log_has_one_decode_and_one_path_rule():
+    """``["action"]`` is compared only inside ``_manifest``; the Hadoop
+    FileSystem is resolved only in ``_fs`` and the ``dv/<fid>@<v>`` path
+    is built only in ``_dv_dir``."""
+    import inspect
+
+    from data_engineer_development_spark.operators import snapshots
+
+    src = (PKG / "operators" / "snapshots.py").read_text()
+    in_manifest = inspect.getsource(snapshots._manifest).count('["action"]')
+    assert in_manifest and src.count('["action"]') == in_manifest
+    assert src.count("getFileSystem(") == 1
+    assert src.count("@{") == 1

@@ -407,3 +407,81 @@ def test_quantiles_ignore_nulls_and_clamp_to_observed_max(spark):
     by_p = {(r["p_num"], r["p_den"]): r["est"] for r in rows}
     assert by_p[(1, 1)] == 2**63 - 1  # est(max) == observed max, no wrap
     assert 0 < by_p[(1, 2)] <= 2**63 - 1  # one-sided, in range
+
+
+def _parity(spark, name, fn, sql):
+    from tests.oracle_harness import compare
+
+    for sf_dir in (SF_SMOKE, SF_CORRECT):
+        ok, msg = compare(spark, sf_dir, name, fn, sql)
+        assert ok, f"{sf_dir}: {msg}"
+
+
+def test_approx_group_percentiles_oracle_parity(spark):
+    from data_engineer_development_spark.queries.sketch_ops import (
+        _APPROX_GROUP_PCTL_SQL,
+        q_approx_group_percentiles,
+    )
+
+    _parity(
+        spark,
+        "approx_group_percentiles",
+        q_approx_group_percentiles,
+        _APPROX_GROUP_PCTL_SQL,
+    )
+
+
+def test_grouped_histogram_estimate_one_sided_and_bounded(spark):
+    """Per (group, percentile): est ≥ exact ALWAYS (one-sided, the
+    sketch-family contract) and est − exact < the group's bin width
+    ceil(span_g / bins)."""
+    from data_engineer_development_spark.queries.sketch_ops import (
+        _AGP_BINS,
+        q_approx_group_percentiles,
+    )
+    from data_engineer_development_spark.sources import load_table
+
+    out = q_approx_group_percentiles(spark, SF_CORRECT).collect()
+    assert out, "no rows"
+    spans = {
+        r["grp"]: r["span"]
+        for r in load_table(spark, SF_CORRECT, "lineitem")
+        .select(
+            F.col("l_returnflag").alias("grp"),
+            F.round(F.col("l_extendedprice") * 100)
+            .cast("long")
+            .alias("cents"),
+        )
+        .groupBy("grp")
+        .agg((F.max("cents") - F.min("cents") + 1).alias("span"))
+        .collect()
+    }
+    for r in out:
+        assert r["overestimate"] >= 0, r
+        width = -(-spans[r["grp"]] // _AGP_BINS)  # ceil
+        assert r["overestimate"] < width, (r, width)
+
+
+def test_grouped_histogram_quantiles_null_and_exactness(spark):
+    """NULL values carry no rank; a group whose values all fit distinct
+    bins estimates exactly (overestimate 0 when every value is its own
+    bin ceiling)."""
+    from data_engineer_development_spark.operators.sketches import (
+        grouped_histogram_quantiles,
+    )
+
+    cnt = spark.createDataFrame(
+        [("a", 1, 1), ("a", 2, 1), ("a", None, 5), ("b", 10, 3)],
+        "g string, v int, c int",
+    )
+    got = {
+        (r["g"], r["p_num"], r["p_den"]): (r["k"], r["est"])
+        for r in grouped_histogram_quantiles(
+            cnt, "g", "v", "c", [(1, 2)], bins=16
+        ).collect()
+    }
+    # group a: n=2 (NULL row excluded), k=1, est covers value 1 exactly
+    # (span 2, width 1 → bin per value)
+    assert got[("a", 1, 2)] == (1, 1)
+    # group b: single value, k=2 of n=3, est = the value
+    assert got[("b", 1, 2)] == (2, 10)

@@ -10,10 +10,19 @@ import uuid
 
 import pytest
 from conftest import SF_CORRECT, SF_SMOKE
+from pyspark.sql import functions as F
 
 
 def _base() -> str:
     return os.path.join(tempfile.gettempdir(), f"snap-{uuid.uuid4().hex}")
+
+
+def _parity(spark, name, fn, sql):
+    from tests.oracle_harness import compare
+
+    for sf_dir in (SF_SMOKE, SF_CORRECT):
+        ok, msg = compare(spark, sf_dir, name, fn, sql)
+        assert ok, f"{sf_dir}: {msg}"
 
 
 def test_time_travel_read_oracle_parity(spark):
@@ -25,17 +34,8 @@ def test_time_travel_read_oracle_parity(spark):
         _TIME_TRAVEL_SQL,
         q_time_travel_read,
     )
-    from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark,
-            sf_dir,
-            "time_travel_read",
-            q_time_travel_read,
-            _TIME_TRAVEL_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    _parity(spark, "time_travel_read", q_time_travel_read, _TIME_TRAVEL_SQL)
 
 
 def test_snapshot_add_remove_and_asof_semantics(spark):
@@ -98,17 +98,11 @@ def test_deletion_vector_read_oracle_parity(spark):
         _DELETION_VECTOR_SQL,
         q_deletion_vector_read,
     )
-    from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark,
-            sf_dir,
-            "deletion_vector_read",
-            q_deletion_vector_read,
-            _DELETION_VECTOR_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    _parity(
+        spark, "deletion_vector_read", q_deletion_vector_read,
+        _DELETION_VECTOR_SQL,
+    )
 
 
 def test_deletion_vectors_time_travel_and_require_key(spark):
@@ -119,7 +113,6 @@ def test_deletion_vectors_time_travel_and_require_key(spark):
     import pytest as _pytest
 
     from data_engineer_development_spark.operators.snapshots import (
-        append_deletion_vector,
         append_snapshot,
         read_asof,
     )
@@ -129,7 +122,7 @@ def test_deletion_vectors_time_travel_and_require_key(spark):
         df = spark.createDataFrame([(i,) for i in range(10)], "x long")
         append_snapshot(spark, base, 1, {"f": df})
         dels = spark.createDataFrame([(2,), (5,)], "x long")
-        append_deletion_vector(spark, base, 2, "f", dels, "x")
+        append_snapshot(spark, base, 2, dvs={"f": dels}, dv_key="x")
         v1 = sorted(r["x"] for r in read_asof(spark, base, 1).collect())
         assert v1 == list(range(10))  # pre-delete version intact
         v2 = sorted(
@@ -187,17 +180,12 @@ def test_bucketed_join_colocate_parity_and_no_exchange_below_join(spark):
         _write_bucketed_sides,
         q_bucketed_join_colocate,
     )
-    from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark,
-            sf_dir,
-            "bucketed_join_colocate",
-            q_bucketed_join_colocate,
-            _BUCKETED_JOIN_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    _parity(
+        spark, "bucketed_join_colocate", q_bucketed_join_colocate,
+        _BUCKETED_JOIN_SQL,
+    )
+
     from conftest import fresh_db
 
     try:
@@ -247,7 +235,6 @@ def test_deletion_vectors_are_file_scoped(spark):
     file-scoped semantics (the Delta/Iceberg contract the docstring
     claims) keep B's x=1 alive."""
     from data_engineer_development_spark.operators.snapshots import (
-        append_deletion_vector,
         append_snapshot,
         read_asof,
     )
@@ -258,7 +245,7 @@ def test_deletion_vectors_are_file_scoped(spark):
         b = spark.createDataFrame([(1, "b"), (3, "b")], "x long, src string")
         append_snapshot(spark, base, 1, {"fa": a, "fb": b})
         dels = spark.createDataFrame([(1,)], "x long")
-        append_deletion_vector(spark, base, 2, "fa", dels, "x")
+        append_snapshot(spark, base, 2, dvs={"fa": dels}, dv_key="x")
         rows = sorted(
             (r["x"], r["src"])
             for r in read_asof(spark, base, 2, dv_key="x").collect()
@@ -310,17 +297,11 @@ def test_snapshot_vacuum_audit_oracle_parity(spark):
         _VACUUM_AUDIT_SQL,
         q_snapshot_vacuum_audit,
     )
-    from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark,
-            sf_dir,
-            "snapshot_vacuum_audit",
-            q_snapshot_vacuum_audit,
-            _VACUUM_AUDIT_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    _parity(
+        spark, "snapshot_vacuum_audit", q_snapshot_vacuum_audit,
+        _VACUUM_AUDIT_SQL,
+    )
 
 
 def test_legacy_log_without_schema_column_reads_strict(spark):
@@ -483,17 +464,11 @@ def test_compaction_apply_oracle_parity(spark):
         _COMPACTION_APPLY_SQL,
         q_compaction_apply,
     )
-    from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark,
-            sf_dir,
-            "compaction_apply",
-            q_compaction_apply,
-            _COMPACTION_APPLY_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    _parity(
+        spark, "compaction_apply", q_compaction_apply,
+        _COMPACTION_APPLY_SQL,
+    )
 
 
 def test_uncommitted_checkpoint_dir_is_skipped(spark):
@@ -618,7 +593,6 @@ def test_merge_cdc_key_bounds_prune_reads_only_touched_file(spark):
     from data_engineer_development_spark.operators.snapshots import (
         _key_stats,
         append_snapshot,
-        key_bounds,
         merge_cdc,
         read_asof,
     )
@@ -636,7 +610,6 @@ def test_merge_cdc_key_bounds_prune_reads_only_touched_file(spark):
         append_snapshot(
             spark, base, 1, parts,
             stats_key="k",
-            stats={fid: key_bounds(df, "k") for fid, df in parts.items()},
         )
         assert _key_stats(spark, base, "k", ["f0", "f1", "f2"]) == {
             "f0": (0, 9), "f1": (10, 19), "f2": (20, 29),
@@ -690,7 +663,6 @@ def test_merge_cdc_string_key_bounds_prune(spark):
 
     from data_engineer_development_spark.operators.snapshots import (
         append_snapshot,
-        key_bounds,
         merge_cdc,
     )
 
@@ -707,7 +679,6 @@ def test_merge_cdc_string_key_bounds_prune(spark):
         append_snapshot(
             spark, base, 1, parts,
             stats_key="k",
-            stats={fid: key_bounds(df, "k") for fid, df in parts.items()},
         )
         ups = spark.range(3, 5).select(
             F.format_string("id-%02d", F.col("id")).alias("k"),
@@ -716,5 +687,603 @@ def test_merge_cdc_string_key_bounds_prune(spark):
         res = merge_cdc(spark, base, 2, ups, None, "k")
         assert res["scanned"] == ["a"]
         assert res["rewritten"] == ["a"]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_snapshot_evolution_read_oracle_parity(spark):
+    from data_engineer_development_spark.queries.warehouse_ops import (
+        _SNAPSHOT_EVOLUTION_SQL,
+        q_snapshot_evolution_read,
+    )
+
+    _parity(
+        spark, "snapshot_evolution_read", q_snapshot_evolution_read,
+        _SNAPSHOT_EVOLUTION_SQL,
+    )
+
+
+def test_read_asof_schema_evolution_semantics(spark):
+    """merge_schema=True presents the union schema with NULLs for
+    pre-evolution files; the strict default FAILS LOUDLY on divergent
+    file schemas instead of silently dropping the new column; and a
+    pre-evolution version read never grows columns it didn't have."""
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    import pytest as _pytest
+
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        read_asof,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"snevo-{uuid.uuid4().hex}")
+    try:
+        old = spark.createDataFrame([(1, 10.0)], "k long, amt double")
+        new = spark.createDataFrame(
+            [(2, 20.0, "HIGH")], "k long, amt double, prio string"
+        )
+        append_snapshot(spark, base, 1, {"f_old": old})
+        append_snapshot(spark, base, 2, {"f_new": new})
+        merged = read_asof(spark, base, 2, merge_schema=True)
+        assert set(merged.columns) == {"k", "amt", "prio"}
+        rows = {r["k"]: r["prio"] for r in merged.collect()}
+        assert rows == {1: None, 2: "HIGH"}
+        # pre-evolution version: old schema only
+        assert set(read_asof(spark, base, 1, merge_schema=True).columns) == {
+            "k", "amt"
+        }
+        # strict default: divergent COMMITTED schemas raise the named
+        # error (Spark's own inference would silently NULL-fill or drop
+        # prio depending on which file won schema inference)
+        with _pytest.raises(ValueError, match="divergent committed"):
+            read_asof(spark, base, 2)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_cdc_merge_snapshot_oracle_parity(spark):
+    from data_engineer_development_spark.queries.warehouse_ops import (
+        _CDC_MERGE_SNAPSHOT_SQL,
+        q_cdc_merge_snapshot,
+    )
+
+    _parity(
+        spark,
+        "cdc_merge_snapshot",
+        q_cdc_merge_snapshot,
+        _CDC_MERGE_SNAPSHOT_SQL,
+    )
+
+
+def test_merge_cdc_routes_all_three_materializations(spark):
+    """One merge_cdc commit: update keys rewrite ONLY their file,
+    delete keys on an untouched file become a deletion vector (no
+    rewrite), unmatched keys land in one insert file, pre-merge reads
+    are invariant, and an upsert∩delete key clash fails loudly before
+    committing."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        live_files,
+        merge_cdc,
+        read_asof,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"mcdc-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(20).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("val")
+        )
+        append_snapshot(
+            spark, base, 1,
+            {
+                "lo": rows.filter("k < 10"),
+                "hi": rows.filter("k >= 10"),
+            },
+        )
+        # updates hit only 'lo'; deletes hit only 'hi'; inserts are new
+        updates = spark.range(2, 5).select(
+            F.col("id").alias("k"), F.lit(-1).cast("long").alias("val")
+        )
+        inserts = spark.range(100, 103).select(
+            F.col("id").alias("k"), F.lit(7).cast("long").alias("val")
+        )
+        deletes = spark.range(15, 17).select(F.col("id").alias("k"))
+        res = merge_cdc(
+            spark, base, 2, updates.unionByName(inserts), deletes, "k"
+        )
+        assert res == {
+            "rewritten": ["lo"],
+            "inserted": ["m2_ins"],
+            "dv": ["hi"],
+            "scanned": ["hi", "lo"],  # no stats recorded: all live files
+        }
+        assert live_files(spark, base, 2) == ["hi", "m2_lo", "m2_ins"] or (
+            live_files(spark, base, 2) == sorted(["hi", "m2_lo", "m2_ins"])
+        )
+        v2 = {
+            r["k"]: r["val"]
+            for r in read_asof(spark, base, 2, dv_key="k").collect()
+        }
+        # updated
+        assert all(v2[k] == -1 for k in (2, 3, 4))
+        # deleted
+        assert 15 not in v2 and 16 not in v2
+        # inserted
+        assert all(v2[k] == 7 for k in (100, 101, 102))
+        # untouched survivors
+        assert v2[0] == 0 and v2[11] == 110
+        assert len(v2) == 20 - 2 + 3
+        # pre-merge version invariant
+        v1 = {
+            r["k"]: r["val"]
+            for r in read_asof(spark, base, 1, dv_key="k").collect()
+        }
+        assert len(v1) == 20 and v1[15] == 150 and v1[3] == 30
+
+        with pytest.raises(ValueError, match="both upserts and deletes"):
+            merge_cdc(
+                spark, base, 3,
+                spark.range(1).select(
+                    F.col("id").alias("k"), F.lit(0).alias("val")
+                ),
+                spark.range(1).select(F.col("id").alias("k")),
+                "k",
+            )
+        with pytest.raises(ValueError, match="empty batch"):
+            merge_cdc(spark, base, 3, None, None, "k")
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_append_snapshot_dvs_commit_atomically_and_validate(spark):
+    """append_snapshot's dvs form: dv without dv_key and dv-on-removed
+    both fail loudly; a combined add+remove+dv version reads correctly
+    and the dv rows share the version's single log batch."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        read_asof,
+        snapshot_log,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"advs-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(10).select(F.col("id").alias("k"))
+        append_snapshot(spark, base, 1, {"a": rows.filter("k < 5"),
+                                         "b": rows.filter("k >= 5")})
+        with pytest.raises(ValueError, match="without dv_key"):
+            append_snapshot(
+                spark, base, 2, dvs={"a": rows.filter("k = 0")}
+            )
+        with pytest.raises(ValueError, match="removed file"):
+            append_snapshot(
+                spark, base, 2,
+                removes=["a"],
+                dvs={"a": rows.filter("k = 0")},
+                dv_key="k",
+            )
+        append_snapshot(
+            spark, base, 2,
+            adds={"c": spark.range(100, 102).select(F.col("id").alias("k"))},
+            removes=["b"],
+            dvs={"a": rows.filter("k = 0")},
+            dv_key="k",
+        )
+        got = sorted(
+            r["k"] for r in read_asof(spark, base, 2, dv_key="k").collect()
+        )
+        assert got == [1, 2, 3, 4, 100, 101]
+        v2 = snapshot_log(spark, base).filter("version = 2").collect()
+        assert sorted((r["action"], r["file_id"]) for r in v2) == [
+            ("add", "c"), ("dv", "a"), ("remove", "b"),
+        ]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_snapshot_maintenance_plan_oracle_parity(spark):
+    from data_engineer_development_spark.queries.warehouse_ops import (
+        _SNAPSHOT_MAINTENANCE_SQL,
+        q_snapshot_maintenance_plan,
+    )
+
+    _parity(
+        spark,
+        "snapshot_maintenance_plan",
+        q_snapshot_maintenance_plan,
+        _SNAPSHOT_MAINTENANCE_SQL,
+    )
+
+
+def test_maintenance_plan_is_dry_run(spark):
+    """The plan must not delete anything: after q's fixture logic runs
+    against a persistent base, expirable files still exist on disk.
+    (Re-built inline since the query cleans its temp dir.)"""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        expire_versions,
+        live_files,
+        read_asof,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"dry-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(10).select(F.col("id").alias("k"))
+        append_snapshot(spark, base, 1, {"a": rows})
+        append_snapshot(spark, base, 2, {"b": rows}, removes=["a"])
+        dead = expire_versions(spark, base, 2, delete=False)
+        assert dead == ["a"]
+        assert os.path.isdir(os.path.join(base, "data", "a"))
+        # a version-1 read still works after the dry run
+        assert read_asof(spark, base, 1).count() == 10
+        assert live_files(spark, base, 2) == ["b"]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_cdc_merge_snapshot_oracle_parity(spark):
+    from data_engineer_development_spark.queries.warehouse_ops import (
+        _STREAM_CDC_MERGE_SQL,
+        q_stream_cdc_merge_snapshot,
+    )
+
+    _parity(
+        spark,
+        "stream_cdc_merge_snapshot",
+        q_stream_cdc_merge_snapshot,
+        _STREAM_CDC_MERGE_SQL,
+    )
+
+
+def test_stream_cdc_merge_is_split_invariant_and_versioned(spark):
+    """The SAME change set applied as one batch and as many batches
+    yields identical head content (the unique-key split-invariance
+    contract), and the multi-batch run leaves a multi-version history —
+    each micro-batch one atomic commit."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        merge_cdc,
+        read_asof,
+        snapshot_log,
+    )
+
+    def build(n_batches: int) -> tuple[dict, int]:
+        base = os.path.join(
+            tempfile.gettempdir(), f"splt-{uuid.uuid4().hex}"
+        )
+        try:
+            rows = spark.range(10).select(
+                F.col("id").alias("k"), (F.col("id") * 10).alias("val")
+            )
+            append_snapshot(spark, base, 1, {"a": rows})
+            # changes: update k in {1,2}, delete k=3, insert k in {50,51}
+            ups = spark.createDataFrame(
+                [(1, -1), (2, -2), (50, 500), (51, 510)], "k long, val long"
+            )
+            dels = spark.range(3, 4).select(F.col("id").alias("k"))
+            batches: list[tuple] = []
+            if n_batches == 1:
+                batches = [(ups, dels)]
+            else:
+                batches = [
+                    (ups.filter("k = 1"), None),
+                    (None, dels),
+                    (ups.filter("k >= 50"), None),
+                    (ups.filter("k = 2"), None),
+                ]
+            v = 1
+            for u, d in batches:
+                v += 1
+                merge_cdc(spark, base, v, u, d, "k")
+            head = {
+                r["k"]: r["val"]
+                for r in read_asof(spark, base, 2**61, dv_key="k").collect()
+            }
+            n_versions = snapshot_log(spark, base).agg(
+                F.max("version")
+            ).collect()[0][0]
+            return head, int(n_versions)
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
+    one, v1 = build(1)
+    many, vn = build(4)
+    assert one == many
+    assert v1 == 2 and vn == 5
+    assert one[1] == -1 and one[2] == -2 and 3 not in one
+    assert one[50] == 500 and one[51] == 510 and one[0] == 0
+
+
+def test_apply_compaction_reads_through_deletion_vectors(spark):
+    """Review r16: compacting a file that carries deletion vectors must
+    materialize the deletes into the rewrite — a raw read would
+    resurrect them (the vectors attach to the removed member). dv_key
+    is REQUIRED the moment any member carries a vector; schema-divergent
+    groups are refused manifest-only."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        apply_compaction,
+        read_asof,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"cdv-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(10).select(F.col("id").alias("k"))
+        append_snapshot(spark, base, 1, {"a": rows.filter("k < 5"),
+                                         "b": rows.filter("k >= 5")})
+        append_snapshot(
+            spark, base, 2, dvs={"a": rows.filter("k = 1")}, dv_key="k"
+        )
+        with pytest.raises(ValueError, match="deletion vectors"):
+            apply_compaction(spark, base, 3, [["a", "b"]])
+        new = apply_compaction(spark, base, 3, [["a", "b"]], dv_key="k")
+        assert new == ["compact3_0"]
+        got = sorted(r["k"] for r in read_asof(spark, base, 3).collect())
+        assert got == [0, 2, 3, 4, 5, 6, 7, 8, 9]  # 1 stays deleted
+        # pre-compaction versions still correct
+        assert read_asof(spark, base, 2, dv_key="k").count() == 9
+        assert read_asof(spark, base, 1).count() == 10
+
+        # schema-divergent group: refused manifest-only
+        append_snapshot(
+            spark, base, 4,
+            {"w": spark.range(3).select(
+                F.col("id").alias("k"), F.lit("x").alias("extra"))},
+        )
+        with pytest.raises(ValueError, match="mixes committed schemas"):
+            apply_compaction(spark, base, 5, [["compact3_0", "w"]])
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_merge_cdc_noop_batch_and_dv_deleted_key_routing(spark):
+    """Review r16: a batch matching nothing (deletes of absent keys) is
+    a routine CDC no-op — no commit, no version burned, no error; and an
+    upsert of a DV-deleted key routes as an INSERT (the key is logically
+    absent), never a pointless rewrite of the file that once held it."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        merge_cdc,
+        read_asof,
+        snapshot_log,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"noop-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(10).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("val")
+        )
+        append_snapshot(spark, base, 1, {"a": rows})
+        # no-op: delete keys that don't exist
+        res = merge_cdc(
+            spark, base, 2, None,
+            spark.range(100, 103).select(F.col("id").alias("k")), "k",
+        )
+        assert res == {"rewritten": [], "inserted": [], "dv": [],
+                       "scanned": ["a"]}
+        assert snapshot_log(spark, base).agg(
+            F.max("version")
+        ).collect()[0][0] == 1  # no version burned
+
+        # DV-delete k=7, then upsert it: must route as an INSERT
+        append_snapshot(
+            spark, base, 2, dvs={"a": rows.filter("k = 7")}, dv_key="k"
+        )
+        res = merge_cdc(
+            spark, base, 3,
+            spark.createDataFrame([(7, -7)], "k long, val long"),
+            None, "k",
+        )
+        assert res == {"rewritten": [], "inserted": ["m3_ins"], "dv": [],
+                       "scanned": ["a"]}
+        head = {
+            r["k"]: r["val"]
+            for r in read_asof(spark, base, 3, dv_key="k").collect()
+        }
+        assert head[7] == -7 and len(head) == 10
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_snapshot_log_checkpoint_oracle_parity(spark):
+    from data_engineer_development_spark.queries.warehouse_ops import (
+        _SNAPSHOT_LOG_CKPT_SQL,
+        q_snapshot_log_checkpoint,
+    )
+
+    _parity(
+        spark,
+        "snapshot_log_checkpoint",
+        q_snapshot_log_checkpoint,
+        _SNAPSHOT_LOG_CKPT_SQL,
+    )
+
+
+def test_checkpoint_log_compacts_and_preserves_history(spark):
+    """checkpoint_log: one checkpoint file carries the FULL action
+    history (time travel to any version still exact), the covered tail
+    part files are deleted, post-checkpoint commits land in a fresh
+    tail, a second checkpoint folds them in, and the crash window
+    (checkpoint written, tail not yet compacted) double-reads without
+    double-counting."""
+    import glob
+
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        checkpoint_log,
+        live_files,
+        read_asof,
+        snapshot_log,
+    )
+
+    base = os.path.join(tempfile.gettempdir(), f"ckpt-{uuid.uuid4().hex}")
+    try:
+        rows = spark.range(30).select(F.col("id").alias("k"))
+        append_snapshot(spark, base, 1, {"a": rows.filter("k < 10")})
+        append_snapshot(spark, base, 2, {"b": rows.filter("k >= 10 and k < 20")})
+        append_snapshot(spark, base, 3, {"c": rows.filter("k >= 20")},
+                        removes=["a"])
+        n_actions = snapshot_log(spark, base).count()
+        assert n_actions == 4
+
+        def parts() -> int:
+            return len(glob.glob(os.path.join(base, "_log", "part-*.parquet")))
+
+        assert parts() == 3
+        assert checkpoint_log(spark, base) == 3
+        assert parts() == 0
+        # history intact through the checkpoint
+        assert snapshot_log(spark, base).count() == n_actions
+        assert live_files(spark, base, 1) == ["a"]
+        assert live_files(spark, base, 3) == ["b", "c"]
+        assert read_asof(spark, base, 2).count() == 20
+        assert read_asof(spark, base, 3).count() == 20
+
+        # post-checkpoint commit lands in a fresh tail; second
+        # checkpoint folds it in
+        append_snapshot(spark, base, 4, {"d": rows.filter("k < 5")})
+        assert parts() == 1
+        assert snapshot_log(spark, base).count() == n_actions + 1
+        assert checkpoint_log(spark, base) == 4
+        assert parts() == 0
+        assert read_asof(spark, base, 4).count() == 25
+
+        # crash window: rows present in BOTH checkpoint and tail must
+        # not double-count (snapshot_log DISTINCTs) — simulate by
+        # re-appending the EXACT duplicate of a row the checkpoint
+        # already covers
+        dup = snapshot_log(spark, base).filter(
+            "version = 4 and action = 'add'"
+        )
+        dup.coalesce(1).write.mode("append").parquet(
+            os.path.join(base, "_log")
+        )
+        assert snapshot_log(spark, base).count() == n_actions + 1
+        assert read_asof(spark, base, 4).count() == 25
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _commit_case(spark, base: str, op: str):
+    """``(commit(tag), expected head rows)`` for one commit operator at
+    version 2 over the four-file v1 table of
+    :func:`test_failed_overlapped_write_leaves_prior_version`. Each
+    commit lands two or three data files in one overlapped write round;
+    ``tag`` names the new file ids, so a retry never collides with the
+    failed attempt's debris."""
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        apply_compaction,
+        merge_cdc,
+    )
+
+    pre = {k: k * 10 for k in range(20)}
+    if op == "append_snapshot":
+        new = spark.range(100, 103).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("val")
+        )
+        return (
+            lambda tag: append_snapshot(spark, base, 2, {
+                f"{tag}{k}": new.filter(f"k = {k}") for k in range(100, 103)
+            }),
+            sorted((pre | {k: k * 10 for k in range(100, 103)}).items()),
+        )
+    if op == "apply_compaction":
+        return (
+            lambda tag: apply_compaction(
+                spark, base, 2, [["f0", "f1"], ["f2", "f3"]], prefix=tag
+            ),
+            sorted(pre.items()),
+        )
+    ups = spark.createDataFrame(
+        [(2, -1), (17, -1), (100, -1)], "k long, val long"
+    )
+    return (
+        lambda tag: merge_cdc(spark, base, 2, ups, None, "k", prefix=tag),
+        sorted((pre | {2: -1, 17: -1, 100: -1}).items()),
+    )
+
+
+@pytest.mark.parametrize(
+    "op,k,n_writes",
+    [
+        ("append_snapshot", 2, 3),
+        ("apply_compaction", 1, 2),
+        ("merge_cdc", 3, 3),
+    ],
+)
+def test_failed_overlapped_write_leaves_prior_version(
+    spark, monkeypatch, op, k, n_writes
+):
+    """Fault injection in the overlapped per-file writes of a commit:
+    the k-th data-file write raises while its siblings land. The failed
+    version must have no log row, reads at the prior version and at the
+    head both return the pre-commit rows exactly, every landed sibling
+    is reported as an orphan, and a retry at the SAME version with fresh
+    file ids commits and reads correctly."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from data_engineer_development_spark.operators.snapshots import (
+        append_snapshot,
+        orphan_files,
+        read_asof,
+        snapshot_log,
+    )
+
+    def rows(v: int) -> list:
+        return sorted(
+            (r["k"], r["val"]) for r in read_asof(spark, base, v).collect()
+        )
+
+    base = _base()
+    data_root = os.path.join(base, "data") + os.sep
+    real_parquet = DataFrameWriter.parquet
+    lock = threading.Lock()
+    state = {"armed": True, "n": 0}
+    landed: list[str] = []
+
+    def parquet(self, path, *args, **kwargs):
+        if not state["armed"] or not str(path).startswith(data_root):
+            return real_parquet(self, path, *args, **kwargs)
+        with lock:
+            state["n"] += 1
+            n = state["n"]
+        if n == k:
+            raise RuntimeError(f"injected failure of data write {k}")
+        real_parquet(self, path, *args, **kwargs)
+        with lock:
+            landed.append(os.path.basename(path))
+
+    try:
+        rows20 = spark.range(20).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("val")
+        )
+        append_snapshot(spark, base, 1, {
+            f"f{i}": rows20.filter(f"k >= {5 * i} and k < {5 * i + 5}")
+            for i in range(4)
+        })
+        pre = rows(1)
+        commit, expected = _commit_case(spark, base, op)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            commit("x")
+        state["armed"] = False
+        assert state["n"] == n_writes and len(landed) == n_writes - 1
+
+        assert snapshot_log(spark, base).filter("version = 2").count() == 0
+        assert rows(1) == pre
+        assert rows(2**62) == pre
+        assert orphan_files(spark, base) == sorted(landed)
+
+        commit("y")
+        assert rows(2) == rows(2**62) == expected
+        assert rows(1) == pre
+        assert orphan_files(spark, base) == sorted(landed)
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -386,57 +386,3 @@ def test_grouped_quantiles_match_per_group_sorted_selection(spark):
         for num, den in _GQ_PROBS:
             k = -(-num * len(vs) // den)
             assert got[(grp, num, den)] == (k, vs[k - 1]), (grp, num, den)
-
-
-def test_snapshot_evolution_read_oracle_parity(spark):
-    from data_engineer_development_spark.queries.warehouse_ops import (
-        _SNAPSHOT_EVOLUTION_SQL,
-        q_snapshot_evolution_read,
-    )
-
-    _parity(
-        spark, "snapshot_evolution_read", q_snapshot_evolution_read,
-        _SNAPSHOT_EVOLUTION_SQL,
-    )
-
-
-def test_read_asof_schema_evolution_semantics(spark):
-    """merge_schema=True presents the union schema with NULLs for
-    pre-evolution files; the strict default FAILS LOUDLY on divergent
-    file schemas instead of silently dropping the new column; and a
-    pre-evolution version read never grows columns it didn't have."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    import pytest as _pytest
-
-    from data_engineer_development_spark.operators.snapshots import (
-        append_snapshot,
-        read_asof,
-    )
-
-    base = os.path.join(tempfile.gettempdir(), f"snevo-{uuid.uuid4().hex}")
-    try:
-        old = spark.createDataFrame([(1, 10.0)], "k long, amt double")
-        new = spark.createDataFrame(
-            [(2, 20.0, "HIGH")], "k long, amt double, prio string"
-        )
-        append_snapshot(spark, base, 1, {"f_old": old})
-        append_snapshot(spark, base, 2, {"f_new": new})
-        merged = read_asof(spark, base, 2, merge_schema=True)
-        assert set(merged.columns) == {"k", "amt", "prio"}
-        rows = {r["k"]: r["prio"] for r in merged.collect()}
-        assert rows == {1: None, 2: "HIGH"}
-        # pre-evolution version: old schema only
-        assert set(read_asof(spark, base, 1, merge_schema=True).columns) == {
-            "k", "amt"
-        }
-        # strict default: divergent COMMITTED schemas raise the named
-        # error (Spark's own inference would silently NULL-fill or drop
-        # prio depending on which file won schema inference)
-        with _pytest.raises(ValueError, match="divergent committed"):
-            read_asof(spark, base, 2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
