@@ -7,7 +7,7 @@ Fine over a bounded histogram; fatal over a 100 TB fact table or a
 corpus-sized vocabulary. This module provides the exact, parallel
 alternative used by ``ntile_deciles`` and ``dictionary_encode``:
 
-1. ``repartitionByRange(parts, *order).sortWithinPartitions(*order)`` —
+1. ``repartitionByRange(P, *order).sortWithinPartitions(*order)`` —
    contiguous ordered key ranges, one parallel sort per partition. When
    the ordering is a total order (callers must include a tiebreaker),
    ANY sampled boundary placement yields the same global rank, so the
@@ -20,7 +20,7 @@ alternative used by ``ntile_deciles`` and ``dictionary_encode``:
    The optimizer never reorders the projection below the Sort because
    the id expression is nondeterministic; tests/test_ranking.py pins the
    rank == global-window equivalence in case that ever changes.
-3. per-partition counts → cumulative offsets (a window over ``parts``
+3. per-partition counts → cumulative offsets (a window over ``P``
    rows, bounded control-plane) broadcast back: global = offset + local.
 
 The ranked intermediate is persisted so the counts branch and the join
@@ -47,6 +47,8 @@ from data_engineer_development_spark.cache import track_persist
 
 _LOCAL_BITS = 33
 _LOCAL_MASK = (1 << _LOCAL_BITS) - 1
+#: range-exchange width of every ranking pass (``P`` above)
+_RANGE_PARTS = 32
 
 
 def ntile_from_rank(
@@ -83,7 +85,6 @@ def with_global_rank(
     *order: Column | str,
     rank_col: str = "r",
     total_col: str | None = None,
-    parts: int = 32,
 ) -> DataFrame:
     """Append a 1-based global ``row_number`` over ``order`` to ``df``.
 
@@ -95,7 +96,7 @@ def with_global_rank(
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order]
     ranked = track_persist(
-        df.repartitionByRange(parts, *cols)
+        df.repartitionByRange(_RANGE_PARTS, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_mid", F.monotonically_increasing_id())
     )
@@ -125,7 +126,6 @@ def with_global_cumsum(
     weight: Column | str,
     *order: Column | str,
     cum_col: str = "cum",
-    parts: int = 32,
 ) -> DataFrame:
     """Append the EXCLUSIVE global running sum of ``weight`` over
     ``order`` (sum of all strictly-earlier rows' weights) — the
@@ -165,7 +165,7 @@ def with_global_cumsum(
             "cast/round explicitly if truncation is intended"
         )
     ranked = track_persist(
-        df.repartitionByRange(parts, *cols)
+        df.repartitionByRange(_RANGE_PARTS, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_w", w.cast("long"))
         # evaluated AFTER the exchange+sort (non-deterministic expressions
@@ -214,7 +214,6 @@ def with_grouped_cumsum(
     group_cols: list[str],
     *order: Column | str,
     cum_col: str = "cum",
-    parts: int = 32,
 ) -> DataFrame:
     """Append the PER-GROUP exclusive running sum of ``weight`` over
     ``order`` within each ``group_cols`` group — grouped prefix sums
@@ -247,7 +246,7 @@ def with_grouped_cumsum(
     """
     gcols = [F.col(g) for g in group_cols]
     out = with_global_cumsum(
-        df, weight, *(gcols + list(order)), cum_col="_gcum", parts=parts
+        df, weight, *(gcols + list(order)), cum_col="_gcum"
     )
     offsets = out.groupBy(*group_cols).agg(F.min("_gcum").alias("_goff"))
     return (

@@ -34,14 +34,6 @@ def tokens(col: str = "text") -> Column:
     return F.split(F.col(col), " ")
 
 
-def token_count(col: str = "text") -> Column:
-    return F.size(tokens(col))
-
-
-def distinct_token_count(col: str = "text") -> Column:
-    return F.size(F.array_distinct(tokens(col)))
-
-
 def shingles_expr(tokens_col: str, k: int = 3) -> Column:
     """Distinct k-token shingles. Documents with <k tokens yield an empty
     set — matching DuckDB, where generate_series(1, 0) is empty (Spark's

@@ -11,6 +11,8 @@ identical inputs.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -414,43 +416,16 @@ FROM j
 # bucket holds everything seen, and a vector is ADMITTED only if no
 # lower-id same-bucket vector covers it at quantized cosine ≥ τ — the
 # family's drop-if-any-earlier-neighbor rule evaluated incrementally
-# (streaming/stateful.stream_neardup_gate). The batch dual below is exact
-# because the whole source drains in ONE micro-batch
+# (streaming/stateful.stream_neardup_gate). The single-table batch dual
+# below is exact because the whole source drains in ONE micro-batch
 # (assert_single_batch) and the kernel processes each bucket in id order;
 # in a real multi-batch run "earlier" means earlier ARRIVAL — the true
 # gate semantics. planes=2 at test scale so buckets are big enough to
 # reject a meaningful fraction (27/500 at sf0.01); at volume, planes and
-# a state TTL are the dials.
+# a state TTL are the dials. The registered entry (q_stream_neardup_gate,
+# further down) runs the gate under two dials.
 # --------------------------------------------------------------------------
 _GATE_PLANES = 2
-
-
-def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    from data_engineer_development_spark.streaming.stateful import (
-        stream_neardup_gate,
-    )
-    from data_engineer_development_spark.streaming.windows import (
-        run_to_memory_sink,
-        stream_table,
-    )
-
-    gated = stream_neardup_gate(
-        stream_table(spark, sf_dir, "embeddings"),
-        tau=_SD_TAU,
-        planes=_GATE_PLANES,
-        dims=DIMS,
-    )
-    name = f"q_ndgate_{_uuid.uuid4().hex[:8]}"
-    # update mode emits each vector's verdict exactly once (a vector is
-    # processed in exactly one batch); single-batch asserted so the
-    # id-order greedy equals the batch dual (see block comment)
-    run_to_memory_sink(
-        gated, name, output_mode="update", assert_single_batch=True,
-        state_partitions=4, no_data_batches=False,
-    )
-    return spark.table(name).orderBy("vec_id")
 
 
 _STREAM_NDGATE_SQL = f"""
@@ -599,54 +574,17 @@ ORDER BY u.vec_id
 
 
 # --------------------------------------------------------------------------
-# Banded (multi-table) gate — REGISTERED r11 as stream_neardup_gate (the
-# default shape; VERDICT r10 #2): the recall dial the r10 gate audit measured
-# (single-table 0.38–0.48 → 0.63–0.72 at tables=2 for +12 % wall). Same
-# shape as q_stream_neardup_gate with tables=_GATE_TABLES; per-table
-# verdicts folded batch-side AFTER the sink (combine_gate_tables — min
-# dup_of / AND admitted). The oracle detects a covering pair if the two
-# vectors share a bucket in ANY table (per-table bucket columns, OR'd
-# join predicate): min-of-mins over tables equals the min over the union
-# of detections, so one flat MIN reproduces the fold exactly.
+# Banded (multi-table) gate dual — the registered entry's `banded2` dial
+# (VERDICT r10 #2): the recall dial the r10 gate audit measured
+# (single-table 0.38–0.48 → 0.63–0.72 at tables=2 for +12 % wall).
+# Per-table verdicts are folded batch-side AFTER the sink
+# (combine_gate_tables — min dup_of / AND admitted). The oracle detects a
+# covering pair if the two vectors share a bucket in ANY table (per-table
+# bucket columns, OR'd join predicate): min-of-mins over tables equals the
+# min over the union of detections, so one flat MIN reproduces the fold
+# exactly.
 # --------------------------------------------------------------------------
 _GATE_TABLES = 2
-
-
-def _prepare_gate_banded(spark: SparkSession, sf_dir: str):
-    """(gated stream, sink kwargs, post-fn) for the banded dial — shared by
-    the standalone builder and the concurrent dials fold."""
-    from data_engineer_development_spark.streaming.stateful import (
-        combine_gate_tables,
-        stream_neardup_gate,
-    )
-    from data_engineer_development_spark.streaming.windows import stream_table
-
-    gated = stream_neardup_gate(
-        stream_table(spark, sf_dir, "embeddings"),
-        tau=_SD_TAU,
-        planes=_GATE_PLANES,
-        dims=DIMS,
-        tables=_GATE_TABLES,
-    )
-    kwargs = dict(
-        output_mode="update", assert_single_batch=True,
-        state_partitions=4, no_data_batches=False,
-    )
-    return gated, kwargs, combine_gate_tables
-
-
-def q_stream_neardup_gate_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    from data_engineer_development_spark.streaming.windows import (
-        run_to_memory_sink,
-    )
-
-    gated, kwargs, post = _prepare_gate_banded(spark, sf_dir)
-    name = f"q_ndgate_b_{_uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(gated, name, **kwargs)
-    return post(spark.table(name)).orderBy("vec_id")
-
 
 _BANDED_BUCKETS = ",\n              ".join(
     f"CAST({_bucket_expr_sql(_GATE_PLANES, plane_offset=t * _GATE_PLANES)}"
@@ -673,30 +611,44 @@ ORDER BY bk.vec_id
 
 
 # --------------------------------------------------------------------------
-# Event-time-TTL gate — REGISTERED r12 (VERDICT r11 #4): the replay-safe
-# bounded-state dial gets DRIVER contact. Same single-table gate as
-# q_stream_neardup_gate, but with ``event_ttl_ms`` ARMED over a synthetic
-# event-time column (ts = epoch + vec_id seconds, one far-future outlier
-# at the lowest usable id to push the final watermark past every other
-# bucket's horizon). The run is single-data-batch (asserted), so during
-# the data batch the watermark is still 0 and NO state can expire before
-# a verdict is emitted — the output is therefore EXACTLY the batch greedy
-# and the single-table oracle (_STREAM_NDGATE_SQL) pairs it hash-exactly.
-# What the TTL arming buys is real driver-harness execution of the
-# event-TTL kernel: withWatermark → EventTimeTimeout plan,
-# setTimeoutTimestamp armed per bucket on every arrival
-# (streaming/stateful.py), and in the trailing no-data micro-batch
-# (no_data_batches=True — load-bearing here) the watermark advances to
-# outlier−delay and every bucket EXCEPT the outlier's deterministically
-# fires hasTimedOut self-expiry (state.remove(), zero rows). Mid-run
-# output-visible eviction (re-admission after expiry) needs multi-batch
-# ingest and stays pinned by tests/test_streaming.py's 3-batch e2e pair —
-# the tick model there depends on file-arrival order, which the driver
-# harness can't see deterministically.
+# The REGISTERED gate entry — r16 dial fold (VERDICT r15 #7, COVERAGE.md
+# rotation policy rule 4): one entry whose output unions two dials under a
+# `dial` column, each a REAL streaming run of stream_neardup_gate:
+#
+# * `banded2` — tables=_GATE_TABLES, folded with combine_gate_tables;
+#   oracle _STREAM_NDGATE_BANDED_SQL.
+# * `event_ttl` — the replay-safe bounded-state dial (VERDICT r11 #4):
+#   single-table, ``event_ttl_ms`` ARMED over a synthetic event-time
+#   column (ts = epoch + vec_id seconds, one far-future outlier at the
+#   lowest usable id to push the final watermark past every other
+#   bucket's horizon). The run is single-data-batch (asserted), so during
+#   the data batch the watermark is still 0 and NO state can expire
+#   before a verdict is emitted — the output is therefore EXACTLY the
+#   batch greedy and the single-table oracle (_STREAM_NDGATE_SQL) pairs
+#   it hash-exactly. What the TTL arming buys is a registry entry that
+#   executes the event-TTL kernel: withWatermark → EventTimeTimeout
+#   plan, setTimeoutTimestamp armed per bucket on every arrival
+#   (streaming/stateful.py), and in the trailing no-data micro-batch
+#   (no_data_batches=True — load-bearing here) the watermark advances to
+#   outlier−delay and every bucket EXCEPT the outlier's deterministically
+#   fires hasTimedOut self-expiry (state.remove(), zero rows). Mid-run
+#   output-visible eviction (re-admission after expiry) needs multi-batch
+#   ingest and stays pinned by tests/test_streaming.py's 3-batch e2e
+#   tests — the tick model there depends on file-arrival order, which a
+#   registry entry over the fixture tables can't pin deterministically.
+#
+# OPTIMIZATION r17 (guide §2.6 — overlap independent jobs): the two runs
+# are independent and their cost is dominated by stream-start/per-batch
+# constants, not CPU, so both are STARTED before either is awaited; each
+# query's session confs are frozen at its own .start()
+# (start_to_memory_sink), so the differing no-data-batch settings cannot
+# leak across. Measured at sf0.1 (isolated min-of-5,
+# calibration-bracketed): 6.11 s sequential → 4.46 s concurrent.
 # --------------------------------------------------------------------------
 _GATE_EVENT_TTL_MS = 10_000
 #: epoch ms of 2026-01-01 00:00:00 UTC (fixture-independent constant)
 _GATE_TS_BASE_MS = 1_767_225_600_000
+
 
 def _min_vec_id(spark: SparkSession, sf_dir: str) -> int:
     """The fixture's lowest vec_id — the event-TTL entry's watermark
@@ -714,14 +666,35 @@ def _min_vec_id(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def _prepare_gate_event_ttl(spark: SparkSession, sf_dir: str):
-    """(gated stream, sink kwargs, post-fn) for the event-TTL dial — shared
-    by the standalone builder and the concurrent dials fold."""
+def q_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid as _uuid
+
     from data_engineer_development_spark.streaming.stateful import (
+        combine_gate_tables,
         stream_neardup_gate,
     )
-    from data_engineer_development_spark.streaming.windows import stream_table
+    from data_engineer_development_spark.streaming.windows import (
+        finish_memory_sink,
+        start_to_memory_sink,
+        stream_table,
+    )
 
+    def start(dial: str, gated: DataFrame, no_data_batches: bool) -> dict:
+        return start_to_memory_sink(
+            gated, f"q_ndgate_{dial}_{_uuid.uuid4().hex[:8]}",
+            output_mode="update", assert_single_batch=True,
+            state_partitions=4, no_data_batches=no_data_batches,
+        )
+
+    # the banded run starts before the outlier probe's job
+    banded = start(
+        "banded2",
+        stream_neardup_gate(
+            stream_table(spark, sf_dir, "embeddings"),
+            tau=_SD_TAU, planes=_GATE_PLANES, dims=DIMS, tables=_GATE_TABLES,
+        ),
+        no_data_batches=False,
+    )
     outlier = _min_vec_id(spark, sf_dir)
     src = stream_table(spark, sf_dir, "embeddings").withColumn(
         "ts",
@@ -734,35 +707,39 @@ def _prepare_gate_event_ttl(spark: SparkSession, sf_dir: str):
             f"{outlier} THEN 2592000000 ELSE vec_id * 1000 END)"
         ),
     )
-    gated = stream_neardup_gate(
-        src,
-        tau=_SD_TAU,
-        planes=_GATE_PLANES,
-        dims=DIMS,
-        event_time_col="ts",
-        event_ttl_ms=_GATE_EVENT_TTL_MS,
-        watermark_delay="1 second",
+    event_ttl = start(
+        "event_ttl",
+        stream_neardup_gate(
+            src, tau=_SD_TAU, planes=_GATE_PLANES, dims=DIMS,
+            event_time_col="ts", event_ttl_ms=_GATE_EVENT_TTL_MS,
+            watermark_delay="1 second",
+        ),
+        no_data_batches=True,
     )
-    kwargs = dict(
-        output_mode="update", assert_single_batch=True,
-        state_partitions=4, no_data_batches=True,
+    # every started run is awaited (and its scratch checkpoint cleaned)
+    # even when one raises; the first exception re-raises after both
+    # settle (ADVICE r17)
+    overlap([partial(finish_memory_sink, r) for r in (banded, event_ttl)])
+    cols = ["vec_id", "dup_of", "admitted"]
+    return (
+        combine_gate_tables(spark.table(banded["name"]))
+        .select(F.lit("banded2").alias("dial"), *cols)
+        .unionByName(
+            spark.table(event_ttl["name"])
+            .select(F.lit("event_ttl").alias("dial"), *cols)
+        )
+        .orderBy("dial", "vec_id")
     )
-    return gated, kwargs, (lambda df: df)
 
 
-def q_stream_neardup_gate_event_ttl(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import uuid as _uuid
-
-    from data_engineer_development_spark.streaming.windows import (
-        run_to_memory_sink,
-    )
-
-    gated, kwargs, post = _prepare_gate_event_ttl(spark, sf_dir)
-    name = f"q_ndgate_ettl_{_uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(gated, name, **kwargs)
-    return post(spark.table(name)).orderBy("vec_id")
+_STREAM_NDGATE_DIALS_SQL = f"""
+SELECT 'banded2' AS dial, vec_id, dup_of, admitted
+FROM ({_STREAM_NDGATE_BANDED_SQL}) b
+UNION ALL
+SELECT 'event_ttl' AS dial, vec_id, dup_of, admitted
+FROM ({_STREAM_NDGATE_SQL}) s
+ORDER BY dial, vec_id
+"""
 
 
 # --------------------------------------------------------------------------
@@ -896,93 +873,13 @@ FROM u
 """
 
 
-# --------------------------------------------------------------------------
-# FOLDED gate entry — r16 (VERDICT r15 #7, COVERAGE.md rotation policy
-# rule 4): the registry's two gate dial rows (banded tables=2, the r11
-# default; event-time-TTL self-expiry, registered r12) collapse into ONE
-# parameterized entry whose output unions both dials under a `dial`
-# column. Each dial still executes its own REAL streaming run (two
-# run_to_memory_sink stream starts — the kernels, state layouts, and
-# no-data-batch behavior are exactly the old entries'), so folding costs
-# zero driver-graded surface while freeing a rotation slot. The oracle
-# wraps each old oracle verbatim as a dial-tagged subquery.
-# --------------------------------------------------------------------------
-def q_stream_neardup_gate_dials(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    # OPTIMIZATION r17 (guide §2.6 — overlap independent jobs): the two
-    # dials are fully independent streaming runs whose cost is dominated
-    # by stream-start/per-batch constants, not CPU — running them
-    # sequentially left the cluster idle through each one's scheduling
-    # gaps. Start BOTH queries, then await both: each query's session
-    # confs are frozen at its own .start() (start_to_memory_sink), so the
-    # differing no-data-batch settings cannot leak across. Output is
-    # byte-identical to the sequential fold (each dial's stream, state
-    # layout, and batch count are unchanged; the union/ordering is the
-    # same). Measured at sf0.1 (isolated min-of-5, calibration-bracketed):
-    # 6.11 s sequential → 4.46 s concurrent.
-    import uuid as _uuid
-
-    from data_engineer_development_spark.streaming.windows import (
-        finish_memory_sink,
-        start_to_memory_sink,
-    )
-
-    runs = []
-    for tag, prep in (
-        ("banded2", _prepare_gate_banded),
-        ("event_ttl", _prepare_gate_event_ttl),
-    ):
-        gated, kwargs, post = prep(spark, sf_dir)
-        name = f"q_ndgate_{tag}_{_uuid.uuid4().hex[:8]}"
-        runs.append(
-            (tag, name, post, start_to_memory_sink(gated, name, **kwargs))
-        )
-    # finish EVERY started run even when one raises (ADVICE r17): an
-    # early failure must not leave the sibling stream unawaited with its
-    # scratch checkpoint leaked; the first exception re-raises after all
-    # runs have been awaited and cleaned.
-    first_exc: Exception | None = None
-    for *_, run in runs:
-        try:
-            finish_memory_sink(run)
-        except Exception as exc:  # noqa: BLE001 — re-raised below
-            if first_exc is None:
-                first_exc = exc
-    if first_exc is not None:
-        raise first_exc
-    cols = ["vec_id", "dup_of", "admitted"]
-    parts = [
-        post(spark.table(name)).select(F.lit(tag).alias("dial"), *cols)
-        for tag, name, post, _ in runs
-    ]
-    return parts[0].unionByName(parts[1]).orderBy("dial", "vec_id")
-
-
-_STREAM_NDGATE_DIALS_SQL = f"""
-SELECT 'banded2' AS dial, vec_id, dup_of, admitted
-FROM ({_STREAM_NDGATE_BANDED_SQL}) b
-UNION ALL
-SELECT 'event_ttl' AS dial, vec_id, dup_of, admitted
-FROM ({_STREAM_NDGATE_SQL}) s
-ORDER BY dial, vec_id
-"""
-
-
-# stream_neardup_gate's REGISTERED shape is the dial-folded union as of
-# r16 (banded tables=2 — the r11 default, VERDICT r10 #2's measured
-# recall dial — plus the r12 event-time-TTL run, both executed for
-# real). The single-table variant stays available as
-# q_stream_neardup_gate (code + tests + _STREAM_NDGATE_SQL), the
-# unfolded builders as q_stream_neardup_gate_banded /
-# q_stream_neardup_gate_event_ttl.
 QUERIES = {
     "sim_cosine_topk": q_sim_cosine_topk,
     "sim_neardup": q_sim_neardup,
     "sim_lsh_buckets": q_sim_lsh_buckets,
     "semantic_dedup": q_semantic_dedup,
     "semdedup_recall_eval": q_semdedup_recall_eval,
-    "stream_neardup_gate": q_stream_neardup_gate_dials,
+    "stream_neardup_gate": q_stream_neardup_gate,
     "semdedup_incremental": q_semdedup_incremental,
     "semdedup_sharded": q_semdedup_sharded,
     "gate_recall_eval": q_gate_recall_eval,
@@ -999,7 +896,7 @@ ORACLE = {
     "semdedup_recall_eval": _SEMDEDUP_RECALL_SQL,
     # both dials' batch duals, dial-tagged; the event_ttl side's
     # single-table greedy is exact because its run is single-data-batch
-    # (see q_stream_neardup_gate_event_ttl's block comment)
+    # (see q_stream_neardup_gate's block comment)
     "stream_neardup_gate": _STREAM_NDGATE_DIALS_SQL,
     "semdedup_incremental": _SEMDEDUP_INCR_SQL,
     "semdedup_sharded": _SEMDEDUP_SHARDED_SQL,

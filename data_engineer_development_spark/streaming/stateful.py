@@ -302,11 +302,12 @@ def user_stats_tws(events: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming embedding near-dup gate: dedup-at-ingest for an embedding
 # stream. Each arriving vector is quantized on the int8 max-abs grid and
-# sign-LSH-bucketed (both pure stateless projections — stream-safe); keyed
-# state per BUCKET holds every vector seen so far, and a vector is
-# ADMITTED only if no lower-id same-bucket vector covers it at quantized
-# cosine ≥ tau — the family's drop-if-any-earlier-neighbor representative
-# rule (operators/similarity.semdedup), evaluated incrementally at ingest.
+# sign-LSH-bucketed once per table (both pure stateless projections —
+# stream-safe); keyed state per (table, bucket) holds every vector seen
+# so far, and a vector is ADMITTED by a table only if no lower-id
+# same-bucket vector covers it at quantized cosine ≥ tau — the family's
+# drop-if-any-earlier-neighbor representative rule
+# (operators/similarity.semdedup), evaluated incrementally at ingest.
 #
 # State is O(vectors per bucket): at production volume you would TTL the
 # state (watermark + timeout) or raise `planes` so buckets stay small —
@@ -324,32 +325,16 @@ GATE_STATE_SCHEMA = StructType(
         StructField("ids", ArrayType(LongType())),
         # seen quantized vectors, flattened row-major (len = n_seen * dims)
         StructField("flat", ArrayType(LongType())),
-    ]
-)
-
-#: event-time TTL variant: state additionally carries the max event time
-#: (epoch ms) this bucket has seen, so re-arming the timeout never
-#: regresses under out-of-order arrivals within the watermark delay.
-GATE_EVENT_STATE_SCHEMA = StructType(
-    [
-        StructField("ids", ArrayType(LongType())),
-        StructField("flat", ArrayType(LongType())),
+        # max event time (epoch ms) the group has seen, so re-arming the
+        # event-time timeout never regresses under out-of-order arrivals
+        # within the watermark delay; NULL unless event_ttl_ms is set
         StructField("max_ets", LongType()),
     ]
 )
 
+#: one verdict row per (vector, table); with tables > 1 the final
+#: admission is the AND over tables (combine_gate_tables).
 GATE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("bucket", LongType()),
-        StructField("dup_of", LongType()),
-        StructField("admitted", IntegerType()),
-    ]
-)
-
-#: banded (multi-table) gate: one verdict row per (vector, table); the
-#: final admission is the AND over tables (combine_gate_tables).
-BANDED_GATE_OUTPUT_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
         StructField("tbl", IntegerType()),
@@ -364,10 +349,13 @@ def make_neardup_gate_update(
     dims: int,
     tau: float,
     ttl_ms: int | None = None,
-    banded: bool = False,
     event_ttl_ms: int | None = None,
 ):
-    """Kernel factory (dims/tau/ttl are plan-time constants, closed over).
+    """Kernel factory (dims/tau/ttl are plan-time constants, closed over)
+    for groups keyed by (tbl, bucket): the per-group greedy is the same
+    for every table (a table is just an independent bucketing of the same
+    stream), and the cross-table AND happens downstream
+    (combine_gate_tables).
 
     ``ttl_ms`` is the bounded-state dial: when set, a bucket whose state
     has seen no arrival for that long is EVICTED (processing-time
@@ -385,14 +373,8 @@ def make_neardup_gate_update(
     measured replay weakness of processing-time eviction (BASELINE.md
     round-11 gate TTL audit: replay loss up to 1.36× the in-order loss).
     Rows must carry an ``ets`` epoch-ms column and the query must use
-    ``GATE_EVENT_STATE_SCHEMA`` + EventTimeTimeout (a watermark is
-    mandatory — Spark rejects EventTimeTimeout without one).
-
-    ``banded`` switches the key shape to (tbl, bucket) for the
-    multi-table gate: the per-group greedy is UNCHANGED (a table is just
-    an independent bucketing of the same stream), the verdict row gains
-    the table index, and the cross-table AND happens downstream
-    (combine_gate_tables).
+    EventTimeTimeout (a watermark is mandatory — Spark rejects
+    EventTimeTimeout without one).
     """
     import numpy as np
 
@@ -409,103 +391,83 @@ def make_neardup_gate_update(
             # state and emit nothing (eviction, not output)
             state.remove()
             return
-        max_ets = None
-        if state.exists:
-            if event_ttl_ms is not None:
-                sids, flat, max_ets = state.get
-                # SELF-EXPIRY on data arrival: Spark only invokes the
-                # timeout branch for groups WITHOUT new data in a batch,
-                # so a bucket receiving data would otherwise consult
-                # expired-but-unremoved state. Checking the watermark
-                # here makes eviction deterministic in EVENT time — a
-                # bucket idle past the TTL is gone no matter how arrivals
-                # interleave with the expiry.
-                if int(state.getCurrentWatermarkMs()) > int(max_ets) + event_ttl_ms:
-                    sids, flat, max_ets = [], [], None
-            else:
-                sids, flat = state.get
-            seen_ids = np.array(sids, dtype=np.int64)
-            seen = (
-                np.array(flat, dtype=np.int64).reshape(-1, dims)
-                if len(flat)
-                else np.empty((0, dims), dtype=np.int64)
-            )
-        else:
-            seen_ids = np.empty(0, dtype=np.int64)
-            seen = np.empty((0, dims), dtype=np.int64)
+        sids, flat, max_ets = state.get if state.exists else ([], [], None)
+        # SELF-EXPIRY on data arrival: Spark only invokes the timeout
+        # branch for groups WITHOUT new data in a batch, so a bucket
+        # receiving data would otherwise consult expired-but-unremoved
+        # state. Checking the watermark here makes eviction deterministic
+        # in EVENT time — a bucket idle past the TTL is gone no matter how
+        # arrivals interleave with the expiry.
+        if (
+            event_ttl_ms is not None
+            and state.exists
+            and int(state.getCurrentWatermarkMs()) > int(max_ets) + event_ttl_ms
+        ):
+            sids, flat, max_ets = [], [], None
+        seen_ids = np.array(sids, dtype=np.int64)
+        seen = np.array(flat, dtype=np.int64).reshape(-1, dims)
         # concat the batch's Arrow chunks BEFORE sorting: chunks interleave
         # ids, and the greedy rule needs the whole group in id order
         chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values("vec_id")
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            B = np.vstack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-            )
-            bqn = (B * B).sum(axis=1)
-            dup = np.full(len(ids), -1, dtype=np.int64)
-            if len(seen_ids):
-                sqn = (seen * seen).sum(axis=1)
-                cov_s = _qcos(B, bqn, seen, sqn) >= tau
-                for j in range(len(ids)):
-                    if cov_s[j].any():
-                        dup[j] = int(seen_ids[cov_s[j]].min())
-            # row i covers column j, i < j
-            cov_b = np.triu(_qcos(B, bqn, B, bqn) >= tau, k=1)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks).sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        B = np.vstack([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+        bqn = (B * B).sum(axis=1)
+        dup = np.full(len(ids), -1, dtype=np.int64)
+        if len(seen_ids):
+            sqn = (seen * seen).sum(axis=1)
+            cov_s = _qcos(B, bqn, seen, sqn) >= tau
             for j in range(len(ids)):
-                if cov_b[:, j].any():
-                    # ids sorted asc → argmax (first True) = lowest id
-                    cand = int(ids[cov_b[:, j].argmax()])
-                    dup[j] = cand if dup[j] < 0 else min(dup[j], cand)
-            cols: dict = {"vec_id": ids}
-            if banded:
-                cols["tbl"] = np.full(len(ids), int(key[0]), dtype=np.int32)
-            cols["bucket"] = np.full(
-                len(ids), int(key[1] if banded else key[0]), dtype=np.int64
+                if cov_s[j].any():
+                    dup[j] = int(seen_ids[cov_s[j]].min())
+        # row i covers column j, i < j
+        cov_b = np.triu(_qcos(B, bqn, B, bqn) >= tau, k=1)
+        for j in range(len(ids)):
+            if cov_b[:, j].any():
+                # ids sorted asc → argmax (first True) = lowest id
+                cand = int(ids[cov_b[:, j].argmax()])
+                dup[j] = cand if dup[j] < 0 else min(dup[j], cand)
+        out = pd.DataFrame(
+            {
+                "vec_id": ids,
+                "tbl": np.full(len(ids), int(key[0]), dtype=np.int32),
+                "bucket": np.full(len(ids), int(key[1]), dtype=np.int64),
+                "dup_of": pd.array(
+                    [None if d < 0 else int(d) for d in dup], dtype="Int64"
+                ),
+                "admitted": (dup < 0).astype("int32"),
+            }
+        )
+        seen_ids = np.concatenate([seen_ids, ids])
+        seen = np.vstack([seen, B])
+        if event_ttl_ms is not None:
+            # max over state + batch: out-of-order arrivals must never
+            # move the eviction horizon BACKWARD. ets is the UTC epoch-ms
+            # LONG the gate projects with unix_millis (NOT the watermarked
+            # timestamp column itself: applyInPandasWithState renders
+            # timestamps to pandas in the SESSION timezone tz-naive, so
+            # converting here would shift by the UTC offset and break the
+            # comparison against getCurrentWatermarkMs/setTimeoutTimestamp,
+            # which are true UTC epoch ms — a non-UTC session would evict
+            # live state on every batch or arm an already-expired timeout).
+            batch_max = int(pdf["ets"].max())
+            max_ets = batch_max if max_ets is None else max(int(max_ets), batch_max)
+        state.update(
+            (
+                [int(x) for x in seen_ids],
+                [int(x) for x in seen.reshape(-1)],
+                max_ets,
             )
-            cols["dup_of"] = pd.array(
-                [None if d < 0 else int(d) for d in dup], dtype="Int64"
-            )
-            cols["admitted"] = (dup < 0).astype("int32")
-            out = pd.DataFrame(cols)
-            seen_ids = np.concatenate([seen_ids, ids])
-            seen = np.vstack([seen, B])
-            if event_ttl_ms is not None:
-                # max over state + batch: out-of-order arrivals must
-                # never move the eviction horizon BACKWARD. ets is the
-                # UTC epoch-ms LONG the gate projects with unix_millis
-                # (NOT the watermarked timestamp column itself:
-                # applyInPandasWithState renders timestamps to pandas in
-                # the SESSION timezone tz-naive, so converting here would
-                # shift by the UTC offset and break the comparison
-                # against getCurrentWatermarkMs/setTimeoutTimestamp,
-                # which are true UTC epoch ms — a non-UTC session would
-                # evict live state on every batch or arm an
-                # already-expired timeout).
-                batch_max = int(pdf["ets"].max())
-                max_ets = (
-                    batch_max if max_ets is None else max(int(max_ets), batch_max)
-                )
-                state.update(
-                    (
-                        [int(x) for x in seen_ids],
-                        [int(x) for x in seen.reshape(-1)],
-                        max_ets,
-                    )
-                )
-                state.setTimeoutTimestamp(max_ets + event_ttl_ms)
-            else:
-                state.update(
-                    (
-                        [int(x) for x in seen_ids],
-                        [int(x) for x in seen.reshape(-1)],
-                    )
-                )
-                if ttl_ms is not None:
-                    # re-arm on every arrival: idle-bucket eviction, not
-                    # a hard cap on bucket lifetime
-                    state.setTimeoutDuration(ttl_ms)
-            yield out
+        )
+        if event_ttl_ms is not None:
+            state.setTimeoutTimestamp(max_ets + event_ttl_ms)
+        elif ttl_ms is not None:
+            # re-arm on every arrival: idle-bucket eviction, not a hard
+            # cap on bucket lifetime
+            state.setTimeoutDuration(ttl_ms)
+        yield out
 
     return _update
 
@@ -515,16 +477,15 @@ def stream_neardup_gate(
     tau: float = 0.4,
     planes: int = 2,
     dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     ttl_ms: int | None = None,
     tables: int = 1,
     event_time_col: str | None = None,
     event_ttl_ms: int | None = None,
     watermark_delay: str = "10 seconds",
 ) -> DataFrame:
-    """(vec_id, bucket, dup_of, admitted) per arriving vector — see the
-    block comment above for semantics and the 100 TB state story.
+    """(vec_id, tbl, bucket, dup_of, admitted) per arriving vector and
+    table, from a ``(vec_id, embedding)`` stream — see the block comment
+    above for semantics and the 100 TB state story.
 
     ``ttl_ms`` bounds state at volume: an idle bucket's seen-set is
     evicted after that many ms of processing time with no arrival (the
@@ -548,148 +509,82 @@ def stream_neardup_gate(
     ``tables`` is the RECALL dial (multi-table / banded LSH): table t
     re-buckets the same stream with the disjoint plane slice
     t·planes … t·planes+planes−1 (table 0 is bit-identical to the
-    single-table gate), state is keyed by (tbl, bucket), and a vector is
-    dropped iff ANY table sees an earlier covering neighbor — the exact
-    banding the batch dedup_minhash_lsh family uses. Measured on the
-    fixture (BASELINE.md round-10 gate audit): planes=2 recall 0.38–0.48
-    single-table → 0.63–0.72 at tables=2 and 0.79–0.83 at tables=3,
-    while state scales ×tables and per-bucket Gram cost is unchanged.
-    With tables>1 the output is ONE ROW PER (vector, table)
-    (BANDED_GATE_OUTPUT_SCHEMA); fold it with combine_gate_tables once
-    the stream is drained (or in a foreachBatch sink)."""
+    single-table bucketing), state is keyed by (tbl, bucket), and a
+    vector is dropped iff ANY table sees an earlier covering neighbor —
+    the exact banding the batch dedup_minhash_lsh family uses. Measured
+    on the fixture (BASELINE.md round-10 gate audit): planes=2 recall
+    0.38–0.48 single-table → 0.63–0.72 at tables=2 and 0.79–0.83 at
+    tables=3, while state scales ×tables and per-bucket Gram cost is
+    unchanged. The output is ONE ROW PER (vector, table); with tables>1
+    fold it with combine_gate_tables once the stream is drained (or in a
+    foreachBatch sink)."""
     from data_engineer_development_spark.operators.similarity import (
         _with_quantized,
         bucket_assign,
     )
 
-    # the kernel and the fixed output/state schemas name the id column
-    # vec_id; an arbitrary id_col would KeyError inside the stateful op
-    # mid-query — fail at plan time instead. Rename upstream:
-    # df.withColumnRenamed("doc_id", "vec_id").
-    # caller-facing contract guards (ADVICE r11): real errors, not
-    # asserts — `python -O` strips asserts and the failure would then be
-    # a KeyError inside the stateful op mid-query
-    if id_col != "vec_id":
-        raise ValueError(
-            f"stream_neardup_gate: id_col={id_col!r} unsupported — the "
-            "state kernel and GATE_*_SCHEMA pin 'vec_id'; rename the "
-            "column upstream"
-        )
+    # caller-facing contract guard (ADVICE r11): a real error at plan
+    # time, not an assert — `python -O` strips asserts
+    if event_ttl_ms is not None and not event_time_col:
+        raise ValueError("event_ttl_ms requires event_time_col")
+    update = make_neardup_gate_update(
+        dims, tau, ttl_ms=ttl_ms, event_ttl_ms=event_ttl_ms
+    )
     if event_ttl_ms is not None:
-        if not event_time_col:
-            raise ValueError("event_ttl_ms requires event_time_col")
-        if ttl_ms is not None:
-            raise ValueError(
-                "ttl_ms and event_ttl_ms are mutually exclusive"
-            )
         # the event-time column rides through the quantizer's Python node
         # unchanged, so the watermark binds to it on the quantized frame
         # (a tag set upstream would not survive that node);
         # EventTimeTimeout without a watermark is a query-start error, so
         # failure is loud, not silent
         q = _with_quantized(
-            vectors, id_col, vec_col, event_time_col
+            vectors, "vec_id", "embedding", event_time_col
         ).withWatermark(event_time_col, watermark_delay)
-        usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
-        if tables == 1:
-            bucketed = bucket_assign(
-                usable, planes=planes, dims=dims, vec_col=vec_col
-            )
-            return (
-                # the WATERMARKED timestamp column itself must reach the
-                # stateful op (a derived long alone loses the watermark
-                # tag and EventTimeTimeout then fails analysis) — it
-                # rides along as __wm_ts, UNUSED by the kernel, while
-                # the kernel reads ets = unix_millis(ts): a session-
-                # timezone-independent UTC epoch-ms long, matching the
-                # UTC-epoch GroupState watermark/timeout APIs (pandas
-                # renders timestamps session-local tz-naive, so deriving
-                # ms kernel-side would shift by the UTC offset).
-                bucketed.select(
-                    id_col,
-                    "qv",
-                    "bucket",
-                    F.col(event_time_col).alias("__wm_ts"),
-                    F.expr(f"unix_millis({event_time_col})").alias("ets"),
-                )
-                .groupBy("bucket")
-                .applyInPandasWithState(
-                    make_neardup_gate_update(
-                        dims, tau, event_ttl_ms=event_ttl_ms
-                    ),
-                    outputStructType=GATE_OUTPUT_SCHEMA,
-                    stateStructType=GATE_EVENT_STATE_SCHEMA,
-                    outputMode="update",
-                    timeoutConf=GroupStateTimeout.EventTimeTimeout,
-                )
-            )
-        # banded + event TTL: same per-table unpivot as the plain banded
-        # gate, the watermarked timestamp riding along into every
-        # (tbl, bucket) group; each table's state expires independently
-        # on the same global watermark
-        b = usable
-        for t in range(tables):
-            b = bucket_assign(
-                b, planes=planes, dims=dims, vec_col=vec_col,
-                plane_offset=t * planes, out_col=f"__b{t}",
-            )
-        stack = ", ".join(f"cast({t} as int), __b{t}" for t in range(tables))
-        exploded = b.selectExpr(
-            id_col, "qv", f"{event_time_col} as __wm_ts",
+        # the WATERMARKED timestamp column itself must reach the stateful
+        # op (a derived long alone loses the watermark tag and
+        # EventTimeTimeout then fails analysis) — it rides along as
+        # __wm_ts, UNUSED by the kernel, while the kernel reads
+        # ets = unix_millis(ts): a session-timezone-independent UTC
+        # epoch-ms long, matching the UTC-epoch GroupState
+        # watermark/timeout APIs (pandas renders timestamps session-local
+        # tz-naive, so deriving ms kernel-side would shift by the UTC
+        # offset). Each table's state expires independently on the same
+        # global watermark.
+        event_cols = [
+            f"{event_time_col} as __wm_ts",
             f"unix_millis({event_time_col}) as ets",
-            f"stack({tables}, {stack}) as (tbl, bucket)",
+        ]
+        timeout = GroupStateTimeout.EventTimeTimeout
+    else:
+        q = _with_quantized(vectors, "vec_id", "embedding")
+        event_cols = []
+        timeout = (
+            GroupStateTimeout.NoTimeout
+            if ttl_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
         )
-        return exploded.groupBy("tbl", "bucket").applyInPandasWithState(
-            make_neardup_gate_update(
-                dims, tau, banded=True, event_ttl_ms=event_ttl_ms
-            ),
-            outputStructType=BANDED_GATE_OUTPUT_SCHEMA,
-            stateStructType=GATE_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-
-    q = _with_quantized(vectors, id_col, vec_col)
-    usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if ttl_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    if tables == 1:
-        bucketed = bucket_assign(
-            usable, planes=planes, dims=dims, vec_col=vec_col
-        )
-        return (
-            bucketed.select(id_col, "qv", "bucket")
-            .groupBy("bucket")
-            .applyInPandasWithState(
-                make_neardup_gate_update(dims, tau, ttl_ms=ttl_ms),
-                outputStructType=GATE_OUTPUT_SCHEMA,
-                stateStructType=GATE_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=timeout,
-            )
-        )
-    # banded: per-table bucket columns (stateless projections over the
-    # same literal plane family), unpivoted to (tbl, bucket) rows via
-    # stack — still stateless, so the stream stays a single stateful op.
-    b = usable
+    b = q.filter((F.size("embedding") == dims) & (F.col("qn") > 0))
+    # per-table bucket columns (stateless projections over the same
+    # literal plane family), unpivoted to (tbl, bucket) rows via stack —
+    # still stateless, so the stream stays a single stateful op
     for t in range(tables):
         b = bucket_assign(
-            b, planes=planes, dims=dims, vec_col=vec_col,
+            b, planes=planes, dims=dims,
             plane_offset=t * planes, out_col=f"__b{t}",
         )
     stack = ", ".join(f"cast({t} as int), __b{t}" for t in range(tables))
-    exploded = b.selectExpr(
-        id_col, "qv", f"stack({tables}, {stack}) as (tbl, bucket)"
-    )
-    return exploded.groupBy("tbl", "bucket").applyInPandasWithState(
-        make_neardup_gate_update(dims, tau, ttl_ms=ttl_ms, banded=True),
-        outputStructType=BANDED_GATE_OUTPUT_SCHEMA,
-        stateStructType=GATE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
+    return (
+        b.selectExpr(
+            "vec_id", "qv", *event_cols,
+            f"stack({tables}, {stack}) as (tbl, bucket)",
+        )
+        .groupBy("tbl", "bucket")
+        .applyInPandasWithState(
+            update,
+            outputStructType=GATE_OUTPUT_SCHEMA,
+            stateStructType=GATE_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=timeout,
+        )
     )
 
 

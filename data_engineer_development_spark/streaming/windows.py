@@ -62,29 +62,19 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.readStream.format("parquet").schema(schema).load(src)
 
 
-def stream_events(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (parquet dir or single file).
 
-    The testdata events.parquet stores TIMESTAMP(NANOS) — same nano→micro
-    conversion as the batch loader so batch and stream agree bit-for-bit.
+    The testdata events.parquet stores TIMESTAMP(NANOS) — same
+    physical-type normalization as the batch loader (nanos-as-long or
+    timestamp_ntz → LTZ) so batch and stream agree bit-for-bit;
+    watermarks additionally require LTZ, which normalize_event_ts
+    guarantees.
     """
-    reader = spark.readStream.format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = f"{sf_dir}/events.parquet"
-    if os.path.isfile(src):
-        src = _as_stream_dir(src, f"events-{abs(hash(sf_dir))}")
-    # same physical-type normalization as the batch loader (nanos-as-long or
-    # timestamp_ntz → LTZ) so batch and stream agree bit-for-bit; watermarks
-    # additionally require LTZ, which normalize_event_ts guarantees
     from data_engineer_development_spark.sources.readers import normalize_event_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    df = reader.schema(batch_schema).load(src)
-    return normalize_event_ts(df)
+    return normalize_event_ts(stream_table(spark, sf_dir, "events"))
 
 
 def tumbling_counts(

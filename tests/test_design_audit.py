@@ -11,7 +11,9 @@ query scratch dirs are ``tempfile.TemporaryDirectory``, and the choice of
 RAM-backed checkpoint storage is made in one module. The quantized cosine
 of the semantic-dedup family is one function, ``similarity._qcos``. The
 snapshot log is decoded in one function, ``snapshots._manifest``, and its
-on-disk paths and filesystem are resolved in one helper each.
+on-disk paths and filesystem are resolved in one helper each. The
+streaming near-dup gate is one stateful pipeline with one state and one
+output schema, whatever its dials.
 """
 
 from __future__ import annotations
@@ -104,3 +106,27 @@ def test_snapshot_log_has_one_decode_and_one_path_rule():
     assert in_manifest and src.count('["action"]') == in_manifest
     assert src.count("getFileSystem(") == 1
     assert src.count("@{") == 1
+
+
+def test_neardup_gate_is_one_stateful_pipeline():
+    """``stream_neardup_gate`` makes ONE ``applyInPandasWithState`` call —
+    a table count of 1 is a stack of one, and the TTL dials only pick the
+    timeout — and ``stateful.py`` defines one gate state schema and one
+    gate output schema."""
+    import inspect
+
+    from data_engineer_development_spark.streaming import stateful
+
+    body = inspect.getsource(stateful.stream_neardup_gate)
+    assert body.count(".applyInPandasWithState(") == 1
+    names = [
+        t.id
+        for node in ast.parse(inspect.getsource(stateful)).body
+        if isinstance(node, ast.Assign)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    ]
+    assert sorted(n for n in names if re.search(r"GATE_\w*_SCHEMA$", n)) == [
+        "GATE_OUTPUT_SCHEMA",
+        "GATE_STATE_SCHEMA",
+    ]

@@ -15,7 +15,10 @@ from data_engineer_development_spark.medallion import (
     RAW_COLUMNS,
     run_civil_cases_pipeline,
 )
-from data_engineer_development_spark.pipeline import split_sql_script
+from data_engineer_development_spark.pipeline import (
+    run_sql_script,
+    split_sql_script,
+)
 
 
 def _mk_row(**over) -> dict:
@@ -144,6 +147,23 @@ def test_sql_script_splitter_escaped_quotes():
     assert len(stmts) == 2
     assert "it''s; fine" in stmts[0]
     assert stmts[1] == "SELECT 2 AS y"
+
+
+def test_run_sql_script_runs_statements_in_order(spark):
+    # K3: one multi-statement script, each statement executed in order —
+    # the second reads the view the first created
+    n = run_sql_script(
+        spark,
+        """
+        #TRANSACT
+        CREATE OR REPLACE TEMP VIEW t_script_a AS SELECT id FROM range(4);
+        -- a comment line
+        CREATE OR REPLACE TEMP VIEW t_script_b AS
+            SELECT SUM(id) AS s, 'x;y' AS lit FROM t_script_a;
+        """,
+    )
+    assert n == 2
+    assert tuple(spark.table("t_script_b").first()) == (6, "x;y")
 
 
 def test_tag_from_template_mirrors_reference(spark):

@@ -107,7 +107,7 @@ def test_random_multisets_match_global_window(spark):
     def check(keys):
         rows = [(k, i) for i, k in enumerate(keys)]
         df = spark.createDataFrame(rows, "k int, u int").repartition(5)
-        got = with_global_rank(df, "k", "u", rank_col="r", parts=4)
+        got = with_global_rank(df, "k", "u", rank_col="r")
         joined = got.join(_reference_rank(df, "k", "u"), ["k", "u"])
         assert joined.filter(F.col("r") != F.col("expected")).count() == 0
         spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 """Source/sink/DDL coverage: gz byte-clean read (S2), partition discovery +
 pruning (S5/K5), schema update (K7), catalog views and properties (K6/K12/S9),
-HTTP landing fetch (S1, served locally)."""
+zone drop (K4), HTTP landing fetch (S1, served locally)."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import os
 import threading
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -93,6 +94,22 @@ def test_views_and_table_properties(spark):
     assert props["zone"] == "trusted" and props["steward"] == "etl"
     assert catalog.table_exists(spark, "t_cat.base")
     assert not catalog.table_exists(spark, "t_cat.nope")
+
+
+def test_drop_zone_cascade_and_idempotence(spark):
+    # K4: drop_zone is create_zone's inverse — CASCADE by default, a no-op
+    # on a missing zone, and a non-cascading drop refuses a non-empty zone
+    fresh_db(spark, "t_dropz")
+    catalog.create_view(spark, "t_dropz.v", "SELECT 1 AS x")
+    with pytest.raises(AnalysisException, match="SCHEMA_NOT_EMPTY"):
+        catalog.drop_zone(spark, "t_dropz", cascade=False)
+    assert spark.catalog.databaseExists("t_dropz")
+    catalog.drop_zone(spark, "t_dropz")
+    assert not spark.catalog.databaseExists("t_dropz")
+    catalog.drop_zone(spark, "t_dropz")  # idempotent
+    catalog.create_zone(spark, "t_dropz")
+    catalog.drop_zone(spark, "t_dropz", cascade=False)  # empty zone
+    assert not spark.catalog.databaseExists("t_dropz")
 
 
 def test_http_fetch_to_landing(tmp_path):

@@ -158,6 +158,7 @@ def test_stream_neardup_gate_known_vectors(spark, tmp_path):
     assert got[2]["admitted"] == 1
     assert got[4]["admitted"] == 0 and got[4]["dup_of"] == 0
     assert got[0]["bucket"] == got[1]["bucket"] == got[4]["bucket"]
+    assert {r["tbl"] for r in got.values()} == {0}
 
     # TTL'd variant must run end-to-end under ProcessingTimeTimeout (no
     # timeout fires within a single drain — output identical)
@@ -229,12 +230,13 @@ def test_stream_neardup_gate_kernel_multi_batch_state():
         "vec_id": [10, 11],
         "qv": [[127, 0, 0, 0], [0, 127, 0, 0]],
     })
-    (out1,) = list(kernel((7,), iter([b1]), state))
+    (out1,) = list(kernel((0, 7), iter([b1]), state))
     got1 = {r.vec_id: r for r in out1.itertuples()}
     assert got1[10].admitted == 1 and pd.isna(got1[10].dup_of)
     assert got1[11].admitted == 1 and pd.isna(got1[11].dup_of)
-    sids, flat = state.get
+    sids, flat, max_ets = state.get
     assert sids == [10, 11] and len(flat) == 8
+    assert max_ets is None  # no event-time dial
 
     # batch 2: id 3 (smaller id, later arrival) parallel to state-10 →
     # rejected with dup_of 10; id 13 is covered by BOTH state-10 and
@@ -243,12 +245,12 @@ def test_stream_neardup_gate_kernel_multi_batch_state():
         "vec_id": [3, 13],
         "qv": [[127, 0, 0, 0], [100, 0, 0, 0]],
     })
-    (out2,) = list(kernel((7,), iter([b2]), state))
+    (out2,) = list(kernel((0, 7), iter([b2]), state))
     got2 = {r.vec_id: r for r in out2.itertuples()}
     assert got2[3].admitted == 0 and got2[3].dup_of == 10
     assert got2[13].admitted == 0 and got2[13].dup_of == 3
-    assert all(r.bucket == 7 for r in out2.itertuples())
-    sids, flat = state.get
+    assert all(r.tbl == 0 and r.bucket == 7 for r in out2.itertuples())
+    sids, flat, _ = state.get
     assert sids == [10, 11, 3, 13] and len(flat) == 16
     assert np.array(flat[8:12]).tolist() == [127, 0, 0, 0]
 
@@ -256,7 +258,7 @@ def test_stream_neardup_gate_kernel_multi_batch_state():
     before = state.get
     empty = pd.DataFrame({"vec_id": pd.Series([], dtype="int64"),
                           "qv": pd.Series([], dtype="object")})
-    assert list(kernel((7,), iter([empty]), state)) == []
+    assert list(kernel((0, 7), iter([empty]), state)) == []
     assert state.get == before
 
 
@@ -275,7 +277,7 @@ def test_stream_neardup_gate_kernel_ttl_eviction():
 
     state = _FakeGroupState()
     b1 = pd.DataFrame({"vec_id": [10], "qv": [[127, 0, 0, 0]]})
-    (out1,) = list(kernel((7,), iter([b1]), state))
+    (out1,) = list(kernel((0, 7), iter([b1]), state))
     assert out1["admitted"].tolist() == [1]
     assert state.exists and state.timeout_set_ms == 60_000
 
@@ -283,14 +285,14 @@ def test_stream_neardup_gate_kernel_ttl_eviction():
     # no output rows
     timed_out = _FakeGroupState(timed_out=True)
     timed_out.update(state.get)
-    assert list(kernel((7,), iter([]), timed_out)) == []
+    assert list(kernel((0, 7), iter([]), timed_out)) == []
     assert not timed_out.exists
 
     # the duplicate of evicted id 10 is re-admitted into fresh state
     # (a new-arrival invocation always comes in with hasTimedOut=False)
     timed_out.hasTimedOut = False
     b2 = pd.DataFrame({"vec_id": [20], "qv": [[127, 0, 0, 0]]})
-    (out2,) = list(kernel((7,), iter([b2]), timed_out))
+    (out2,) = list(kernel((0, 7), iter([b2]), timed_out))
     assert out2["admitted"].tolist() == [1]
     assert out2["dup_of"].isna().all()
 
@@ -298,21 +300,21 @@ def test_stream_neardup_gate_kernel_ttl_eviction():
     # queries throw if it is ever invoked)
     plain = _FakeGroupState()
     no_ttl = make_neardup_gate_update(dims=4, tau=0.9)
-    list(no_ttl((7,), iter([b1]), plain))
+    list(no_ttl((0, 7), iter([b1]), plain))
     assert plain.timeout_set_ms is None
 
 
 def test_stream_neardup_gate_kernel_banded_key_shape():
-    """banded=True keys the kernel by (tbl, bucket): the verdict rows
-    carry the table index, the greedy within the group is unchanged, and
-    the same vectors land in independent state per table."""
+    """The kernel is keyed by (tbl, bucket): the verdict rows carry the
+    table index, the greedy within the group is unchanged, and the same
+    vectors land in independent state per table."""
     import pandas as pd
 
     from data_engineer_development_spark.streaming.stateful import (
         make_neardup_gate_update,
     )
 
-    kernel = make_neardup_gate_update(dims=4, tau=0.9, banded=True)
+    kernel = make_neardup_gate_update(dims=4, tau=0.9)
     state = _FakeGroupState()
     b = pd.DataFrame({
         "vec_id": [10, 11],
@@ -453,36 +455,77 @@ def test_stream_neardup_gate_banded_fixture_matches_mirror(spark):
 
 
 def test_stream_neardup_gate_banded_oracle_parity(spark):
-    """Round-11 registration candidate: the banded gate entry
-    (q_stream_neardup_gate_banded + its UNION-free OR-predicate oracle)
-    must hold hash-exact parity at both fixture SFs, and must reject a
-    strict superset of the registered single-table entry's rejections."""
+    """The registered stream_neardup_gate entry runs both dials for real.
+    Hash-exact parity with the dial-tagged oracle (banded2 half: the
+    UNION-free OR-predicate banded oracle) at sf0.001 (sf0.01 under both
+    ANSI modes is in test_oracle_parity). And at sf0.01 the event_ttl
+    dial — the single-table bucketing — rejects a strict subset of the
+    banded2 dial's rejections (table 0 of the banded run is the
+    single-table bucketing; table 1 adds recall)."""
     from data_engineer_development_spark.queries.similarity import (
-        _STREAM_NDGATE_BANDED_SQL,
+        _STREAM_NDGATE_DIALS_SQL,
         q_stream_neardup_gate,
-        q_stream_neardup_gate_banded,
     )
-    from tests.conftest import SF_CORRECT, SF_SMOKE
+    from tests.conftest import SF_SMOKE
     from tests.oracle_harness import compare
 
-    for sf_dir in (SF_SMOKE, SF_CORRECT):
-        ok, msg = compare(
-            spark, sf_dir, "stream_neardup_gate_banded",
-            q_stream_neardup_gate_banded, _STREAM_NDGATE_BANDED_SQL,
-        )
-        assert ok, f"{sf_dir}: {msg}"
+    ok, msg = compare(
+        spark, SF_SMOKE, "stream_neardup_gate",
+        q_stream_neardup_gate, _STREAM_NDGATE_DIALS_SQL,
+    )
+    assert ok, msg
 
-    single_rej = {
-        r["vec_id"]
-        for r in q_stream_neardup_gate(spark, SF_CORRECT)
+    rejected: dict = {"banded2": set(), "event_ttl": set()}
+    for r in (
+        q_stream_neardup_gate(spark, SF_CORRECT)
         .filter("admitted = 0").collect()
+    ):
+        rejected[r["dial"]].add(r["vec_id"])
+    assert rejected["event_ttl"] < rejected["banded2"]
+
+
+def test_registered_event_ttl_gate_equals_batch_greedy(spark):
+    """The registered entry's event_ttl dial drains in one data batch, so
+    arming the event-time TTL must not change a single verdict vs the
+    plain single-table gate (no TTL) on the same vectors. What the dial
+    adds is driver contact with the EventTimeTimeout plan: watermark
+    binding, per-bucket setTimeoutTimestamp arming, and (in the trailing
+    no-data batch) hasTimedOut self-expiry for every bucket except the
+    far-future outlier's. Equality here pins the oracle-exactness
+    argument."""
+    from data_engineer_development_spark.queries.similarity import (
+        _GATE_PLANES,
+        _SD_TAU,
+        DIMS,
+        q_stream_neardup_gate,
+    )
+    from data_engineer_development_spark.streaming.stateful import (
+        stream_neardup_gate,
+    )
+    from data_engineer_development_spark.streaming.windows import (
+        run_to_memory_sink,
+        stream_table,
+    )
+    from tests.conftest import SF_SMOKE
+
+    run_to_memory_sink(
+        stream_neardup_gate(
+            stream_table(spark, SF_SMOKE, "embeddings"),
+            tau=_SD_TAU, planes=_GATE_PLANES, dims=DIMS,
+        ),
+        "t_ndgate_plain_greedy", output_mode="update",
+        assert_single_batch=True, state_partitions=4, no_data_batches=False,
+    )
+    plain = {
+        r["vec_id"]: (r["dup_of"], r["admitted"])
+        for r in spark.table("t_ndgate_plain_greedy").collect()
     }
-    banded_rej = {
-        r["vec_id"]
-        for r in q_stream_neardup_gate_banded(spark, SF_CORRECT)
-        .filter("admitted = 0").collect()
+    ttl = {
+        r["vec_id"]: (r["dup_of"], r["admitted"])
+        for r in q_stream_neardup_gate(spark, SF_SMOKE)
+        .filter("dial = 'event_ttl'").collect()
     }
-    assert single_rej < banded_rej  # strict superset on this fixture
+    assert ttl == plain and ttl
 
 
 def test_stream_neardup_gate_banded_single_stateful_op(spark):
@@ -584,7 +627,7 @@ def test_event_ttl_kernel_arms_watermark_timeout_monotonically():
         "qv": [[127, 0, 0, 0], [0, 127, 0, 0]],
         "ets": [5_000, 7_000],
     })
-    (out,) = list(kernel((3,), iter([b1]), state))
+    (out,) = list(kernel((0, 3), iter([b1]), state))
     assert state.timeout_set_ts == 8_000  # max(5000, 7000) + 1000
     assert state.get[2] == 7_000
     assert {r.vec_id: r.admitted for r in out.itertuples()} == {10: 1, 11: 1}
@@ -596,7 +639,7 @@ def test_event_ttl_kernel_arms_watermark_timeout_monotonically():
         "qv": [[127, 1, 0, 0]],  # near-dup of 10
         "ets": [2_000],
     })
-    (out2,) = list(kernel((3,), iter([b2]), state))
+    (out2,) = list(kernel((0, 3), iter([b2]), state))
     assert state.timeout_set_ts == 8_000  # unchanged — monotone horizon
     assert state.get[2] == 7_000
     r = next(out2.itertuples())
@@ -604,7 +647,7 @@ def test_event_ttl_kernel_arms_watermark_timeout_monotonically():
 
     # timeout invocation: evict, emit nothing
     state.hasTimedOut = True
-    assert list(kernel((3,), iter([]), state)) == []
+    assert list(kernel((0, 3), iter([]), state)) == []
     assert not state.exists
 
 
@@ -626,7 +669,7 @@ def test_event_ttl_kernel_self_expires_on_watermark():
         "qv": [[127, 0, 0, 0]],
         "ets": [5_000],
     })
-    list(kernel((3,), iter([b1]), state))
+    list(kernel((0, 3), iter([b1]), state))
     assert state.timeout_set_ts == 6_000 and state.get[2] == 5_000
 
     # watermark passes the horizon → resident 10 is expired; the arriving
@@ -637,21 +680,23 @@ def test_event_ttl_kernel_self_expires_on_watermark():
         "qv": [[127, 1, 0, 0]],
         "ets": [8_000],
     })
-    (out,) = list(kernel((3,), iter([b2]), state))
+    (out,) = list(kernel((0, 3), iter([b2]), state))
     r = next(out.itertuples())
     assert r.admitted == 1 and pd.isna(r.dup_of)
     assert list(state.get[0]) == [20] and state.get[2] == 8_000
     assert state.timeout_set_ts == 9_000
 
 
-def _run_event_ttl_scenario(spark, tmp_path, name):
-    """Shared 3-batch eviction scenario (see the test docstrings)."""
+def _run_event_ttl_scenario(spark, tmp_path, name, tables=1):
+    """Shared 3-batch eviction scenario (see the test docstrings); the
+    per-table verdicts are folded with combine_gate_tables."""
     import os
     import time as _time
 
     import pandas as pd
 
     from data_engineer_development_spark.streaming.stateful import (
+        combine_gate_tables,
         stream_neardup_gate,
     )
     from data_engineer_development_spark.streaming.windows import (
@@ -703,7 +748,7 @@ def _run_event_ttl_scenario(spark, tmp_path, name):
         .load(src)
     )
     gated = stream_neardup_gate(
-        stream, tau=0.9, planes=2, dims=4,
+        stream, tau=0.9, planes=2, dims=4, tables=tables,
         event_time_col="ts", event_ttl_ms=600_000,
         watermark_delay="1 second",
     )
@@ -712,7 +757,8 @@ def _run_event_ttl_scenario(spark, tmp_path, name):
         state_partitions=2, no_data_batches=True,
     )
     return {
-        r["vec_id"]: r for r in spark.table("t_ndgate_" + name).collect()
+        r["vec_id"]: r
+        for r in combine_gate_tables(spark.table("t_ndgate_" + name)).collect()
     }
 
 
@@ -755,98 +801,9 @@ def test_event_ttl_banded_gate_e2e(spark, tmp_path):
     scenario as the single-table e2e, folded with combine_gate_tables —
     the re-copy re-admits after the watermark passes bucket horizons in
     EVERY table, and the in-window duplicate still drops."""
-    import os
-    import time as _time
-
-    import pandas as pd
-
-    from data_engineer_development_spark.streaming.stateful import (
-        combine_gate_tables,
-        stream_neardup_gate,
+    _assert_event_ttl_verdicts(
+        _run_event_ttl_scenario(spark, tmp_path, "bettl", tables=2)
     )
-    from data_engineer_development_spark.streaming.windows import (
-        run_to_memory_sink,
-    )
-
-    t0 = pd.Timestamp("2026-01-01 00:00:00")
-    batches = [
-        [(0, [1.0, 0.0, 0.0, 0.0], t0)],
-        [(50, [0.0, 0.0, 0.0, 1.0], t0 + pd.Timedelta(hours=1))],
-        [
-            (100, [2.0, 0.0, 0.0, 0.0], t0 + pd.Timedelta(hours=1, seconds=1)),
-            (101, [3.0, 0.0, 0.0, 0.0], t0 + pd.Timedelta(hours=1, seconds=2)),
-        ],
-    ]
-    src = str(tmp_path / "bevecs")
-    os.makedirs(src)
-    base = _time.time()
-    seen_files: set = set()
-    for i, rows in enumerate(batches):
-        pdf = pd.DataFrame(
-            {
-                "vec_id": [r[0] for r in rows],
-                "embedding": [r[1] for r in rows],
-                "ts": [r[2] for r in rows],
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        new = {
-            f for f in os.listdir(src) if f.endswith(".parquet")
-        } - seen_files
-        for f in new:
-            os.utime(os.path.join(src, f), (base + i, base + i))
-        seen_files |= new
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
-    gated = stream_neardup_gate(
-        stream, tau=0.9, planes=2, dims=4, tables=2,
-        event_time_col="ts", event_ttl_ms=600_000,
-        watermark_delay="1 second",
-    )
-    run_to_memory_sink(
-        gated, "t_ndgate_bettl", output_mode="update",
-        state_partitions=2, no_data_batches=True,
-    )
-    got = {
-        r["vec_id"]: r
-        for r in combine_gate_tables(spark.table("t_ndgate_bettl")).collect()
-    }
-    assert set(got) == {0, 50, 100, 101}
-    assert got[0]["admitted"] == 1
-    assert got[100]["admitted"] == 1 and got[100]["dup_of"] is None
-    assert got[101]["admitted"] == 0 and got[101]["dup_of"] == 100
-
-
-def test_registered_event_ttl_gate_equals_batch_greedy(spark):
-    """The REGISTERED event-TTL gate entry (r12, VERDICT r11 #4) drains
-    in one data batch, so arming the event-time TTL must not change a
-    single verdict vs the plain single-table gate — its oracle IS the
-    batch greedy. What the entry adds is driver contact with the
-    EventTimeTimeout plan: watermark binding, per-bucket
-    setTimeoutTimestamp arming, and (in the trailing no-data batch)
-    hasTimedOut self-expiry for every bucket except the far-future
-    outlier's. Equality here pins the oracle-exactness argument."""
-    from conftest import SF_SMOKE
-
-    from data_engineer_development_spark.queries.similarity import (
-        q_stream_neardup_gate,
-        q_stream_neardup_gate_event_ttl,
-    )
-
-    plain = {
-        r["vec_id"]: (r["bucket"], r["dup_of"], r["admitted"])
-        for r in q_stream_neardup_gate(spark, SF_SMOKE).collect()
-    }
-    ttl = {
-        r["vec_id"]: (r["bucket"], r["dup_of"], r["admitted"])
-        for r in q_stream_neardup_gate_event_ttl(spark, SF_SMOKE).collect()
-    }
-    assert ttl == plain and ttl
 
 
 def test_registered_event_ttl_gate_self_expiry_fires(spark):
