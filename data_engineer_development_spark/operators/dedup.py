@@ -6,16 +6,18 @@ Four families, all shuffle-conscious:
 - **exact**: hash groupBy on the dedup key — one shuffle, the 100 TB
   workhorse. (The reference's only dedup is SELECT DISTINCT on dim keys,
   export_svg.py:277 etc. — same physical shape.)
-- **n-gram Jaccard**: shingle-explode + equi-join on shingle + count ratio.
-  The join key is the shingle, so hot shingles are the skew risk: the
-  ``max_doc_freq`` cap drops shingles appearing in more than N docs
-  (standard posting-list pruning) before the join.
+- **shingle overlap** (Jaccard, containment; self-join or bipartite):
+  one kernel, ``_shingle_overlap`` — shingle-explode + equi-join on the
+  md5 shingle key + pair count; each score is one expression over it.
+  The join key is the shingle, so hot shingles are the skew risk.
 - **MinHash + LSH**: per-doc signature (16 portable permutations of md5
   shingle hashes), banded into 4 keys of 4 rows; candidate pairs meet in a
   band bucket (equi-join on band key — no all-pairs), then exact-Jaccard
   verified. At 100 TB this is the linear-ish near-dup path.
-- **SimHash**: 32-bit sign-aggregated fingerprint per doc; hamming-close
-  pairs are near-dups. Signature build is one projection, no shuffle.
+- **hamming-close hashes**: one kernel, ``hamming_pairs`` — the
+  pigeonhole chunk equi-join over 32-bit hash words, shared by the 32-bit
+  SimHash here (signature build is one projection, no shuffle) and the
+  64-bit image aHash of operators/multimodal.py.
 
 Everything is built from md5-based portable hashes (functions/portable_hash)
 so the DuckDB oracle replays the EXACT same candidate generation — the
@@ -24,7 +26,7 @@ correctness gate covers the sketching math, not just the final filter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_engineer_development_spark.cache import track_persist
@@ -43,88 +45,85 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(
-    df: DataFrame,
+def _shingle_overlap(
+    left: DataFrame,
+    right: DataFrame | None,
     id_col: str,
     shingles_col: str,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """Exploded (id, shingle) postings, optionally pruning hot shingles
-    (skew control for the equi-join at scale)."""
-    posts = df.select(id_col, F.explode(shingles_col).alias("s"))
-    if max_doc_freq is not None:
-        hot = (
-            posts.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("s")
+    """``(id1, id2, c, n1, n2)`` for every pair sharing ≥1 shingle: ``c`` =
+    |A∩B|, ``n1``/``n2`` = |A|, |B|. The one posting equi-join behind every
+    shingle-set scorer below.
+
+    |A∩B| comes from an equi-join of exploded (id, shingle) postings; the
+    set sizes ride ALONG the postings as ``size(shingles)`` and come out of
+    the pair aggregate as ``first(n)`` — no separate per-doc count branch,
+    so the operator is one join plus one aggregate (the plan a warehouse
+    engine would pick).
+
+    Each shingle string is replaced with its 60-bit md5 int BEFORE the
+    join: the shuffled join key drops from ~25 bytes of text to 8 bytes,
+    which at 100 TB is a ~3× cut in shuffle volume for the operator's
+    dominant exchange. Distinct shingles stay distinct with probability
+    ≈ 1 − k²/2⁶¹; the DuckDB oracle applies the IDENTICAL hash, so the
+    comparison is exact.
+
+    ``right is None`` self-joins ``left`` with ``id1 < id2``; its postings
+    are persisted so the two join sides don't each re-run
+    tokenize→shingle→explode (at cluster scale: materialize the posting
+    table). With ``right`` given the join is bipartite — ``id1 ∈ left``,
+    ``id2 ∈ right``, within-side pairs never generated — so deduping a
+    small new batch against a huge corpus costs |batch postings| ⋈
+    |corpus postings| on the shingle key, not the corpus self-join. Ids
+    must then be distinct across the two sides.
+    """
+    key = F.explode(
+        F.expr(f"transform({shingles_col}, x -> {spark_md5_int('x')})")
+    ).alias("s")
+
+    def posts(df: DataFrame, side: int) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id{side}"),
+            key,
+            F.size(shingles_col).alias(f"n{side}"),
         )
-        posts = posts.join(hot, "s", "left_anti")
-    return posts
+
+    if right is None:
+        a = track_persist(posts(left, 1))
+        b = a.select(F.col("id1").alias("id2"), "s", F.col("n1").alias("n2"))
+        pairs = a.join(b, "s").filter(F.col("id1") < F.col("id2"))
+    else:
+        pairs = posts(left, 1).join(posts(right, 2), "s")
+    return pairs.groupBy("id1", "id2").agg(
+        F.count(F.lit(1)).alias("c"),
+        F.first("n1").alias("n1"),
+        F.first("n2").alias("n2"),
+    )
+
+
+def _at_least(pairs: DataFrame, name: str, score: Column, tau: float) -> DataFrame:
+    """``(id1, id2, name)`` for the overlap pairs whose score ≥ tau. Every
+    score is one int/int division in IEEE double, so both engines agree
+    exactly."""
+    return (
+        pairs.withColumn(name, score)
+        .filter(F.col(name) >= tau)
+        .select("id1", "id2", name)
+    )
+
+
+def _jaccard() -> Column:
+    return F.col("c").cast("double") / (
+        F.col("n1") + F.col("n2") - F.col("c")
+    ).cast("double")
 
 
 def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    shingles_col: str,
-    tau: float,
-    max_doc_freq: int | None = None,
+    df: DataFrame, id_col: str, shingles_col: str, tau: float
 ) -> DataFrame:
-    """All pairs with shingle-set Jaccard ≥ tau.
-
-    |A∩B| via shingle equi-join; |A|,|B| ride ALONG the exploded postings as
-    ``size(shingles)`` and come out of the pair-aggregate as ``first(n)`` —
-    no separate per-doc count branch, so the whole operator is one self-join
-    plus one aggregate (the plan a warehouse engine would pick). The division
-    is int/int in IEEE double so both engines agree exactly.
-
-    Each shingle string is replaced with its 60-bit md5 int BEFORE the
-    self-join: the shuffled join key drops from ~25 bytes of text to 8
-    bytes, which at 100 TB is a ~3× cut in shuffle volume for the
-    operator's dominant exchange. Distinct shingles stay distinct with
-    probability ≈ 1 − k²/2⁶¹; the DuckDB oracle applies the IDENTICAL hash,
-    so the comparison is exact.
-
-    The exploded postings are cached so the two join sides don't each
-    re-run tokenize→shingle→explode; at cluster scale the same role is
-    played by materializing the posting table — recomputing the tokenizer
-    per consumer is the thing to avoid at 100 TB.
-    """
-    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
-    if max_doc_freq is not None:
-        # Pruned mode: set sizes must reflect the pruned sets, so recount.
-        posts = shingle_sets(
-            df.withColumn("__shk", F.expr(sh_expr)), id_col, "__shk", max_doc_freq
-        )
-        sizes = posts.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-        posts = posts.join(sizes, id_col)
-    else:
-        posts = df.select(
-            F.col(id_col),
-            F.explode(F.expr(sh_expr)).alias("s"),
-            F.size(shingles_col).alias("n"),
-        )
-    posts = track_persist(posts)
-    a = posts.select(F.col(id_col).alias("id1"), "s", F.col("n").alias("n1"))
-    b = posts.select(F.col(id_col).alias("id2"), "s", F.col("n").alias("n2"))
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first("n1").alias("n1"),
-            F.first("n2").alias("n2"),
-        )
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("c").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("c")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("id1", "id2", "jaccard")
+    """All pairs with shingle-set Jaccard ≥ tau (one posting self-join)."""
+    return _at_least(
+        _shingle_overlap(df, None, id_col, shingles_col), "jaccard", _jaccard(), tau
     )
 
 
@@ -137,44 +136,9 @@ def jaccard_cross_pairs(
 ) -> DataFrame:
     """Bipartite near-dup join: ``(id1 ∈ left, id2 ∈ right)`` pairs with
     shingle-set Jaccard ≥ tau ACROSS two corpora — the incremental-dedup
-    shape (new crawl batch vs existing corpus). Ids must be distinct across
-    the two sides.
-
-    Same posting-equi-join math as :func:`jaccard_pairs`, but postings are
-    built per side and only left×right candidates exist — within-side pairs
-    are never generated, so deduping a small new batch against a huge
-    corpus costs |batch postings| ⋈ |corpus postings| on the shingle key,
-    not the corpus self-join. Same 60-bit md5 join-key compression and
-    exact int/int→double Jaccard as the self-join variant.
-    """
-    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
-
-    def posts(df: DataFrame, out_id: str, out_n: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(F.expr(sh_expr)).alias("s"),
-            F.size(shingles_col).alias(out_n),
-        )
-
-    a = posts(left, "id1", "n1")
-    b = posts(right, "id2", "n2")
-    inter = (
-        a.join(b, "s")
-        .groupBy("id1", "id2")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first("n1").alias("n1"),
-            F.first("n2").alias("n2"),
-        )
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("c").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("c")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("id1", "id2", "jaccard")
+    shape (new crawl batch vs existing corpus); see ``_shingle_overlap``."""
+    return _at_least(
+        _shingle_overlap(left, right, id_col, shingles_col), "jaccard", _jaccard(), tau
     )
 
 
@@ -223,48 +187,63 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash_close_pairs(
-    sigs: DataFrame,
+def hamming_pairs(
+    df: DataFrame,
+    id_col: str,
+    words: list[str],
     max_hamming: int,
-    chunks: int = 4,
-    bits: int = 32,
-    id_col: str = "doc_id",
-    sig_col: str = "simhash",
+    chunks: int,
 ) -> DataFrame:
-    """All pairs with hamming(simhash) ≤ max_hamming — EXACTLY, without the
-    all-pairs nested-loop join.
+    """All pairs ``(id1 < id2, hamming)`` whose hash, the concatenation of
+    the 32-bit ``words`` columns (non-negative bigints), differs in ≤
+    ``max_hamming`` bits — EXACTLY, without the all-pairs nested-loop join.
+    ``["simhash"]`` is a 32-bit SimHash, ``["ahash_lo", "ahash_hi"]`` a
+    64-bit aHash.
 
-    Pigeonhole: if two ``bits``-bit signatures differ in ≤ max_hamming bits
-    and max_hamming < chunks, at least one of the ``chunks`` equal-width bit
-    chunks is IDENTICAL — so candidates are the union of ``chunks`` cheap
-    equi-joins on a chunk value (shuffle-hash, never cartesian), then
-    bit_count-verified. Recall is 1 by construction; at sf0.1 this is 2.7M
-    candidate rows instead of 12.5M nested-loop comparisons, and at 100 TB
-    it's the only shape that survives (the join keys partition).
+    Pigeonhole: split the hash into ``chunks`` equal-width bit chunks (each
+    inside one word); if two hashes differ in ≤ max_hamming < chunks bits,
+    at least one chunk is IDENTICAL. Candidates therefore meet on one
+    exploded ``(c, v)`` = (chunk index, chunk value) key in ONE equi-join —
+    the band-bucket shape of MinHash LSH, evaluating the hash columns once
+    per side — and are bit_count-verified. Recall is 1 by construction; at
+    100 TB the chunk keys partition and the verify touches only bucket
+    collisions, never a cartesian product.
     """
-    assert max_hamming < chunks, "pigeonhole needs max_hamming < chunks"
+    if max_hamming >= chunks:
+        raise ValueError(
+            "hamming_pairs: pigeonhole needs max_hamming < chunks "
+            f"(got {max_hamming} >= {chunks})"
+        )
+    bits = 32 * len(words)
+    if chunks < 1 or bits % chunks or 32 % (bits // chunks):
+        raise ValueError(
+            f"hamming_pairs: {chunks} chunks must split {bits} bits into "
+            "equal chunks that each lie inside one 32-bit word"
+        )
     width = bits // chunks
-    # One exploded (chunk_idx, chunk_val) key and ONE equi-join — the same
-    # band-bucket shape as MinHash LSH. A union of per-chunk self-joins would
-    # re-evaluate the (expensive) signature expression once per branch per
-    # side; this shape evaluates it once per side.
+    per_word = 32 // width
     keys = ", ".join(
-        f"named_struct('c', {c}, 'v', ({sig_col} div {1 << (width * c)}) % {1 << width})"
+        f"named_struct('c', {c}, 'v', ({words[c // per_word]} div "
+        f"{1 << (width * (c % per_word))}) % {1 << width})"
         for c in range(chunks)
     )
-    exploded = sigs.select(
-        F.col(id_col), F.col(sig_col), F.explode(F.expr(f"array({keys})")).alias("ck")
+    exploded = df.select(
+        F.col(id_col), *words, F.explode(F.expr(f"array({keys})")).alias("ck")
     )
-    a = exploded.select(
-        F.col(id_col).alias("id1"), F.col(sig_col).alias("h1"), "ck"
-    )
-    b = exploded.select(
-        F.col(id_col).alias("id2"), F.col(sig_col).alias("h2"), "ck"
-    )
+
+    def side(i: int) -> DataFrame:
+        return exploded.select(
+            F.col(id_col).alias(f"id{i}"),
+            *[F.col(w).alias(f"{w}{i}") for w in words],
+            "ck",
+        )
+
+    hamming = " + ".join(f"bit_count({w}1 ^ {w}2)" for w in words)
     return (
-        a.join(b, "ck")
+        side(1)
+        .join(side(2), "ck")
         .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.expr("bit_count(h1 ^ h2)").alias("hamming"))
+        .select("id1", "id2", F.expr(hamming).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -297,41 +276,12 @@ def containment_pairs(
     truncated re-crawls) has containment 1.0 but arbitrarily low Jaccard —
     ``jaccard_pairs`` never flags it. Using min() of the two sizes makes
     the score symmetric over the pair while preserving "smaller side is
-    (nearly) a subset" semantics.
-
-    Same single-posting-equi-join plan as ``jaccard_pairs`` (one exploded
-    self-join on the 60-bit md5 shingle key + one pair aggregate); the
-    division is int/int in IEEE double so both engines agree exactly. At
-    100 TB the same skew note applies: prune ubiquitous boilerplate
-    shingles with a doc-frequency cap before the join (see
-    ``shingle_sets``'s max_doc_freq) — a shingle in every document would
-    otherwise quadratically dominate the pair stream.
+    (nearly) a subset" semantics. Same posting self-join as
+    ``jaccard_pairs``; at 100 TB a shingle in every document would
+    quadratically dominate its pair stream, so ubiquitous boilerplate
+    shingles belong in a stop-shingle filter upstream of the join.
     """
-    sh_expr = f"transform({shingles_col}, x -> {spark_md5_int('x')})"
-    posts = df.select(
-        F.col(id_col),
-        F.explode(F.expr(sh_expr)).alias("s"),
-        F.size(shingles_col).alias("n"),
-    )
-    posts = track_persist(posts)
-    a = posts.select(F.col(id_col).alias("id1"), "s", F.col("n").alias("n1"))
-    b = posts.select(F.col(id_col).alias("id2"), "s", F.col("n").alias("n2"))
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first("n1").alias("n1"),
-            F.first("n2").alias("n2"),
-        )
-    )
-    return (
-        inter.withColumn(
-            "containment",
-            F.col("c").cast("double")
-            / F.least("n1", "n2").cast("double"),
-        )
-        .filter(F.col("containment") >= tau)
-        .select("id1", "id2", "containment")
+    score = F.col("c").cast("double") / F.least("n1", "n2").cast("double")
+    return _at_least(
+        _shingle_overlap(df, None, id_col, shingles_col), "containment", score, tau
     )

@@ -5,12 +5,9 @@ feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
 stages. Decoding is REAL for the self-describing uncompressed formats the
 engine carries codecs for (PPM/PGM, 24-bit BMP, PCM WAV, concatenated-PPM
 frame streams — operators/codecs.py); compressed formats (JPEG/PNG/MP3)
-have no decoder in this container, so with ``fake=True`` each stage instead
-emits a DETERMINISTIC stand-in derived from md5(payload) — schema,
-partitioning, UDF signature and batch shape identical to the real path.
-With the default ``fake=False`` an undecodable payload raises ``ValueError``
-naming the format, so a bad corpus fails loudly instead of silently
-degrading to fakes.
+have no decoder in this container, so an undecodable payload raises
+``ValueError`` naming the format: a bad corpus fails loudly instead of
+silently degrading.
 
 Scale design: payloads never leave the executor (mapInPandas streams Arrow
 record batches); feature vectors are fixed-width ``array<float>`` so the
@@ -45,16 +42,6 @@ MEDIA_SCHEMA = StructType(
         StructField("meta", StringType(), True),  # JSON sidecar metadata
     ]
 )
-
-
-def _fake_floats(payload: bytes, n: int, salt: str) -> np.ndarray:
-    """Deterministic stand-in for a decoded feature vector: md5-seeded
-    uniform floats in [0,1). Stable across processes and engines."""
-    seed = int.from_bytes(
-        hashlib.md5(salt.encode() + (payload or b"")).digest()[:8], "big"
-    )
-    rng = np.random.default_rng(seed)
-    return rng.random(n, dtype=np.float64).astype(np.float32)
 
 
 def attach_media(df: DataFrame, id_col: str, bytes_col: str, mime: str) -> DataFrame:
@@ -115,12 +102,10 @@ def synth_solid_ppm_media(
     )
 
 
-def extract_features(
-    media: DataFrame, dims: int = 64, fake: bool = False
-) -> DataFrame:
+def extract_features(media: DataFrame, dims: int = 64) -> DataFrame:
     """Decode + feature-extract: (media_id, embedding array<float>, n_bytes).
 
-    Real path: decode the payload with the engine's own codecs
+    Decode the payload with the engine's own codecs
     (operators/codecs.py — PPM/BMP/WAV) and derive a fixed-width content
     signature (channel means + grayscale chunk means for images, amplitude
     chunk means for audio), all in [0, 1]. Output is directly consumable by
@@ -132,15 +117,10 @@ def extract_features(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if fake:
-                feats = [
-                    _fake_floats(p, dims, "feat") for p in pdf["payload"]
-                ]
-            else:
-                feats = [
-                    codecs.media_features(p, m, dims)
-                    for p, m in zip(pdf["payload"], pdf["mime"])
-                ]
+            feats = [
+                codecs.media_features(p, m, dims)
+                for p, m in zip(pdf["payload"], pdf["mime"])
+            ]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -184,47 +164,33 @@ def extract_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(
-    media: DataFrame, width: int = 32, height: int = 32, fake: bool = False
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Resize: decode (PPM/BMP), nearest-neighbor resample to (width,
     height), re-encode as P6 — every output payload is itself decodable, so
-    resize stages compose. Fake path emits w*h deterministic bytes."""
+    resize stages compose."""
     from data_engineer_development_spark.operators import codecs
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if fake:
-                out = [
-                    (_fake_floats(p, width * height, "resize") * 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for p in pdf["payload"]
-                ]
-                mimes = pdf["mime"]
-            else:
-                out = []
-                for p, m in zip(pdf["payload"], pdf["mime"]):
-                    decoded = codecs.decode_media(p, m)
-                    if decoded["kind"] != "image":
-                        raise ValueError(
-                            f"resize_images got non-image payload (mime={m!r})"
-                        )
-                    out.append(
-                        codecs.encode_ppm(
-                            codecs.resize_nearest(
-                                decoded["pixels"], width, height
-                            )
-                        )
+            out = []
+            for p, m in zip(pdf["payload"], pdf["mime"]):
+                decoded = codecs.decode_media(p, m)
+                if decoded["kind"] != "image":
+                    raise ValueError(
+                        f"resize_images got non-image payload (mime={m!r})"
                     )
-                mimes = ["image/x-portable-pixmap"] * len(out)
+                out.append(
+                    codecs.encode_ppm(
+                        codecs.resize_nearest(decoded["pixels"], width, height)
+                    )
+                )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "payload": out,
-                    "mime": mimes,
+                    "mime": ["image/x-portable-pixmap"] * len(out),
                     "meta": pdf["meta"],
                 }
             )
@@ -238,12 +204,11 @@ def sample_frames(
     media: DataFrame,
     interval_ms: int = 1000,
     duration_ms: int = 5000,
-    fake: bool = False,
 ) -> DataFrame:
     """Frame sampling: one row per sampled frame (bounded row amplification,
     duration/interval frames per media).
 
-    Real path decodes the engine's concatenated-P6 stream container
+    Decodes the engine's concatenated-P6 stream container
     (operators/codecs.py:iter_ppm_frames — stored frames are
     ``interval_ms`` apart, a real seek+decode, no ffmpeg needed); sampling
     clamps to the last stored frame when the requested duration outruns the
@@ -259,27 +224,17 @@ def sample_frames(
                 continue
             ids, frame_idx, ts, frames = [], [], [], []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if fake:
-                    stored = None
-                else:
-                    stored = [
-                        codecs.encode_ppm(fr)
-                        for fr in codecs.iter_ppm_frames(p or b"")
-                    ]
-                    if not stored:
-                        raise ValueError("empty ppm-stream payload")
+                stored = [
+                    codecs.encode_ppm(fr)
+                    for fr in codecs.iter_ppm_frames(p or b"")
+                ]
+                if not stored:
+                    raise ValueError("empty ppm-stream payload")
                 for i in range(n_frames):
                     ids.append(mid)
                     frame_idx.append(i)
                     ts.append(i * interval_ms)
-                    if fake:
-                        frames.append(
-                            (_fake_floats(p, 16, f"frame{i}") * 255)
-                            .astype(np.uint8)
-                            .tobytes()
-                        )
-                    else:
-                        frames.append(stored[min(i, len(stored) - 1)])
+                    frames.append(stored[min(i, len(stored) - 1)])
             yield pd.DataFrame(
                 {
                     "media_id": ids,
@@ -584,74 +539,3 @@ def synth_block_ppm_media(
         run, "media_id long, payload binary, mime string, meta string"
     )
 
-
-def ahash_close_pairs(
-    hashed: DataFrame,
-    max_hamming: int,
-    chunks: int = 8,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """All pairs with hamming(aHash) ≤ ``max_hamming`` over the two-word
-    (``ahash_hi``/``ahash_lo``) 64-bit hash — EXACTLY, never cartesian.
-
-    Same pigeonhole shape as ``operators/dedup.simhash_close_pairs`` (if
-    two 64-bit hashes differ in ≤ max_hamming < chunks bits, at least
-    one of the ``chunks`` equal-width bit chunks is identical), extended
-    to the split-word packing ``image_ahash`` emits: chunks 0..3 slice
-    ``ahash_lo`` (bits 0..31), chunks 4..7 slice ``ahash_hi``. One
-    exploded (chunk_idx, chunk_val) key, ONE equi-join, bit_count-
-    verified — recall 1 by construction; at 100 TB the chunk keys
-    partition and the verify touches only bucket collisions.
-    """
-    if max_hamming >= chunks:
-        raise ValueError(
-            "ahash_close_pairs: pigeonhole needs max_hamming < chunks "
-            f"(got {max_hamming} >= {chunks})"
-        )
-    if 64 % chunks or chunks < 2:
-        # chunks must divide 64 AND keep the chunk width <= the 32-bit
-        # word size (chunks=1 would need a 64-bit slice spanning both
-        # words — and divides per_word=0 below)
-        raise ValueError(
-            "ahash_close_pairs: chunks must divide 64 and be >= 2 "
-            f"(got {chunks})"
-        )
-    width = 64 // chunks
-    per_word = 32 // width
-    keys = ", ".join(
-        f"named_struct('c', {c}, 'v', "
-        f"({'ahash_lo' if c < per_word else 'ahash_hi'} div "
-        f"{1 << (width * (c % per_word))}) % {1 << width})"
-        for c in range(chunks)
-    )
-    exploded = hashed.select(
-        F.col(id_col),
-        "ahash_hi",
-        "ahash_lo",
-        F.explode(F.expr(f"array({keys})")).alias("ck"),
-    )
-    a = exploded.select(
-        F.col(id_col).alias("id1"),
-        F.col("ahash_hi").alias("hi1"),
-        F.col("ahash_lo").alias("lo1"),
-        "ck",
-    )
-    b = exploded.select(
-        F.col(id_col).alias("id2"),
-        F.col("ahash_hi").alias("hi2"),
-        F.col("ahash_lo").alias("lo2"),
-        "ck",
-    )
-    return (
-        a.join(b, "ck")
-        .filter(F.col("id1") < F.col("id2"))
-        .select(
-            "id1",
-            "id2",
-            F.expr("bit_count(hi1 ^ hi2) + bit_count(lo1 ^ lo2)").alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )

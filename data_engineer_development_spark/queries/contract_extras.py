@@ -559,7 +559,7 @@ FROM h ORDER BY doc_id
 # synth_block_ppm_media: blocks colored from the doc's GROUP = doc_id//4,
 # one per-doc perturbed block — the controlled near-dup structure), goes
 # through the real decode→aHash path, and pairs within hamming ≤ 3 come
-# from the banded pigeonhole join (ahash_close_pairs — never cartesian,
+# from the pigeonhole chunk join (dedup.hamming_pairs — never cartesian,
 # recall 1 by construction). The oracle recomputes every block value,
 # threshold bit and packed word in closed form from the portable md5
 # idiom and verifies the pair set against a quadratic join (fixture-scale
@@ -569,6 +569,7 @@ _AHASH_ND_MAXH = 3
 
 
 def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from data_engineer_development_spark.operators import dedup as D
     from data_engineer_development_spark.operators import multimodal as M
 
     docs = (
@@ -587,7 +588,9 @@ def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = M.synth_block_ppm_media(docs, "doc_id", "grp", "pert")
     hashed = M.image_ahash(media, grid=8)
     return (
-        M.ahash_close_pairs(hashed, max_hamming=_AHASH_ND_MAXH)
+        D.hamming_pairs(
+            hashed, "media_id", ["ahash_lo", "ahash_hi"], _AHASH_ND_MAXH, chunks=8
+        )
         .select("id1", "id2", F.col("hamming").cast("int").alias("hamming"))
         .orderBy("id1", "id2")
     )

@@ -33,6 +33,7 @@ from data_engineer_development_spark.operators.graph import (
 from data_engineer_development_spark.operators.text import shingles_expr
 from data_engineer_development_spark.queries.dedup import (
     JACCARD_TAU,
+    _docs_with_shingles,
     duck_jaccard_pairs_cte,
 )
 from data_engineer_development_spark.sources import load_table
@@ -48,9 +49,7 @@ from data_engineer_development_spark.sources import load_table
 # DuckDB but exact at test scale; the Spark path is the one that scales.
 # --------------------------------------------------------------------------
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).withColumn("sh", shingles_expr("t", k=3))
+    docs = _docs_with_shingles(load_table(spark, sf_dir, "documents"))
     pairs = D.jaccard_pairs(docs, "doc_id", "sh", JACCARD_TAU)
     return connected_components(
         docs.select("doc_id"), pairs, "doc_id", "id1", "id2"
@@ -113,7 +112,7 @@ ORDER BY d.doc_id
 # train split? Splits are deterministic (md5 parity on doc_id). Shape:
 # exploded postings, DISTINCT train-shingle set, one equi-join — the same
 # posting-list plan as Jaccard dedup, so the 100 TB notes there apply (hot
-# shingles prune via max_doc_freq; the train set is a semi-join build side).
+# shingles are the skew risk; the train set is a semi-join build side).
 # --------------------------------------------------------------------------
 _CONTAM_K = 5
 
@@ -739,11 +738,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(old.select(F.col("doc_id").alias("old_id"), F.md5("text").alias("h")), "h")
         .select(F.col("doc_id").alias("id2"), F.col("old_id").alias("id1"))
     )
-    sh = lambda df: df.select(  # noqa: E731 — local shaping helper
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).withColumn("sh", shingles_expr("t", k=3))
     near = D.jaccard_cross_pairs(
-        sh(old), sh(new), "doc_id", "sh", JACCARD_TAU
+        _docs_with_shingles(old), _docs_with_shingles(new), "doc_id", "sh",
+        JACCARD_TAU,
     ).select("id1", "id2")
     dup_of = (
         exact.unionByName(near)
@@ -1053,12 +1050,8 @@ _DOC_SPLIT_SPARK = f"{spark_md5_int('cast(doc_id as string)')} % 2"
 
 
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_engineer_development_spark.cache import track_persist
-
     docs_raw = load_table(spark, sf_dir, "documents")
-    docs = docs_raw.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).withColumn("sh", shingles_expr("t", k=3))
+    docs = _docs_with_shingles(docs_raw)
     # the verified-pair self-join is the dominant cost of the whole
     # audit and THREE consumers read it (connected_components unions it
     # twice as src/dst, the leak join once more) — persist it so the
@@ -1161,9 +1154,7 @@ FROM ca, pa
 # --------------------------------------------------------------------------
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_raw = load_table(spark, sf_dir, "documents")
-    docs = docs_raw.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    ).withColumn("sh", shingles_expr("t", k=3))
+    docs = _docs_with_shingles(docs_raw)
     pairs = D.jaccard_pairs(docs, "doc_id", "sh", JACCARD_TAU).select(
         "id1", "id2"
     )

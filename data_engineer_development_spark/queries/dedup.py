@@ -33,8 +33,9 @@ HAMMING_MAX = 3
 SIMHASH_CHUNKS = 4
 
 
-def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def _docs_with_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, t, sh): the space-split tokens and distinct 3-shingles of a
+    documents frame — the one shingled frame of every lexical dedup query."""
     return docs.select(
         "doc_id",
         F.split(F.col("text"), " ").alias("t"),
@@ -49,6 +50,24 @@ s AS (SELECT doc_id, t,
                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS sh
       FROM d)
 """
+
+
+def _duck_overlap(key: str) -> str:
+    """DuckDB CTEs ``p`` (the postings of CTE ``s`` on join key ``key``)
+    and ``i(id1, id2, c, n1, n2)`` (their self-join pair counts) — the
+    oracle dual of operators/dedup._shingle_overlap."""
+    return f"""p AS (SELECT doc_id, unnest({key}) AS sg,
+             len(sh) AS n FROM s),
+i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c,
+             any_value(a.n) AS n1, any_value(b.n) AS n2
+      FROM p a JOIN p b ON a.sg = b.sg AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id)"""
+
+
+#: postings on the 60-bit md5 shingle key (the Spark join key) and on the
+#: shingle text itself (the candidate-verify oracles)
+_DUCK_OVERLAP_MD5 = _duck_overlap(f"list_transform(sh, x -> {duck_md5_int('x')})")
+_DUCK_OVERLAP_TEXT = _duck_overlap("sh")
 
 
 # --------------------------------------------------------------------------
@@ -73,10 +92,10 @@ FROM documents GROUP BY md5(text) ORDER BY representative_id
 
 
 # --------------------------------------------------------------------------
-# n-gram Jaccard near-dup pairs (shingle equi-join, posting-list pruning).
+# n-gram Jaccard near-dup pairs (one shingle-posting equi-join).
 # --------------------------------------------------------------------------
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_with_shingles(spark, sf_dir)
+    docs = _docs_with_shingles(load_table(spark, sf_dir, "documents"))
     return D.jaccard_pairs(docs, "doc_id", "sh", JACCARD_TAU).orderBy(
         "id1", "id2"
     )
@@ -90,12 +109,7 @@ def duck_jaccard_pairs_cte() -> str:
     generation AND the narrow-key join are both inside the cross-engine
     check."""
     return f"""{_DUCK_SHINGLES},
-p AS (SELECT doc_id, unnest(list_transform(sh, x -> {duck_md5_int('x')})) AS sg,
-             len(sh) AS n FROM s),
-i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c,
-             any_value(a.n) AS n1, any_value(b.n) AS n2
-      FROM p a JOIN p b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
+{_DUCK_OVERLAP_MD5},
 vp AS (SELECT id1, id2,
               CAST(c AS DOUBLE) / CAST(n1 + n2 - c AS DOUBLE) AS jaccard
        FROM i
@@ -116,7 +130,7 @@ CONTAINMENT_TAU = 0.4
 
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_with_shingles(spark, sf_dir)
+    docs = _docs_with_shingles(load_table(spark, sf_dir, "documents"))
     return D.containment_pairs(
         docs, "doc_id", "sh", CONTAINMENT_TAU
     ).orderBy("id1", "id2")
@@ -124,12 +138,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DEDUP_CONTAINMENT_SQL = f"""
 WITH {_DUCK_SHINGLES},
-p AS (SELECT doc_id, unnest(list_transform(sh, x -> {duck_md5_int('x')})) AS sg,
-             len(sh) AS n FROM s),
-i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c,
-             any_value(a.n) AS n1, any_value(b.n) AS n2
-      FROM p a JOIN p b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id)
+{_DUCK_OVERLAP_MD5}
 SELECT id1, id2,
        CAST(c AS DOUBLE) / CAST(LEAST(n1, n2) AS DOUBLE) AS containment
 FROM i
@@ -142,7 +151,7 @@ ORDER BY id1, id2
 # MinHash signatures (the sketch itself — verifies permutation arithmetic).
 # --------------------------------------------------------------------------
 def q_dedup_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_with_shingles(spark, sf_dir)
+    docs = _docs_with_shingles(load_table(spark, sf_dir, "documents"))
     return D.minhash_signatures(docs, "doc_id", "sh", NUM_PERM).orderBy(
         "doc_id"
     )
@@ -161,6 +170,34 @@ SELECT doc_id, {sig_cols} FROM hashed ORDER BY doc_id
 """
 
 
+def _exact_jaccard(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """Candidate ``pairs`` (id1, id2, …) with the exact shingle-set
+    ``jaccard`` of each pair: both endpoints' ``sh`` arrays joined in and
+    intersected (``array_intersect`` — distinct-set arithmetic, one IEEE
+    division of exact ints).
+
+    A <3-token doc has an EMPTY shingle set: every MinHash sig is NULL, so
+    all such docs share band key '0' (concat_ws skips NULLs) and pair up
+    as candidates, with NULL signature matches and a 0/0 Jaccard. Such a
+    pair has no Jaccard to verify or estimate, so it is dropped here, as
+    in the oracles (an explicit WHERE in minhash_est_error's; the verify
+    join of dedup_minhash_lsh's only meets pairs sharing a shingle).
+    """
+    s1 = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    s2 = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
+    return (
+        pairs.join(s1, "id1")
+        .join(s2, "id2")
+        .filter((F.size("sh1") > 0) & (F.size("sh2") > 0))
+        .withColumn("c", F.size(F.array_intersect("sh1", "sh2")))
+        .withColumn(
+            "jaccard",
+            F.col("c").cast("double")
+            / (F.size("sh1") + F.size("sh2") - F.col("c")).cast("double"),
+        )
+    )
+
+
 # --------------------------------------------------------------------------
 # Full MinHash→LSH→verify pipeline: banded candidates, exact-Jaccard check.
 # --------------------------------------------------------------------------
@@ -176,22 +213,15 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH exists to avoid (measured at sf0.1: 8.0 s → verify-only ~1 s; at
     # 100 TB the posting self-join is quadratic in hot-shingle df while
     # candidates stay ~linear in near-dup density).
-    docs = track_persist(_docs_with_shingles(spark, sf_dir))
+    docs = track_persist(
+        _docs_with_shingles(load_table(spark, sf_dir, "documents"))
+    )
     sigs = track_persist(
         D.minhash_signatures(docs, "doc_id", "sh", NUM_PERM)
     )
     cands = D.lsh_candidate_pairs(sigs, "doc_id", NUM_PERM, BANDS)
-    s1 = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     return (
-        cands.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("c", F.size(F.array_intersect("sh1", "sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("c").cast("double")
-            / (F.size("sh1") + F.size("sh2") - F.col("c")).cast("double"),
-        )
+        _exact_jaccard(cands, docs)
         .filter(F.col("jaccard") >= JACCARD_TAU)
         .select("id1", "id2", "jaccard")
         .orderBy("id1", "id2")
@@ -210,7 +240,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH already capped.
 # --------------------------------------------------------------------------
 def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = track_persist(_docs_with_shingles(spark, sf_dir))
+    docs = track_persist(
+        _docs_with_shingles(load_table(spark, sf_dir, "documents"))
+    )
     sigs = track_persist(
         D.minhash_signatures(docs, "doc_id", "sh", NUM_PERM)
     )
@@ -227,28 +259,9 @@ def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(NUM_PERM):
         t = (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         n_match = t if n_match is None else n_match + t
-    s1 = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
+    pairs = cands.join(a, "id1").join(b, "id2").withColumn("n_match", n_match)
     return (
-        cands.join(a, "id1")
-        .join(b, "id2")
-        .withColumn("n_match", n_match)
-        .join(s1, "id1")
-        .join(s2, "id2")
-        # a <3-token doc has an EMPTY shingle set: every sig is NULL, so
-        # all such docs share band key '0' (concat_ws skips NULLs) and
-        # pair up — then NULL==NULL comparisons make n_match NULL and
-        # 0/0 makes jaccard NULL, diverging from the oracle's 0 rows
-        # (review r14, confirmed by repro). An estimator row for a doc
-        # with no shingles is meaningless; drop pairs with either
-        # endpoint empty, mirrored in the oracle's WHERE
-        .filter((F.size("sh1") > 0) & (F.size("sh2") > 0))
-        .withColumn("c", F.size(F.array_intersect("sh1", "sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("c").cast("double")
-            / (F.size("sh1") + F.size("sh2") - F.col("c")).cast("double"),
-        )
+        _exact_jaccard(pairs, docs)
         .withColumn(
             "est_jaccard",
             F.col("n_match").cast("double") / F.lit(float(NUM_PERM)),
@@ -279,11 +292,7 @@ nm AS (SELECT c.id1, c.id2, CAST({match_sum} AS INT) AS n_match
                    JOIN s sa ON sa.doc_id = c.id1
                    JOIN s sb ON sb.doc_id = c.id2
        WHERE len(sa.sh) > 0 AND len(sb.sh) > 0),
-p AS (SELECT doc_id, unnest(sh) AS sg, len(sh) AS n FROM s),
-i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c,
-             any_value(a.n) AS n1, any_value(b.n) AS n2
-      FROM p a JOIN p b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
+{_DUCK_OVERLAP_TEXT},
 x AS (SELECT nm.id1, nm.id2, nm.n_match,
              COALESCE(CAST(i.c AS DOUBLE)
                       / CAST(i.n1 + i.n2 - i.c AS DOUBLE), 0.0) AS jaccard
@@ -324,11 +333,7 @@ def _minhash_lsh_sql() -> str:
     return f"""
 WITH {_DUCK_SHINGLES},
 {duck_lsh_cand_cte()},
-p AS (SELECT doc_id, unnest(sh) AS sg, len(sh) AS n FROM s),
-i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c,
-             any_value(a.n) AS n1, any_value(b.n) AS n2
-      FROM p a JOIN p b ON a.sg = b.sg AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
+{_DUCK_OVERLAP_TEXT},
 ver AS (SELECT id1, id2, CAST(c AS DOUBLE) / CAST(n1 + n2 - c AS DOUBLE) AS jaccard
         FROM i WHERE CAST(c AS DOUBLE) / CAST(n1 + n2 - c AS DOUBLE) >= {JACCARD_TAU})
 SELECT cand.id1, cand.id2, ver.jaccard
@@ -347,7 +352,9 @@ ORDER BY cand.id1, cand.id2
 # instead of the full posting join, same plan shape.
 # --------------------------------------------------------------------------
 def q_lsh_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = track_persist(_docs_with_shingles(spark, sf_dir))
+    docs = track_persist(
+        _docs_with_shingles(load_table(spark, sf_dir, "documents"))
+    )
     truth = D.jaccard_pairs(docs, "doc_id", "sh", JACCARD_TAU).select(
         "id1", "id2", F.lit(1).alias("in_true")
     )
@@ -428,8 +435,8 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (40 KB at sf0.1; ~100 GB per PB of docs) — persist it so the two join
     # sides don't each re-evaluate the 32-bit sketch expression.
     sh = track_persist(D.simhash(docs, "doc_id", "t", SIMHASH_BITS))
-    return D.simhash_close_pairs(
-        sh, HAMMING_MAX, SIMHASH_CHUNKS, SIMHASH_BITS
+    return D.hamming_pairs(
+        sh, "doc_id", ["simhash"], HAMMING_MAX, SIMHASH_CHUNKS
     ).orderBy("id1", "id2")
 
 

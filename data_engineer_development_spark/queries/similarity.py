@@ -814,7 +814,7 @@ def q_dedup_modality_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs_with_shingles,
     )
 
-    docs = _docs_with_shingles(spark, sf_dir)
+    docs = _docs_with_shingles(load_table(spark, sf_dir, "documents"))
     lex = (
         D.jaccard_pairs(docs, "doc_id", "sh", JACCARD_TAU)
         .select("id1", "id2")

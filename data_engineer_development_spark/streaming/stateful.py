@@ -588,14 +588,14 @@ def stream_neardup_gate(
     )
 
 
-def combine_gate_tables(verdicts: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def combine_gate_tables(verdicts: DataFrame) -> DataFrame:
     """Fold a banded gate's per-(vector, table) verdicts into the final
     per-vector one: dropped iff ANY table dropped it; dup_of = the lowest
     covering id any table saw (min over tables — each covering pair is
     detected by every table where it collides, so min-of-mins equals the
     min over the union of detections). Batch-side: run it on the drained
     sink table (or per micro-batch in a foreachBatch sink)."""
-    return verdicts.groupBy(id_col).agg(
+    return verdicts.groupBy("vec_id").agg(
         F.min("dup_of").alias("dup_of"),
         F.min("admitted").cast("int").alias("admitted"),
     )

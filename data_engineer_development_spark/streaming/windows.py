@@ -17,6 +17,7 @@ that matters when the stream is 100 TB/day.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
@@ -28,16 +29,20 @@ from pyspark.sql import functions as F
 _CKPT_ROOT = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
 
 
-def _as_stream_dir(src: str, key: str) -> str:
+def _as_stream_dir(src: str) -> str:
     """The file-stream source requires a directory; expose a single-file
     table through a symlink dir (a real deployment streams from a directory
-    of arriving part files anyway)."""
-    d = os.path.join(tempfile.gettempdir(), f"stream-{key}")
+    of arriving part files anyway). The dir is keyed by an md5 of ``src``
+    because ``str`` ``hash()`` is salted per process: every process must
+    resolve, and reuse, the same dir for the same table."""
+    name, _ = os.path.splitext(os.path.basename(src))
+    digest = hashlib.md5(src.encode()).hexdigest()[:15]
+    d = os.path.join(tempfile.gettempdir(), f"stream-{name}-{digest}")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, os.path.basename(src))
     # lexists (not exists): a stale symlink whose target vanished must be
     # repaired, not tripped over; the try/except closes the remaining
-    # check-to-symlink race between two sessions sharing a hash seed.
+    # check-to-symlink race between two processes streaming the same table.
     if os.path.lexists(link) and (
         not os.path.islink(link) or os.readlink(link) != src
     ):
@@ -57,7 +62,7 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     normalization watermarks need)."""
     src = f"{sf_dir}/{table}.parquet"
     if os.path.isfile(src):
-        src = _as_stream_dir(src, f"{table}-{abs(hash(sf_dir))}")
+        src = _as_stream_dir(src)
     schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
     return spark.readStream.format("parquet").schema(schema).load(src)
 

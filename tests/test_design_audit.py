@@ -13,7 +13,11 @@ of the semantic-dedup family is one function, ``similarity._qcos``. The
 snapshot log is decoded in one function, ``snapshots._manifest``, and its
 on-disk paths and filesystem are resolved in one helper each. The
 streaming near-dup gate is one stateful pipeline with one state and one
-output schema, whatever its dials.
+output schema, whatever its dials. The lexical and hash near-dup family has
+one join per shape: one md5-keyed shingle-overlap join
+(``dedup._shingle_overlap``), one pigeonhole hamming join
+(``dedup.hamming_pairs``) and, in the queries, one shingled documents frame
+(``queries.dedup._docs_with_shingles``).
 """
 
 from __future__ import annotations
@@ -129,4 +133,43 @@ def test_neardup_gate_is_one_stateful_pipeline():
     assert sorted(n for n in names if re.search(r"GATE_\w*_SCHEMA$", n)) == [
         "GATE_OUTPUT_SCHEMA",
         "GATE_STATE_SCHEMA",
+    ]
+
+
+def _functions_containing(pattern: str, root: Path) -> list[str]:
+    """``module:function`` of every top-level function under ``root`` whose
+    source contains ``pattern``; a module-level occurrence counts as
+    ``module:<module>``."""
+    found = []
+    for py in sorted(root.rglob("*.py")):
+        src = py.read_text()
+        if pattern not in src:
+            continue
+        rel = str(py.relative_to(PKG))
+        funcs = [
+            node
+            for node in ast.parse(src).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and pattern in ast.get_source_segment(src, node)
+        ]
+        found += [f"{rel}:{f.name}" for f in funcs]
+        in_funcs = sum(ast.get_source_segment(src, f).count(pattern) for f in funcs)
+        if src.count(pattern) > in_funcs:
+            found.append(f"{rel}:<module>")
+    return found
+
+
+def test_near_dup_family_has_one_join_per_shape():
+    """The hamming verify (``bit_count(``) and the md5 shingle-key
+    ``transform(`` each live in ONE operator function, and the queries
+    shingle documents in ONE helper."""
+    ops = PKG / "operators"
+    assert _functions_containing("bit_count(", ops) == [
+        "operators/dedup.py:hamming_pairs"
+    ]
+    assert _functions_containing("x -> {spark_md5_int('x')})", ops) == [
+        "operators/dedup.py:_shingle_overlap"
+    ]
+    assert _functions_containing('shingles_expr("t", k=3)', PKG / "queries") == [
+        "queries/dedup.py:_docs_with_shingles"
     ]

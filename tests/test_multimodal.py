@@ -1,4 +1,5 @@
-"""Multimodal plumbing: schemas, real-codec e2e, determinism, stub gating."""
+"""Multimodal plumbing: schemas, real-codec e2e, loud failure on
+undecodable payloads, perceptual hashes and their hamming join."""
 
 from __future__ import annotations
 
@@ -32,7 +33,7 @@ def media(spark, docs):
 
 @pytest.fixture(scope="module")
 def opaque_media(spark, docs):
-    """Undecodable payloads (raw utf-8 text) for the stub/gating paths."""
+    """Undecodable payloads (raw utf-8 text) for the fail-loudly path."""
     return M.attach_media(
         docs.select("doc_id", F.encode("text", "utf-8").alias("blob")),
         "doc_id",
@@ -69,15 +70,6 @@ def test_extract_features_real_decode_matches_md5(media, docs):
         assert got == list(rgb)
         assert len(r["embedding"]) == 8
         assert r["n_bytes"] == 13 + 16 * 16 * 3
-
-
-def test_extract_features_fake_path_deterministic(opaque_media):
-    a = M.extract_features(opaque_media, dims=16, fake=True)
-    b = M.extract_features(opaque_media, dims=16, fake=True)
-    ra = {r["media_id"]: list(r["embedding"]) for r in a.collect()}
-    rb = {r["media_id"]: list(r["embedding"]) for r in b.collect()}
-    assert ra == rb
-    assert all(len(v) == 16 for v in ra.values())
 
 
 def test_features_feed_similarity_ops(media):
@@ -124,17 +116,6 @@ def test_sample_frames_real_ppm_stream(spark):
         px = codecs.decode_ppm(bytes(r["frame"]))
         expect = min(r["frame_idx"], 2) * 40
         assert int(px[0, 0, 0]) == expect
-
-
-def test_sample_frames_fake_shapes(opaque_media):
-    frames = M.sample_frames(
-        opaque_media, interval_ms=1000, duration_ms=3000, fake=True
-    )
-    per_media = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] == 3 for r in per_media)
-    one = frames.filter(F.col("frame_idx") == 1).first()
-    assert one["ts_ms"] == 1000
-    assert len(one["frame"]) == 16
 
 
 def test_undecodable_payload_fails_loudly(opaque_media):
@@ -187,54 +168,59 @@ def test_image_ahash_rejects_bad_grid():
         M.image_ahash(None, grid=16)
 
 
-def test_ahash_close_pairs_matches_bruteforce_and_never_cartesian(spark):
-    """The banded pigeonhole join must return EXACTLY the brute-force
-    hamming ≤ H pair set (recall 1 by construction) and its physical
-    plan must contain no cartesian/nested-loop join."""
+@pytest.mark.parametrize(
+    "words,chunks,bad_chunks",
+    # bad: 3 chunks don't split 32 bits evenly; 1 chunk of 64 bits spans
+    # both words
+    [(["simhash"], 4, 3), (["ahash_lo", "ahash_hi"], 8, 1)],
+    ids=["one_word", "two_word"],
+)
+def test_ahash_close_pairs_matches_bruteforce_and_never_cartesian(
+    spark, words, chunks, bad_chunks
+):
+    """The pigeonhole chunk join must return EXACTLY the brute-force
+    hamming ≤ H pair set (recall 1 by construction) for both hash shapes
+    — the 32-bit one-word SimHash as dedup_simhash_pairs calls it and the
+    64-bit two-word aHash — and its physical plan must contain no
+    cartesian/nested-loop join. A broken pigeonhole precondition raises
+    ValueError (an assert would vanish under ``python -O``)."""
     import random
 
-    from pyspark.sql import functions as F
+    from data_engineer_development_spark.operators.dedup import hamming_pairs
 
-    from data_engineer_development_spark.operators.multimodal import (
-        ahash_close_pairs,
-    )
-
+    bits = 32 * len(words)
     rng = random.Random(131)
-    base = rng.getrandbits(64)
-    rows = []
-    for i in range(60):
+    base = rng.getrandbits(bits)
+    hashes = []
+    for _ in range(60):
         h = base
         for _ in range(rng.randrange(0, 6)):  # flip 0..5 random bits
-            h ^= 1 << rng.randrange(64)
-        rows.append((i, (h >> 32) & 0xFFFFFFFF, h & 0xFFFFFFFF))
-    df = spark.createDataFrame(rows, "media_id long, ahash_hi long, ahash_lo long")
-
-    got = {
-        (r["id1"], r["id2"], r["hamming"])
-        for r in ahash_close_pairs(df, max_hamming=3).collect()
-    }
-    want = set()
-    for i, hi1, lo1 in rows:
-        for j, hi2, lo2 in rows:
-            if i < j:
-                d = bin(hi1 ^ hi2).count("1") + bin(lo1 ^ lo2).count("1")
-                if d <= 3:
-                    want.add((i, j, d))
-    assert got == want
-    plan = (
-        ahash_close_pairs(df, max_hamming=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+            h ^= 1 << rng.randrange(bits)
+        hashes.append(h)
+    rows = [
+        (i, *[(h >> (32 * w)) & 0xFFFFFFFF for w in range(len(words))])
+        for i, h in enumerate(hashes)
+    ]
+    df = spark.createDataFrame(
+        rows, ", ".join(["media_id long"] + [f"{w} long" for w in words])
     )
+
+    pairs = hamming_pairs(df, "media_id", words, max_hamming=3, chunks=chunks)
+    got = {(r["id1"], r["id2"], r["hamming"]) for r in pairs.collect()}
+    want = {
+        (i, j, d)
+        for i in range(len(hashes))
+        for j in range(i + 1, len(hashes))
+        if (d := bin(hashes[i] ^ hashes[j]).count("1")) <= 3
+    }
+    assert got == want and want
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan and "NestedLoop" not in plan
 
-    import pytest
-
     with pytest.raises(ValueError, match="pigeonhole"):
-        ahash_close_pairs(df, max_hamming=8, chunks=8)
+        hamming_pairs(df, "media_id", words, max_hamming=chunks, chunks=chunks)
     with pytest.raises(ValueError, match="chunks"):
-        ahash_close_pairs(df, max_hamming=0, chunks=1)
+        hamming_pairs(df, "media_id", words, max_hamming=0, chunks=bad_chunks)
 
 
 def test_image_ahash_neardup_oracle_parity_and_group_structure(spark):

@@ -188,35 +188,56 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
             spark.conf.set(k, v)
 
 
-def test_jaccard_pruned_mode_and_hash_keys(spark):
-    """max_doc_freq pruning (hot-shingle skew control) must run on the same
-    hashed-key postings as the default path: a huge cap reproduces the
-    unpruned pairs exactly; a tiny cap drops pairs (hot shingles gone), and
-    set sizes are recounted on the pruned sets rather than reused."""
-    from data_engineer_development_spark.operators.dedup import jaccard_pairs
-    from data_engineer_development_spark.operators.text import shingles_expr
-    from pyspark.sql import functions as F
+def test_shingle_overlap_scorers_match_bruteforce(spark):
+    """The three scorers over the one md5-keyed posting join —
+    ``jaccard_pairs`` (self), ``jaccard_cross_pairs`` (bipartite) and
+    ``containment_pairs`` — must equal a brute-force Python computation
+    over the raw shingle sets: the hashed join key loses no pair and
+    merges no shingles, and every score is the exact int/int division."""
+    from data_engineer_development_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_cross_pairs,
+        jaccard_pairs,
+    )
+    from data_engineer_development_spark.queries.dedup import (
+        _docs_with_shingles,
+    )
 
-    docs = (
-        load_table(spark, SF_CORRECT, "documents")
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", F.split(F.col("text"), " ").alias("t"))
-        .withColumn("sh", shingles_expr("t", k=3))
+    docs = _docs_with_shingles(
+        load_table(spark, SF_CORRECT, "documents").filter(F.col("doc_id") < 200)
     )
-    base = sorted(
-        map(tuple, jaccard_pairs(docs, "doc_id", "sh", 0.1).collect())
-    )
-    loose = sorted(
-        map(
-            tuple,
-            jaccard_pairs(
-                docs, "doc_id", "sh", 0.1, max_doc_freq=10_000_000
-            ).collect(),
-        )
-    )
-    assert loose == base and len(base) > 0
-    tight = jaccard_pairs(docs, "doc_id", "sh", 0.1, max_doc_freq=2).collect()
-    assert len(tight) <= len(base)
+    sets = {r["doc_id"]: set(r["sh"]) for r in docs.collect()}
+    ids = sorted(sets)
+
+    def brute(score, tau, pairs):
+        out = {}
+        for i, j in pairs:
+            a, b = sets[i], sets[j]
+            c = len(a & b)
+            if c and (v := score(c, len(a), len(b))) >= tau:
+                out[(i, j)] = v
+        return out
+
+    def jac(c, n1, n2):
+        return c / (n1 + n2 - c)
+
+    def scored(pairs_df):
+        return {(r[0], r[1]): r[2] for r in pairs_df.collect()}
+
+    def cont(c, n1, n2):
+        return c / min(n1, n2)
+
+    self_pairs = [(i, j) for i in ids for j in ids if i < j]
+    got = scored(jaccard_pairs(docs, "doc_id", "sh", 0.1))
+    assert got == brute(jac, 0.1, self_pairs) and got
+    got = scored(containment_pairs(docs, "doc_id", "sh", 0.4))
+    assert got == brute(cont, 0.4, self_pairs) and got
+
+    left = docs.filter(F.col("doc_id") % 2 == 0)
+    right = docs.filter(F.col("doc_id") % 2 == 1)
+    got = scored(jaccard_cross_pairs(left, right, "doc_id", "sh", 0.1))
+    cross = [(i, j) for i in ids if i % 2 == 0 for j in ids if j % 2 == 1]
+    assert got == brute(jac, 0.1, cross) and got
 
 
 def test_salted_join_plan_and_equivalence(spark):

@@ -52,6 +52,44 @@ def test_checkpoint_scratch_is_cleaned_up(spark):
     assert after == before, f"leftover checkpoints: {after - before}"
 
 
+def test_stream_dir_is_stable_across_processes(tmp_path):
+    """A single-file table streams through a symlink dir under TMPDIR. Its
+    name must not depend on the per-process salted ``str`` hash: two
+    processes with different hash seeds resolve the SAME dir, so repeated
+    runs reuse one dir instead of leaving one behind each."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    src = tmp_path / "events.parquet"
+    src.write_bytes(b"")
+    code = (
+        "import sys\n"
+        "from data_engineer_development_spark.streaming.windows import "
+        "_as_stream_dir\n"
+        "print(_as_stream_dir(sys.argv[1]))\n"
+    )
+    repo = str(Path(__file__).resolve().parent.parent)
+    dirs = set()
+    for seed in ("1", "2"):
+        env = {
+            **os.environ,
+            "PYTHONHASHSEED": seed,
+            "PYTHONPATH": repo,
+            "TMPDIR": str(tmp_path),
+        }
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(src)],
+            env=env, capture_output=True, text=True, check=True,
+        )
+        dirs.add(out.stdout.strip())
+    assert len(dirs) == 1, dirs
+    (d,) = dirs
+    assert os.path.dirname(d) == str(tmp_path)
+    assert os.readlink(os.path.join(d, "events.parquet")) == str(src)
+
+
 def test_rocksdb_state_store_matches_default(spark):
     """The 100×-state configuration (RocksDB provider: keyed state on
     executor-local disk instead of heap) must be a pure physical swap —
