@@ -108,8 +108,9 @@ def extract_features(media: DataFrame, dims: int = 64) -> DataFrame:
     Decode the payload with the engine's own codecs
     (operators/codecs.py — PPM/BMP/WAV) and derive a fixed-width content
     signature (channel means + grayscale chunk means for images, amplitude
-    chunk means for audio), all in [0, 1]. Output is directly consumable by
-    cosine_topk / neardup_pairs_cosine.
+    chunk means for audio), all in [0, 1]. With ``media_id`` renamed
+    ``vec_id`` the output is consumable by cosine_topk /
+    neardup_pairs_cosine.
     """
     from data_engineer_development_spark.operators import codecs
 

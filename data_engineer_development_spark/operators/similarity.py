@@ -1,41 +1,49 @@
 """Similarity search over embedding columns (north-star extension,
 SURVEY.md §7.2 item 5): brute-force cosine top-k as the exactness baseline,
-sign-LSH bucketing as the scale path.
+exact all-pairs near-dups as a broadcast block-nested-loop, and sign-LSH
+bucketing as the candidate key of the streaming near-dup gate and the
+bucket histogram.
 
 Dot products are sequential left-folds over the array (``aggregate`` /
-DuckDB ``list_reduce``): float32 products are exact in double, and both
-engines accumulate in the same order, so cosine values are bit-identical —
-the oracle checks the scores, not just the neighbor ids.
+DuckDB ``list_reduce`` / numpy ``_seq_dot``): float32 products are exact
+in double, and all three engines accumulate in the same order, so cosine
+values are bit-identical — the oracle checks the scores, not just the
+neighbor ids.
 
 Scale stance:
-- brute-force is O(Q·N·d) with the query side broadcast — right answer for
-  small Q or as the re-rank stage;
-- sign-LSH (`bucket_assign`) hashes vectors into 2^planes buckets with fixed
-  pseudo-random hyperplanes; candidates share a bucket (equi-join), turning
-  100 TB all-pairs into per-bucket work. An IVF variant would swap the
-  random planes for k-means centroids — same join shape.
+- brute-force top-k is O(Q·N·d) with the query side broadcast — right
+  answer for small Q or as the re-rank stage;
+- all-pairs near-dups (float or int8-quantized cosine) broadcast the index
+  side up to ``MAX_BROADCAST_ROWS`` and refuse past it; past that ceiling
+  the cell-restricted ``semdedup`` family is the path;
+- sign-LSH (`bucket_assign`) hashes vectors into 2^planes buckets with
+  fixed pseudo-random hyperplanes; candidates share a bucket (equi-join),
+  turning 100 TB all-pairs into per-bucket work.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType
 
 from data_engineer_development_spark.cache import track_persist
 from data_engineer_development_spark.functions.portable_hash import hyperplane
 
 
-def _seq_norms(mat: "np.ndarray") -> "np.ndarray":
-    """Row norms with the same sequential fold order as ``norm_expr``."""
-    acc = mat[:, 0] * mat[:, 0]
-    for d in range(1, mat.shape[1]):
-        acc += mat[:, d] * mat[:, d]
-    return np.sqrt(acc)
+def _seq_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """Dot products over the LAST axis as the strictly sequential fold
+    ``acc = a0*b0; acc += ad*bd`` — the JVM ``aggregate`` / DuckDB
+    ``list_reduce`` order, so every IEEE rounding step matches. Leading
+    axes broadcast: ``(n, d)·(n, d)`` is a row-wise dot (``_seq_dot(M, M)``
+    the squared norms), ``(m, 1, d)·(1, n, d)`` an m×n block of pairs."""
+    acc = A[..., 0] * B[..., 0]
+    for d in range(1, A.shape[-1]):
+        acc += A[..., d] * B[..., d]
+    return acc
 
 
 def _seq_dot_impl(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -43,24 +51,18 @@ def _seq_dot_impl(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series([], dtype="float64")
     A = np.vstack(a.to_numpy()).astype(np.float64)
     B = np.vstack(b.to_numpy()).astype(np.float64)
-    acc = A[:, 0] * B[:, 0]
-    for d in range(1, A.shape[1]):
-        acc += A[:, d] * B[:, d]
-    return pd.Series(acc)
+    return pd.Series(_seq_dot(A, B))
 
 
 _SEQ_DOT = None
 
 
 def seq_dot(a, b) -> F.Column:
-    """Arrow-vectorized dot product with STRICTLY SEQUENTIAL accumulation.
-
-    ``acc = a0*b0; acc += a1*b1; ...`` — the same left-fold order as the JVM
-    ``aggregate`` expression and the DuckDB ``list_reduce`` oracle, so every
-    IEEE rounding step is identical across all three, while numpy executes
+    """Arrow-vectorized dot product with STRICTLY SEQUENTIAL accumulation
+    (``_seq_dot``): the same left-fold order as the JVM ``aggregate``
+    expression and the DuckDB ``list_reduce`` oracle, while numpy executes
     each step vectorized across the whole Arrow batch (~100× faster than
-    interpreting the fold per row). This is the hot-path scoring kernel for
-    all-pairs similarity (12.5M pairs at sf0.1; block-distributed at 100 TB).
+    interpreting the fold per row).
 
     (UDF registration is lazy: ``pandas_udf`` needs a live SparkSession.)
     """
@@ -86,10 +88,6 @@ def norm_expr(a: str) -> F.Column:
     )
 
 
-def cosine(a: str, b: str) -> F.Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 #: pairs per scoring task — enough that Arrow batching and numpy vectorization
 #: amortize, small enough that tasks stay balanced. Empirically (local[32],
 #: 2M pairs) oversubscribing tasks past this costs 6× (JVM Arrow pumps and
@@ -106,18 +104,17 @@ def cosine_topk(
     vectors: DataFrame,
     query_ids: list[int],
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query id (self excluded).
-    The query side is broadcast; ranking is deterministic (score desc, id).
+    """Exact top-k cosine neighbors (``vec_id``, ``embedding``) for each
+    query id (self excluded). The query side is broadcast; ranking is
+    deterministic (score desc, id).
 
     ``dims``, when set, pins participating vectors to exactly that width
     (oracle-portable callers MUST pin: SQL duals that index 1..dims
     NULL-out shorter vectors but truncate longer ones)."""
     if dims is not None:
-        vectors = vectors.filter(F.size(vec_col) == dims)
+        vectors = vectors.filter(F.size("embedding") == dims)
     # The probe side sets the output partitioning of the broadcast join —
     # size it by pair count so the scoring stage neither runs on one task
     # (single-file scan) nor fragments into per-task overhead.
@@ -127,20 +124,20 @@ def cosine_topk(
     # lesson: 0/0 cosines are NaN, and Spark/DuckDB order NaN differently
     # under DESC — no NaN may reach the row_number ranking)
     q = (
-        vectors.filter(F.col(id_col).isin(query_ids))
+        vectors.filter(F.col("vec_id").isin(query_ids))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm_expr(vec_col).alias("qn"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            norm_expr("embedding").alias("qn"),
         )
         .filter(F.col("qn") > 0)
     )
     n = (
         vectors.repartition(parts)
         .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("nv"),
-            norm_expr(vec_col).alias("nn"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("nv"),
+            norm_expr("embedding").alias("nn"),
         )
         .filter(F.col("nn") > 0)
     )
@@ -162,13 +159,13 @@ def bucket_assign(
     vectors: DataFrame,
     planes: int = 8,
     dims: int = 64,
-    vec_col: str = "embedding",
     plane_offset: int = 0,
     out_col: str = "bucket",
 ) -> DataFrame:
-    """Sign-LSH bucket id: bit p = (v · hyperplane_{plane_offset+p} >= 0).
-    Hyperplanes are fixed md5-derived 3-decimal literals (portable to the
-    oracle). ``plane_offset`` selects a disjoint slice of the same plane
+    """Sign-LSH bucket id of ``embedding``: bit p =
+    (v · hyperplane_{plane_offset+p} >= 0). Hyperplanes are fixed
+    md5-derived 3-decimal literals (portable to the oracle).
+    ``plane_offset`` selects a disjoint slice of the same plane
     family — table t of a multi-table (banded) LSH uses offset t·planes,
     so table 0 is bit-identical to the single-table assignment."""
     bit_cols = []
@@ -180,7 +177,7 @@ def bucket_assign(
         # expression tree stays small — a flat 512-term sum-of-cases blows
         # Catalyst analysis/codegen time (~40 s of pure plan compilation).
         dot = (
-            f"aggregate(zip_with({vec_col}, array({lits}), "
+            f"aggregate(zip_with(embedding, array({lits}), "
             f"(x, w) -> cast(x as double) * w), cast(0.0 as double), "
             f"(acc, v) -> acc + v)"
         )
@@ -188,132 +185,122 @@ def bucket_assign(
     return vectors.withColumn(out_col, F.expr(" + ".join(bit_cols)))
 
 
-#: exact-path ceiling: the index side is broadcast as one numpy matrix
+#: all-pairs ceiling: the index side is broadcast as one numpy matrix
 #: (~0.5 GB per million 64-dim float64 vectors); past this the driver
-#: collect would be the scale-killer, so the operator auto-switches to the
-#: LSH-bucketed path instead of attempting it.
+#: collect would be the scale-killer, so both all-pairs scorers refuse.
 MAX_BROADCAST_ROWS = 1_000_000
 
 
-def neardup_pairs_cosine(
-    vectors: DataFrame,
+def _block_pairs(
+    frame: DataFrame,
     tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_lsh: bool = False,
-    planes: int = 4,
-    dims: int = 64,
-    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
+    score,
+    with_score: bool,
+    width_col: str | None = None,
+    dims: int | None = None,
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: cosine ≥ tau, id1 < id2.
+    """Distributed **block-nested-loop** pairs (id1 < id2, score ≥ tau)
+    over ``frame`` = (vec_id, payload...): the whole frame is collected
+    and broadcast as numpy (vec_id as int64, array payloads as float64
+    matrices, scalar payloads as int64); each task scores its block of
+    rows against it INSIDE numpy via ``mapInPandas`` — ``score(a, b)``
+    maps the two payload lists to an m×n score matrix — and emits only
+    the surviving pairs (plus the score as ``cosine`` when
+    ``with_score``). The O(N²) pair set is never materialized as Spark
+    rows and never crosses the Arrow boundary. (This mirrors Spark's own
+    BroadcastNestedLoopJoin memory shape: the broadcast side must fit per
+    executor.) Past ``MAX_BROADCAST_ROWS`` collected rows it raises.
 
-    Exact path = distributed **block-nested-loop**: the whole index side
-    (id, vector, norm) is broadcast as one numpy matrix; each task scores its
-    block of rows against the matrix INSIDE numpy via ``mapInPandas`` and
-    emits only the surviving (id1, id2, cosine) rows. The O(N²) pair set is
-    never materialized as Spark rows and never crosses the Arrow boundary —
-    at sf0.1 that's the difference between shipping ~1 GB of per-pair arrays
-    JVM→Python and shipping 2 000 input rows + a few hundred output rows.
-    (This mirrors Spark's own BroadcastNestedLoopJoin memory shape: the
-    broadcast side must fit per executor — 64-dim float64 ≈ 0.5 GB per
-    million vectors. Past that, ``use_lsh=True`` is the path.)
+    ``width_col`` pins participants to rows whose ``width_col`` array has
+    ``dims`` elements (``dims=None``: the max width collected) on both
+    sides; without it mixed widths fail loudly in ``np.vstack``."""
+    spark = frame.sparkSession
+    out_schema = "id1 long, id2 long" + (", cosine double" if with_score else "")
+    rows = frame.collect()  # bounded: the ceiling below
+    if len(rows) > MAX_BROADCAST_ROWS:
+        # caller-facing contract, not an internal invariant: under
+        # `python -O` an assert strips and the oversized corpus would
+        # proceed into the O(N²) broadcast (ADVICE r12 #1 class)
+        raise ValueError(
+            f"all-pairs near-dups are the O(N²) exactness baseline; "
+            f"{len(rows)} vectors exceed the {MAX_BROADCAST_ROWS} ceiling"
+        )
+    if width_col is not None:
+        if dims is None:
+            dims = max((len(r[width_col]) for r in rows), default=0)
+        rows = [r for r in rows if len(r[width_col]) == dims]
+        frame = frame.filter(F.size(width_col) == dims)
+    if not rows:
+        # np.vstack([]) raises; an empty (or all-zero-norm) corpus has no
+        # pairs — return the empty result with the contract schema
+        return spark.createDataFrame([], out_schema)
+    id_col, *cols = frame.columns
+    is_mat = [isinstance(frame.schema[c].dataType, ArrayType) for c in cols]
 
-    All arithmetic is the same sequential left-fold as the JVM ``aggregate``
-    expression and the DuckDB oracle (see ``seq_dot``), so cosine values are
-    bit-identical across all three.
+    def decode(columns):
+        return [
+            np.vstack(c).astype(np.float64) if m else np.asarray(c, np.int64)
+            for c, m in zip(columns, is_mat)
+        ]
 
-    ``use_lsh=True`` restricts candidate pairs to same-bucket (the scale
-    path; recall < 1 by design) via a bucket equi-join. The exact path
-    guards its own ceiling: above ``max_broadcast_rows`` vectors it
-    auto-switches to the LSH path rather than collect a matrix the driver
-    can't hold.
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    bc = spark.sparkContext.broadcast(
+        (ids, decode([[r[i + 1] for r in rows] for i in range(len(cols))]))
+    )
+    parts = _pair_partitions(len(ids) * (len(ids) - 1) // 2, spark)
 
-    Zero-norm vectors are EXCLUDED up front on both paths: their cosine is
-    0/0, and the three backends disagree on what NaN does to a ``>= tau``
-    filter (numpy: false; Spark SQL and DuckDB: NaN compares greater than
+    def score_blocks(batches):
+        b_ids, b = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            a_ids = pdf[id_col].to_numpy().astype(np.int64)
+            s = score(decode([pdf[c].to_numpy() for c in cols]), b)
+            i, j = np.nonzero((a_ids[:, None] < b_ids[None, :]) & (s >= tau))
+            out = {"id1": a_ids[i], "id2": b_ids[j]}
+            if with_score:
+                out["cosine"] = s[i, j]
+            yield pd.DataFrame(out)
+
+    return frame.repartition(parts).mapInPandas(score_blocks, out_schema)
+
+
+def _cos(a, b) -> "np.ndarray":
+    """Float cosine block: ``_seq_dot`` over the ``_seq_dot`` norms —
+    sqrt(0.0 + x0² + …) is ``norm_expr``'s fold, so the block equals the
+    JVM and DuckDB cosine bit-for-bit."""
+    (A,), (B,) = a, b
+    an, bn = np.sqrt(_seq_dot(A, A)), np.sqrt(_seq_dot(B, B))
+    return _seq_dot(A[:, None, :], B[None, :, :]) / (an[:, None] * bn[None, :])
+
+
+def neardup_pairs_cosine(vectors: DataFrame, tau: float) -> DataFrame:
+    """Embedding near-duplicate pairs (``vec_id``, ``embedding``):
+    cosine ≥ tau, id1 < id2 — exact, via the ``_block_pairs``
+    block-nested-loop (at sf0.1 that's the difference between shipping
+    ~1 GB of per-pair arrays JVM→Python and shipping 2 000 input rows + a
+    few hundred output rows). Past ``MAX_BROADCAST_ROWS`` non-zero-norm
+    vectors it raises ``ValueError``; the cell-restricted ``semdedup``
+    family is the scale path.
+
+    All arithmetic is the same sequential left-fold as the JVM
+    ``aggregate`` expression and the DuckDB oracle (see ``_seq_dot``), so
+    cosine values are bit-identical across all three.
+
+    Zero-norm vectors are EXCLUDED up front: their cosine is 0/0, and the
+    three backends disagree on what NaN does to a ``>= tau`` filter
+    (numpy: false; Spark SQL and DuckDB: NaN compares greater than
     everything) — filtering is the only semantics all three express
     identically. Mixed vector widths fail loudly in the numpy kernel
     (``np.vstack`` raises) rather than silently NULL-ing like the JVM
     ``zip_with`` would; callers with mixed-width corpora filter to one
     width first (see ``semdedup``'s dims pinning).
     """
-    n_vec: int | None = None
-    if not use_lsh:
-        # one count() job, paid only when the caller asked for the exact
-        # path (explicit use_lsh=True skips it entirely)
-        n_vec = vectors.count()
-        if n_vec > max_broadcast_rows:
-            warnings.warn(
-                f"neardup_pairs_cosine: {n_vec} vectors exceed the exact-path "
-                f"broadcast ceiling ({max_broadcast_rows}); switching to the "
-                "LSH-bucketed path (recall < 1). Pass use_lsh=True to opt in "
-                "explicitly, or raise max_broadcast_rows.",
-                stacklevel=2,
-            )
-            use_lsh = True
-    if use_lsh:
-        # no count() here: the bucket equi-join repartitions on its key
-        # anyway (and AQE re-coalesces), so input parallelism just needs a
-        # sane floor — defaultParallelism, not a pair-count-sized job
-        parts = vectors.sparkSession.sparkContext.defaultParallelism
-        with_norm = (
-            vectors.repartition(parts)
-            .select(F.col(id_col), F.col(vec_col), norm_expr(vec_col).alias("nrm"))
-            .filter(F.col("nrm") > 0)
-        )
-        v = bucket_assign(with_norm, planes=planes, dims=dims, vec_col=vec_col)
-        a = v.select(
-            F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"),
-            F.col("nrm").alias("nrm1"), "bucket",
-        )
-        b = v.select(
-            F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"),
-            F.col("nrm").alias("nrm2"), "bucket",
-        )
-        pairs = a.join(b, "bucket").filter(F.col("id1") < F.col("id2"))
-        return (
-            pairs.withColumn(
-                "cosine", seq_dot("v1", "v2") / (F.col("nrm1") * F.col("nrm2"))
-            )
-            .filter(F.col("cosine") >= tau)
-            .select("id1", "id2", "cosine")
-        )
-
-    spark = vectors.sparkSession
-    nz = vectors.filter(norm_expr(vec_col) > 0)
-    rows = nz.select(id_col, vec_col).collect()
-    if not rows:
-        # np.vstack([]) raises; an empty (or all-zero-norm) corpus has no
-        # pairs — return the empty result with the contract schema
-        return spark.createDataFrame([], "id1 long, id2 long, cosine double")
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.vstack([r[1] for r in rows]).astype(np.float64)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    parts = _pair_partitions(len(ids) * (len(ids) - 1) // 2, spark)
-
-    def score_blocks(batches):
-        b_ids, b_mat = bc.value
-        b_norm = _seq_norms(b_mat)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a_ids = pdf[id_col].to_numpy().astype(np.int64)
-            a_mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            a_norm = _seq_norms(a_mat)
-            # sequential left-fold over dims, vectorized over the block
-            acc = a_mat[:, 0:1] * b_mat[None, :, 0]
-            for d in range(1, a_mat.shape[1]):
-                acc += a_mat[:, d : d + 1] * b_mat[None, :, d]
-            cos = acc / (a_norm[:, None] * b_norm[None, :])
-            keep = (a_ids[:, None] < b_ids[None, :]) & (cos >= tau)
-            i, j = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id1": a_ids[i], "id2": b_ids[j], "cosine": cos[i, j]}
-            )
-
-    return nz.repartition(parts).mapInPandas(
-        score_blocks, "id1 long, id2 long, cosine double"
+    return _block_pairs(
+        vectors.filter(norm_expr("embedding") > 0).select("vec_id", "embedding"),
+        tau,
+        _cos,
+        with_score=True,
     )
 
 
@@ -327,7 +314,7 @@ _LONG_MAX = (1 << 63) - 1
 _LONG_MIN = -(1 << 63)
 
 
-def _quantize_rows(embs, np=np):
+def _quantize_rows(embs, nulls, np=np):
     """(qv_list, qn_list) for a sequence of embedding arrays — the int8
     max-abs grid with Spark-SQL semantics (the reference expression is
     pinned in tests/test_semdedup.py): each element is
@@ -335,7 +322,12 @@ def _quantize_rows(embs, np=np):
     the same IEEE operation order, ``mx`` is an exact max (order-free),
     and ``qn`` the int64 sum of squares (wrapping like non-ANSI bigint
     math). Rows are grouped by width so the arithmetic is one vectorized
-    pass per distinct width."""
+    pass per distinct width.
+
+    ``nulls[i]`` is None or row i's boolean NULL-element positions (the
+    element itself arrives as NaN): NULL takes no part in ``mx``
+    (``greatest`` skips it), stays NULL in qv and makes qn NULL — except
+    when ``mx`` is 0, where the SQL ``if`` yields 0 before reading x."""
     n = len(embs)
     qv_out: list = [None] * n
     qn_out: list = [None] * n
@@ -345,6 +337,8 @@ def _quantize_rows(embs, np=np):
         if e is None:
             continue  # NULL array → NULL qv / NULL qn (JVM transform(NULL))
         a = np.asarray(e, dtype=np.float64)  # float32→double: exact
+        if nulls[i] is not None:
+            a = np.where(nulls[i], 0.0, a)  # 0.0 never raises the max-abs
         arrs[i] = a
         by_len.setdefault(a.shape[0], []).append(i)
     for w, idxs in by_len.items():
@@ -379,6 +373,9 @@ def _quantize_rows(embs, np=np):
                 )
             qv_out[i] = qi.tolist()
             qn_out[i] = int(np.dot(qi, qi))  # int64: wraps like the JVM
+            if nulls[i] is not None and mx[r] != 0.0:
+                qv_out[i] = [None if m else x for x, m in zip(qv_out[i], nulls[i])]
+                qn_out[i] = None
     return qv_out, qn_out
 
 
@@ -412,7 +409,7 @@ def _with_quantized(
     event-time column — watermark it on this frame, downstream of the
     Python node).
 
-    One Arrow-batched ``mapInPandas`` pass over ``_quantize_rows``
+    One Arrow-batched ``mapInArrow`` pass over ``_quantize_rows``
     (OPTIMIZATION r18 — guide §4.2/§4.4), pinned bit-for-bit against the
     Spark-SQL higher-order-function formulation by
     tests/test_semdedup.py::test_numpy_quantizer_equals_jvm. That SQL
@@ -423,54 +420,55 @@ def _with_quantized(
     row (measured: the 8-row semdedup seed collect cost 2.0 s at sf0.1,
     ~5× the projection itself). The opaque Python node computes each
     quantity exactly once and is a pushdown barrier, so no consumer can
-    accidentally multiply it.
-
-    Caveat (documented divergence on degenerate data only): a NULL
-    *element* inside an embedding arrives through Arrow as NaN, so such
-    rows quantize like NaN-bearing rows (elements → 0) instead of the
-    SQL form's NULL-poisoned qn; NULL/empty ARRAYS and all-finite rows
-    — everything the fixtures and oracles exercise — agree exactly."""
+    accidentally multiply it. Arrow rather than pandas because a NULL
+    *element* keeps its validity bit in Arrow (pandas turns it into NaN),
+    and the other columns pass through without a conversion."""
     df = vectors.select(id_col, vec_col, *extra_cols)
-    in_cols = df.columns
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", qv array<bigint>, qn bigint"
 
     def quantize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf[in_cols].copy()
-            qv, qn = _quantize_rows(pdf[vec_col].to_numpy())
-            pdf["qv"] = qv
-            pdf["qn"] = pd.array(qn, dtype="Int64")
-            yield pdf
+        import pyarrow as pa
 
-    return df.mapInPandas(quantize, out_schema)
+        qv_type = pa.list_(pa.field("element", pa.int64()))
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            emb = rb.column(vec_col)
+            offs = emb.offsets.to_numpy()
+            valid = emb.is_valid().to_numpy(zero_copy_only=False)
+            flat = emb.values.to_numpy(zero_copy_only=False)  # NULL → NaN
+            null = emb.values.is_null().to_numpy(zero_copy_only=False)
+            spans = list(zip(offs[:-1], offs[1:], valid))
+            qv, qn = _quantize_rows(
+                [flat[a:b] if ok else None for a, b, ok in spans],
+                [null[a:b] if ok and null[a:b].any() else None for a, b, ok in spans],
+            )
+            yield rb.append_column("qv", pa.array(qv, qv_type)).append_column(
+                "qn", pa.array(qn, pa.int64())
+            )
+
+    return df.mapInArrow(quantize, out_schema)
 
 
 def quantized_neardup_pairs(
     vectors: DataFrame,
     tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
     dims: int | None = None,
 ) -> DataFrame:
-    """EXACT near-dup pairs (id1 < id2) on the int8-quantized grid — the
-    all-pairs truth set that grades ``semdedup``'s cell restriction
-    (``q_semdedup_recall_eval``), same role as the exact-Jaccard truth in
-    ``lsh_candidate_recall``.
+    """EXACT near-dup pairs (id1 < id2) of ``vec_id``/``embedding`` on the
+    int8-quantized grid — the all-pairs truth set that grades
+    ``semdedup``'s cell restriction (``q_semdedup_recall_eval``), same
+    role as the exact-Jaccard truth in ``lsh_candidate_recall``.
 
-    Same block-nested-loop shape as ``neardup_pairs_cosine``: the whole
-    quantized matrix (ids, qv, qn) broadcasts; each task scores its row
-    block against it in ONE ``_qcos`` float64 matmul (exact on the int8
-    grid — equal to the DuckDB oracle bit-for-bit, at BLAS speed) and
-    emits only the surviving id pairs — the O(N²) pair set never
-    materializes as rows.
+    The ``_block_pairs`` block-nested-loop of ``neardup_pairs_cosine``
+    over the quantized matrix (ids, qv, qn): each task scores its row
+    block in ONE ``_qcos`` float64 matmul (exact on the int8 grid — equal
+    to the DuckDB oracle bit-for-bit, at BLAS speed).
 
-    O(N²·d) BY DEFINITION (it is the exactness baseline); the broadcast
-    ceiling guards the driver the same way the brute cosine path does.
+    O(N²·d) BY DEFINITION (it is the exactness baseline); past
+    ``MAX_BROADCAST_ROWS`` non-zero-norm vectors it raises ``ValueError``.
     Zero-norm and off-dims vectors are excluded, as everywhere in the
     family. Callers with an oracle-pinned dimensionality (queries/
     similarity.DIMS) pass ``dims`` explicitly so both engines agree on
@@ -478,46 +476,14 @@ def quantized_neardup_pairs(
     ``dims=None`` takes the MAX width present in the data (deterministic,
     but data-dependent).
     """
-    spark = vectors.sparkSession
-    q = _with_quantized(vectors, id_col, vec_col).filter(F.col("qn") > 0)
-    rows = q.select(id_col, "qv", "qn").collect()  # bounded: exactness baseline
-    if len(rows) > max_broadcast_rows:
-        # caller-facing contract, not an internal invariant: under
-        # `python -O` an assert strips and the oversized corpus would
-        # proceed into the O(N²) broadcast (ADVICE r12 #1 class)
-        raise ValueError(
-            f"quantized_neardup_pairs is the O(N²) truth baseline; "
-            f"{len(rows)} vectors exceed the {max_broadcast_rows} ceiling"
-        )
-    if dims is None:
-        dims = max((len(r["qv"]) for r in rows), default=0)
-    rows = [r for r in rows if len(r["qv"]) == dims]
-    if not rows:
-        return spark.createDataFrame([], "id1 long, id2 long")
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.array([r["qv"] for r in rows], dtype=np.float64)
-    qns = np.array([r["qn"] for r in rows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((ids, mat, qns))
-    parts = _pair_partitions(len(ids) * (len(ids) - 1) // 2, spark)
-
-    def score_blocks(batches):
-        b_ids, b_mat, b_qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a_ids = pdf[id_col].to_numpy().astype(np.int64)
-            a_mat = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
-            a_qn = pdf["qn"].to_numpy().astype(np.int64)
-            cos = _qcos(a_mat, a_qn, b_mat, b_qn)
-            keep = (a_ids[:, None] < b_ids[None, :]) & (cos >= tau)
-            i, j = np.nonzero(keep)
-            yield pd.DataFrame({"id1": a_ids[i], "id2": b_ids[j]})
-
-    return (
-        q.filter(F.size(vec_col) == dims)
-        .select(id_col, "qv", "qn")
-        .repartition(parts)
-        .mapInPandas(score_blocks, "id1 long, id2 long")
+    q = _with_quantized(vectors, "vec_id", "embedding").filter(F.col("qn") > 0)
+    return _block_pairs(
+        q.select("vec_id", "qv", "qn"),
+        tau,
+        lambda a, b: _qcos(*a, *b),
+        with_score=False,
+        width_col="qv",
+        dims=dims,
     )
 
 
@@ -587,7 +553,7 @@ def _assign_cells(
 
 
 def _seed_codebook(
-    q: DataFrame, k_cells: int, dims: int | None, id_col: str
+    q: DataFrame, k_cells: int, dims: int | None
 ) -> tuple[list[tuple[int, list[int], int]], int]:
     """Codebook seed = the K lowest USABLE ids (qn > 0, width match) of a
     ``_with_quantized`` frame. Width pinning happens BEFORE picking
@@ -595,12 +561,12 @@ def _seed_codebook(
     MEMBERSHIP can't drift (the DuckDB side draws its codebook from the
     dims-filtered CTE); with dims=None the lowest usable id defines the
     width, deterministically. Bounded: ≤ k_cells rows collected."""
-    cand = q.filter(F.col("qn") > 0).select(id_col, "qv", "qn")
+    cand = q.filter(F.col("qn") > 0).select("vec_id", "qv", "qn")
     if dims is not None:
         cand = cand.filter(F.size("qv") == dims)
     seed_rows = sorted(
-        cand.orderBy(id_col).limit(k_cells).collect(),
-        key=lambda r: r[id_col],
+        cand.orderBy("vec_id").limit(k_cells).collect(),
+        key=lambda r: r["vec_id"],
     )
     if not seed_rows:
         # caller-facing: an empty/zero-norm corpus is a data problem the
@@ -610,7 +576,7 @@ def _seed_codebook(
         dims = len(seed_rows[0]["qv"])
         seed_rows = [r for r in seed_rows if len(r["qv"]) == dims]
     cents = [
-        (int(r[id_col]), [int(x) for x in r["qv"]], int(r["qn"]))
+        (int(r["vec_id"]), [int(x) for x in r["qv"]], int(r["qn"]))
         for r in seed_rows
     ]
     return cents, dims
@@ -673,7 +639,7 @@ def _lloyd_rounds(
     return codebooks
 
 
-def _dedup_cell(id_col: str, tau: float, keys: dict[str, str]):
+def _dedup_cell(tau: float, keys: dict[str, str]):
     """The per-cell greedy kernel for ``groupBy(...).applyInPandas``: a
     vector's ``dup_of`` is the LOWEST id in its group that covers it at
     quantized cosine ≥ tau (``_qcos`` Gram, exact), ``keep`` = 1 iff
@@ -681,8 +647,8 @@ def _dedup_cell(id_col: str, tau: float, keys: dict[str, str]):
     maps output name → input column — then ``dup_of`` and ``keep``."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         M = np.vstack(pdf["qv"].to_numpy())
         qn = pdf["qn"].to_numpy(dtype=np.int64)
         # row i covers column j, i < j
@@ -695,7 +661,7 @@ def _dedup_cell(id_col: str, tau: float, keys: dict[str, str]):
         )
         return pd.DataFrame(
             {
-                id_col: ids,
+                "vec_id": ids,
                 **{out: pdf[col].to_numpy() for out, col in keys.items()},
                 "dup_of": dup_of,
                 "keep": (~has_dup).astype(np.int32),
@@ -762,8 +728,6 @@ def semdedup(
     vectors: DataFrame,
     k_cells: int | None = 8,
     tau: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
     train_iters: int = 0,
 ) -> DataFrame:
@@ -827,7 +791,7 @@ def semdedup(
     holds exactly (|dot| ≤ dims·127² < 2⁵³ — see ``_qcos``), and
     sqrt/divide are correctly-rounded IEEE ops on identical inputs.
     """
-    q = _with_quantized(vectors, id_col, vec_col)
+    q = _with_quantized(vectors, "vec_id", "embedding")
     if k_cells is None:
         # auto-K (measured policy — see auto_k_cells) from the RAW row
         # count: Catalyst serves an unfiltered parquet count from footer
@@ -837,10 +801,10 @@ def semdedup(
         # cell-size BUDGET wants. Counting the qn>0 pool instead would
         # burn a full quantization pass just to pick K.
         k_cells = auto_k_cells(vectors.count())
-    cents, dims = _seed_codebook(q, k_cells, dims, id_col)
+    cents, dims = _seed_codebook(q, k_cells, dims)
 
-    usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0)).select(
-        id_col, "qv", "qn"
+    usable = q.filter((F.size("embedding") == dims) & (F.col("qn") > 0)).select(
+        "vec_id", "qv", "qn"
     )
     if train_iters > 0:
         # every Lloyd round + the final assignment re-reads the quantized
@@ -854,8 +818,8 @@ def semdedup(
         _assign_cells(usable, codebooks)
         .groupBy("cell")
         .applyInPandas(
-            _dedup_cell(id_col, tau, {"cell": "cell"}),
-            f"{id_col} long, cell long, dup_of long, keep int",
+            _dedup_cell(tau, {"cell": "cell"}),
+            "vec_id long, cell long, dup_of long, keep int",
         )
     )
 
@@ -865,8 +829,6 @@ def semdedup_incremental(
     new: DataFrame,
     k_cells: int | None = 8,
     tau: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
     train_iters: int = 0,
     strict: bool = False,
@@ -919,8 +881,8 @@ def semdedup_incremental(
         # kernel guard below cannot. One bounded job: semi-join on id,
         # fetch at most 10 offenders for the message.
         overlap = (
-            new.select(id_col)
-            .join(base.select(id_col), id_col, "left_semi")
+            new.select("vec_id")
+            .join(base.select("vec_id"), "vec_id", "left_semi")
             .limit(10)
             .collect()
         )
@@ -928,10 +890,10 @@ def semdedup_incremental(
             raise ValueError(
                 "semdedup_incremental(strict=True): base/new ids must be "
                 f"disjoint; overlapping ids (first 10): "
-                f"{sorted(int(r[id_col]) for r in overlap)} — re-embeds "
+                f"{sorted(int(r['vec_id']) for r in overlap)} — re-embeds "
                 "are a delete + insert, not an incremental delta"
             )
-    qb = _with_quantized(base, id_col, vec_col)
+    qb = _with_quantized(base, "vec_id", "embedding")
     if k_cells is None:
         # auto-K from the BASE side's row count (the frozen-codebook
         # side). Metadata-served only when base is an unfiltered scan —
@@ -941,32 +903,32 @@ def semdedup_incremental(
         # from the pass that built it — re-deriving it per delta is
         # wasted work AND risks moving cell boundaries).
         k_cells = auto_k_cells(base.count())
-    cents, dims = _seed_codebook(qb, k_cells, dims, id_col)
+    cents, dims = _seed_codebook(qb, k_cells, dims)
 
     usable_b = qb.filter(
-        (F.size(vec_col) == dims) & (F.col("qn") > 0)
-    ).select(id_col, "qv", "qn")
+        (F.size("embedding") == dims) & (F.col("qn") > 0)
+    ).select("vec_id", "qv", "qn")
     if train_iters > 0:
         usable_b = track_persist(usable_b)
     codebooks = _lloyd_rounds(usable_b, {None: cents}, dims, train_iters)
 
-    qn_ = _with_quantized(new, id_col, vec_col)
+    qn_ = _with_quantized(new, "vec_id", "embedding")
     usable_n = qn_.filter(
-        (F.size(vec_col) == dims) & (F.col("qn") > 0)
-    ).select(id_col, "qv", "qn")
+        (F.size("embedding") == dims) & (F.col("qn") > 0)
+    ).select("vec_id", "qv", "qn")
 
     both = _assign_cells(
         usable_b.withColumn("is_new", F.lit(0)).unionByName(
             usable_n.withColumn("is_new", F.lit(1))
         ),
         codebooks,
-    ).select(id_col, "qv", "qn", "cell", "is_new")
+    ).select("vec_id", "qv", "qn", "cell", "is_new")
 
     def dedup_cell_incr(pdf: pd.DataFrame) -> pd.DataFrame:
-        nd = pdf[pdf["is_new"] == 1].sort_values(id_col)
+        nd = pdf[pdf["is_new"] == 1].sort_values("vec_id")
         empty = pd.DataFrame(
             {
-                id_col: pd.Series([], dtype="int64"),
+                "vec_id": pd.Series([], dtype="int64"),
                 "cell": pd.Series([], dtype="int64"),
                 "dup_of": pd.array([], dtype="Int64"),
                 "keep": pd.Series([], dtype="int32"),
@@ -974,14 +936,14 @@ def semdedup_incremental(
         )
         if not len(nd):
             return empty
-        ids_n = nd[id_col].to_numpy(dtype=np.int64)
+        ids_n = nd["vec_id"].to_numpy(dtype=np.int64)
         N = np.vstack(nd["qv"].to_numpy())
         nqn = nd["qn"].to_numpy(dtype=np.int64)
         dup = np.full(len(ids_n), -1, dtype=np.int64)
 
         bd = pdf[pdf["is_new"] == 0]
         if len(bd):
-            ids_b = bd[id_col].to_numpy(dtype=np.int64)
+            ids_b = bd["vec_id"].to_numpy(dtype=np.int64)
             # caller-contract guard (ADVICE r10): an id on both sides
             # lands in the SAME cell (identical vector → identical
             # quantization → identical argmax), so checking inside the
@@ -1009,7 +971,7 @@ def semdedup_incremental(
 
         return pd.DataFrame(
             {
-                id_col: ids_n,
+                "vec_id": ids_n,
                 "cell": nd["cell"].to_numpy(dtype=np.int64),
                 "dup_of": pd.array(
                     [None if d < 0 else int(d) for d in dup], dtype="Int64"
@@ -1019,7 +981,7 @@ def semdedup_incremental(
         )
 
     return both.groupBy("cell").applyInPandas(
-        dedup_cell_incr, f"{id_col} long, cell long, dup_of long, keep int"
+        dedup_cell_incr, "vec_id long, cell long, dup_of long, keep int"
     )
 
 
@@ -1033,8 +995,6 @@ def semdedup_sharded(
     shard_col: str = "label",
     k_cells: int = 8,
     tau: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
     train_iters: int = 0,
 ) -> DataFrame:
@@ -1073,7 +1033,7 @@ def semdedup_sharded(
     byte-identical to ``semdedup``'s either way.
     """
     q = _with_quantized(
-        vectors.filter(F.col(shard_col).isNotNull()), id_col, vec_col,
+        vectors.filter(F.col(shard_col).isNotNull()), "vec_id", "embedding",
         shard_col,
     )
     if dims is None:
@@ -1081,8 +1041,8 @@ def semdedup_sharded(
         # rule as _seed_codebook's dims=None path)
         first = (
             q.filter(F.col("qn") > 0)
-            .orderBy(id_col)
-            .select(F.size(vec_col).alias("w"))
+            .orderBy("vec_id")
+            .select(F.size("embedding").alias("w"))
             .limit(1)
             .collect()
         )
@@ -1092,12 +1052,12 @@ def semdedup_sharded(
             # then surface as an opaque KeyError far from the cause
             raise ValueError("semdedup_sharded: no usable vectors")
         dims = int(first[0]["w"])
-    usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0)).select(
-        id_col, shard_col, "qv", "qn"
+    usable = q.filter((F.size("embedding") == dims) & (F.col("qn") > 0)).select(
+        "vec_id", shard_col, "qv", "qn"
     )
 
     rk = F.row_number().over(
-        Window.partitionBy(shard_col).orderBy(F.col(id_col).asc())
+        Window.partitionBy(shard_col).orderBy(F.col("vec_id").asc())
     )
     # Seed selection in two phases so the rank shuffle carries only TWO
     # THIN COLUMNS (shard, id) — never the qv arrays; at 100 TB the
@@ -1107,10 +1067,10 @@ def semdedup_sharded(
     # zero corpus shuffle. Measured sf0.1: shuffle bytes for the seed
     # stage drop from the full frame to the key pair.
     seed_ids = (
-        usable.select(shard_col, id_col)
+        usable.select(shard_col, "vec_id")
         .withColumn("__rk", rk)
         .filter(F.col("__rk") <= k_cells)
-        .select(shard_col, id_col)
+        .select(shard_col, "vec_id")
     )
     # fetch on (shard, id) — not id alone (ADVICE r11): ids are expected
     # globally unique, but if a seed id ALSO exists in another shard an
@@ -1120,8 +1080,8 @@ def semdedup_sharded(
     # WITHIN a shard are caught by the explicit (shard, id) uniqueness
     # check below.
     seed_rows = (
-        usable.join(F.broadcast(seed_ids), [shard_col, id_col])
-        .select(shard_col, id_col, "qv", "qn")
+        usable.join(F.broadcast(seed_ids), [shard_col, "vec_id"])
+        .select(shard_col, "vec_id", "qv", "qn")
         .limit(SHARDED_SEED_MAX_ROWS + 1)
         .collect()  # bounded: ≤ n_shards·k_cells rows (guarded below)
     )
@@ -1141,7 +1101,7 @@ def semdedup_sharded(
     # possibly different-payload centroids — a hash mismatch with nothing
     # pointing at the cause. The collect above already holds every fetched
     # row, so the check is driver-side and free of extra jobs.
-    seed_keys = [(r[shard_col], r[id_col]) for r in seed_rows]
+    seed_keys = [(r[shard_col], r["vec_id"]) for r in seed_rows]
     if len(seed_keys) != len(set(seed_keys)):
         from collections import Counter
 
@@ -1156,9 +1116,9 @@ def semdedup_sharded(
             "verdict rows for that id"
         )
     cents_by_shard: dict = {}
-    for r in sorted(seed_rows, key=lambda r: (r[shard_col], r[id_col])):
+    for r in sorted(seed_rows, key=lambda r: (r[shard_col], r["vec_id"])):
         cents_by_shard.setdefault(r[shard_col], []).append(
-            (int(r[id_col]), [int(x) for x in r["qv"]], int(r["qn"]))
+            (int(r["vec_id"]), [int(x) for x in r["qv"]], int(r["qn"]))
         )
 
     if train_iters > 0:
@@ -1171,8 +1131,8 @@ def semdedup_sharded(
         _assign_cells(usable, cents_by_shard, shard_col)
         .groupBy(shard_col, "cell")
         .applyInPandas(
-            _dedup_cell(id_col, tau, {"shard": shard_col, "cell": "cell"}),
-            f"{id_col} long, shard {shard_t}, cell long, dup_of long, "
+            _dedup_cell(tau, {"shard": shard_col, "cell": "cell"}),
+            f"vec_id long, shard {shard_t}, cell long, dup_of long, "
             "keep int",
         )
     )

@@ -32,14 +32,18 @@ is the same sequential left-fold in Spark, numpy, and the DuckDB oracle
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineer_development_spark.functions.portable_hash import hyperplane
 from data_engineer_development_spark.operators.similarity import (
+    _seq_dot,
     dot_expr,
     norm_expr,
-    seq_dot,
+)
+from data_engineer_development_spark.queries.extras import (
+    _ivf_assign_ctes,
+    _ivf_ranked,
 )
 from data_engineer_development_spark.queries.similarity import (
     DIMS,
@@ -66,38 +70,10 @@ _HN_ANCHOR_CHUNK = 1024
 
 
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = load_table(spark, sf_dir, "embeddings")
-    # zero-norm + width exclusion on BOTH sides (corpus rows and
-    # centroids), same as the rest of the similarity family: a zero
-    # vector's cosine is 0/0 = NaN and Spark/DuckDB order NaN vs finite
-    # values differently under DESC, and the oracle's generate_series
-    # indexing NULLs-out shorter vectors but TRUNCATES longer ones — only
-    # an explicit dims pin keeps membership identical across engines.
-    usable = vecs.filter(F.size("embedding") == DIMS)
-    cents = (
-        usable.filter(F.col("vec_id") <= _HN_K)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cv"),
-            norm_expr("embedding").alias("cn"),
-        )
-        .filter(F.col("cn") > 0)
-    )
-    # K-row centroid broadcast fan-out → nearest-cell assignment (the
-    # zero-shuffle IVF shape; one row_number per vector, partitioned).
-    scored = (
-        usable.select(
-            "vec_id", "label", "embedding", norm_expr("embedding").alias("vn")
-        )
-        .filter(F.col("vn") > 0)
-        .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "cos_c", seq_dot("embedding", "cv") / (F.col("vn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_c"), F.asc("cent_id"))
+    # nearest-cell assignment: the sim_ivf_topk centroid family (zero-norm
+    # + width exclusion on corpus rows and centroids alike)
     assigned = (
-        scored.withColumn("ark", F.row_number().over(w))
+        _ivf_ranked(load_table(spark, sf_dir, "embeddings"), _HN_K, "label")
         .filter(F.col("ark") == 1)
         .select("vec_id", "label", "embedding", "vn", F.col("cent_id").alias("cell"))
     )
@@ -110,10 +86,10 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applyInPandas over the cell — the semdedup cell-kernel shape) and
     # the kernel computes the same numbers: the cosine is the SAME
     # strictly-sequential left-fold over dims as seq_dot/the oracle's
-    # list_reduce (acc = a0·b0; acc += ad·bd — vectorized as an outer
-    # product per dim, so every pair's IEEE rounding sequence is
-    # unchanged), the same an·nn denominator from the SAME JVM-computed
-    # norms riding in on the frame, and the same (cosine DESC,
+    # list_reduce (``_seq_dot`` over an anchor block × the cell, so every
+    # pair's IEEE rounding sequence is unchanged), the same an·nn
+    # denominator from the SAME JVM-computed norms riding in on the
+    # frame, and the same (cosine DESC,
     # negative_id ASC) top-k via a stable argsort over rows pre-sorted by
     # id (bit-equal ties keep column order = ascending negative_id —
     # exactly row_number's tie-break; Spark's sort normalizes -0.0 to 0.0,
@@ -152,12 +128,9 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one-shot grid while peak memory is O(chunk·m), not O(m²)
         for lo in range(0, m, _HN_ANCHOR_CHUNK):
             hi = min(lo + _HN_ANCHOR_CHUNK, m)
-            A = V[lo:hi]
-            # sequential left-fold over dims, vectorized over the block
-            acc = A[:, 0:1] * V[None, :, 0]
-            for d in range(1, V.shape[1]):
-                acc += A[:, d : d + 1] * V[None, :, d]
-            cos = acc / (vn[lo:hi, None] * vn[None, :])
+            cos = _seq_dot(V[lo:hi, None, :], V[None, :, :]) / (
+                vn[lo:hi, None] * vn[None, :]
+            )
             cross = (
                 valid[lo:hi, None]
                 & valid[None, :]
@@ -204,25 +177,14 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"negative_id long, negative_label {label_t}, cosine double"
     )
     return (
-        assigned.select("vec_id", "label", "embedding", "vn", "cell")
-        .groupBy("cell")
+        assigned.groupBy("cell")
         .applyInPandas(topk_negatives, out_schema)
         .orderBy("anchor_id", "rk")
     )
 
 
 _HARD_NEG_SQL = f"""
-WITH cents AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-               WHERE vec_id <= {_HN_K} AND len(embedding) = {DIMS}
-                 AND {_duck_norm('embedding')} > 0),
-vs AS (SELECT vec_id, label, embedding FROM embeddings
-       WHERE len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-scored AS (SELECT v.vec_id, v.label, v.embedding, c.cent_id,
-                  {_duck_cosine('v.embedding', 'c.cv')} AS cos_c
-           FROM vs v CROSS JOIN cents c),
-ranked_asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cos_c DESC, cent_id) AS ark
-               FROM scored),
+WITH {_ivf_assign_ctes(_HN_K, "label")},
 assigned AS (SELECT vec_id, label, embedding, cent_id AS cell
              FROM ranked_asg WHERE ark = 1),
 pairs AS (SELECT a.vec_id AS anchor_id, a.label AS anchor_label,

@@ -14,11 +14,13 @@ from pyspark.sql import functions as F
 
 from data_engineer_development_spark.functions import dsum
 from data_engineer_development_spark.operators.similarity import (
+    cosine_topk,
     norm_expr,
     seq_dot,
 )
 from data_engineer_development_spark.queries.similarity import (
     DIMS,
+    _bf_topk_ctes,
     _duck_cosine,
     _duck_norm,
 )
@@ -227,8 +229,11 @@ _IVF_TOPK = 5
 _IVF_NPROBE = 2  # for sim_ivf_multiprobe; sim_ivf_topk stays 1-probe
 
 
-def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    vecs = load_table(spark, sf_dir, "embeddings")
+def _ivf_ranked(vecs: DataFrame, k: int, *cols: str) -> DataFrame:
+    """IVF nearest-centroid ranking: every usable vector (vec_id, *cols,
+    embedding, vn) against the k lowest-id usable vectors as centroids
+    (cent_id, cv, cn) — a K-row broadcast fan-out, zero shuffle — ranked
+    ``ark`` by (cos_c DESC, cent_id). ``ark == 1`` is the vector's cell."""
     # zero-norm + width exclusion on centroids AND corpus rows (the
     # sim_neardup / semdedup lessons: 0/0 cosines are NaN and the engines
     # order NaN differently under DESC; and the oracle's generate_series
@@ -236,7 +241,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     # only an explicit dims pin keeps membership identical across engines)
     usable = vecs.filter(F.size("embedding") == DIMS)
     cents = (
-        usable.filter(F.col("vec_id") <= _IVF_K)
+        usable.filter(F.col("vec_id") <= k)
         .select(
             F.col("vec_id").alias("cent_id"),
             F.col("embedding").alias("cv"),
@@ -245,7 +250,9 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         .filter(F.col("cn") > 0)
     )
     scored = (
-        usable.select("vec_id", "embedding", norm_expr("embedding").alias("vn"))
+        usable.select(
+            "vec_id", *cols, "embedding", norm_expr("embedding").alias("vn")
+        )
         .filter(F.col("vn") > 0)
         .crossJoin(F.broadcast(cents))
         .withColumn(
@@ -253,7 +260,11 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         )
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_c"), F.asc("cent_id"))
-    ranked_asg = scored.withColumn("ark", F.row_number().over(w))
+    return scored.withColumn("ark", F.row_number().over(w))
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    ranked_asg = _ivf_ranked(load_table(spark, sf_dir, "embeddings"), _IVF_K)
     assigned = ranked_asg.filter(F.col("ark") == 1).select(
         "vec_id", "embedding", "vn", F.col("cent_id").alias("cell")
     )
@@ -317,22 +328,26 @@ def q_sim_ivf_dials(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_assign_ctes(k: int, *cols: str) -> str:
+    """WITH-chain ending in ``ranked_asg``: the oracle of ``_ivf_ranked``."""
+    return f"""cents AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+               WHERE vec_id <= {k} AND len(embedding) = {DIMS}
+                 AND {_duck_norm('embedding')} > 0),
+vs AS (SELECT vec_id, {"".join(f"{c}, " for c in cols)}embedding FROM embeddings
+       WHERE len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
+scored AS (SELECT v.*, c.cent_id,
+                  {_duck_cosine('v.embedding', 'c.cv')} AS cos_c
+           FROM vs v CROSS JOIN cents c),
+ranked_asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id
+                            ORDER BY cos_c DESC, cent_id) AS ark
+               FROM scored)"""
+
+
 def _ivf_ctes(nprobe: int) -> str:
     """Shared WITH-chain: IVF assignment → in-cell ranked candidates
     (reused by the multiprobe and recall-eval oracles). Mirrors
     ``_ivf_topk`` exactly: index side rk=1, query side rk <= nprobe."""
-    return f"""cents AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-               WHERE vec_id <= {_IVF_K} AND len(embedding) = {DIMS}
-                 AND {_duck_norm('embedding')} > 0),
-ivfvs AS (SELECT vec_id, embedding FROM embeddings
-          WHERE len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-scored AS (SELECT v.vec_id, v.embedding,
-                  c.cent_id,
-                  {_duck_cosine('v.embedding', 'c.cv')} AS cos_c
-           FROM ivfvs v CROSS JOIN cents c),
-ranked_asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cos_c DESC, cent_id) AS ark
-               FROM scored),
+    return f"""{_ivf_assign_ctes(_IVF_K)},
 assigned AS (SELECT vec_id, embedding, cent_id AS cell
              FROM ranked_asg WHERE ark = 1),
 q AS (SELECT vec_id AS query_id, embedding AS qv, cent_id AS cell
@@ -378,49 +393,11 @@ ORDER BY nprobe, query_id, rk
 # the 3 queries against the full index (the exact baseline is a full scan
 # BY DEFINITION — its cost is the reason IVF exists).
 # --------------------------------------------------------------------------
-def _bf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force top-k (query_id, neighbor_id) for the probe
-    queries — the ground-truth relevant set both IVF evals grade against.
-    Full-scan by definition; the 3 queries are the broadcast side."""
-    vecs = load_table(spark, sf_dir, "embeddings")
-    # same zero-norm + width exclusion as the IVF path it grades (a
-    # degenerate query disappears from BOTH engines' outputs; a
-    # degenerate candidate never scores)
-    usable = vecs.filter(F.size("embedding") == DIMS)
-    q = (
-        usable.filter(F.col("vec_id").isin(_IVF_QUERY_IDS))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm_expr("embedding").alias("qn"),
-        )
-        .filter(F.col("qn") > 0)
-    )
-    bf_pairs = (
-        usable.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("nv"),
-            norm_expr("embedding").alias("nn"),
-        )
-        .filter(F.col("nn") > 0)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", seq_dot("qv", "nv") / (F.col("qn") * F.col("nn"))
-        )
-    )
-    wbf = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        bf_pairs.withColumn("rk", F.row_number().over(wbf))
-        .filter(F.col("rk") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-
-
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf_top = _bf_topk(spark, sf_dir)
+    bf_top = cosine_topk(
+        load_table(spark, sf_dir, "embeddings"), _IVF_QUERY_IDS, _IVF_TOPK,
+        dims=DIMS,
+    ).select("query_id", "neighbor_id")
     ivf_top = q_sim_ivf_topk(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
@@ -442,23 +419,13 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_RECALL_SQL = f"""
 WITH {_IVF_CTES},
 ivf AS (SELECT query_id, neighbor_id FROM ranked WHERE rk <= {_IVF_TOPK}),
-bfq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-        WHERE vec_id IN ({", ".join(map(str, _IVF_QUERY_IDS))})
-          AND len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-bf AS (SELECT bfq.query_id, v.vec_id AS neighbor_id,
-              {_duck_cosine('bfq.qv', 'v.embedding')} AS cosine
-       FROM bfq JOIN ivfvs v ON v.vec_id <> bfq.query_id),
-bftop AS (SELECT query_id, neighbor_id
-          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rk
-                FROM bf)
-          WHERE rk <= {_IVF_TOPK})
+{_bf_topk_ctes(_IVF_QUERY_IDS, _IVF_TOPK)}
 SELECT b.query_id,
        COUNT(*) AS n_bf,
        CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
        CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
             AS DOUBLE) / {_IVF_TOPK} AS recall
-FROM bftop b
+FROM bf_top b
 LEFT JOIN ivf i ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
 GROUP BY b.query_id ORDER BY b.query_id
 """
@@ -478,7 +445,10 @@ GROUP BY b.query_id ORDER BY b.query_id
 # precedence; r11 registers it as one of its ≤2 net-new.
 # --------------------------------------------------------------------------
 def q_retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf_top = _bf_topk(spark, sf_dir).withColumn("hit", F.lit(1))
+    bf_top = cosine_topk(
+        load_table(spark, sf_dir, "embeddings"), _IVF_QUERY_IDS, _IVF_TOPK,
+        dims=DIMS,
+    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     ivf = q_sim_ivf_multiprobe(spark, sf_dir)
     return (
         ivf.join(bf_top, ["query_id", "neighbor_id"], "left")
@@ -502,22 +472,12 @@ def q_retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RETRIEVAL_MRR_SQL = f"""
 WITH {_ivf_ctes(_IVF_NPROBE)},
 ivf AS (SELECT query_id, neighbor_id, rk FROM ranked WHERE rk <= {_IVF_TOPK}),
-bfq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-        WHERE vec_id IN ({", ".join(map(str, _IVF_QUERY_IDS))})
-          AND len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-bf AS (SELECT bfq.query_id, v.vec_id AS neighbor_id,
-              {_duck_cosine('bfq.qv', 'v.embedding')} AS cosine
-       FROM bfq JOIN ivfvs v ON v.vec_id <> bfq.query_id),
-bftop AS (SELECT query_id, neighbor_id
-          FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rk
-                FROM bf)
-          WHERE rk <= {_IVF_TOPK}),
+{_bf_topk_ctes(_IVF_QUERY_IDS, _IVF_TOPK)},
 agg AS (SELECT i.query_id,
                CAST(MIN(CASE WHEN b.neighbor_id IS NOT NULL THEN i.rk END)
                     AS BIGINT) AS first_hit_rank
         FROM ivf i
-        LEFT JOIN bftop b ON b.query_id = i.query_id
+        LEFT JOIN bf_top b ON b.query_id = i.query_id
                          AND b.neighbor_id = i.neighbor_id
         GROUP BY i.query_id)
 SELECT query_id, first_hit_rank,

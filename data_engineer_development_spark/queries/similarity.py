@@ -64,20 +64,28 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIM_TOPK_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id IN ({", ".join(map(str, QUERY_IDS))})
+def _bf_topk_ctes(query_ids: list[int], k: int) -> str:
+    """WITH-chain ending in ``bf_top`` (query_id, neighbor_id, cosine, rk
+    ≤ k): the oracle of ``cosine_topk(..., dims=DIMS)``."""
+    return f"""bf_q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
+           WHERE vec_id IN ({", ".join(map(str, query_ids))})
              AND len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-cand AS (SELECT vec_id, embedding FROM embeddings
+bf_cand AS (SELECT vec_id, embedding FROM embeddings
          WHERE len(embedding) = {DIMS} AND {_duck_norm('embedding')} > 0),
-scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+bf_scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                   {_duck_cosine('q.qv', 'e.embedding')} AS cosine
-           FROM q CROSS JOIN cand e WHERE q.query_id <> e.vec_id),
-ranked AS (SELECT query_id, neighbor_id, cosine,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rk
-           FROM scored)
-SELECT query_id, rk, neighbor_id, cosine FROM ranked WHERE rk <= {TOPK}
+           FROM bf_q q CROSS JOIN bf_cand e WHERE q.query_id <> e.vec_id),
+bf_top AS (SELECT * FROM (
+             SELECT query_id, neighbor_id, cosine,
+                    row_number() OVER (PARTITION BY query_id
+                                       ORDER BY cosine DESC, neighbor_id) AS rk
+             FROM bf_scored)
+           WHERE rk <= {k})"""
+
+
+_SIM_TOPK_SQL = f"""
+WITH {_bf_topk_ctes(QUERY_IDS, TOPK)}
+SELECT query_id, rk, neighbor_id, cosine FROM bf_top
 ORDER BY query_id, rk
 """
 

@@ -155,6 +155,41 @@ def test_local_checkpoint_does_not_capture_upstream_persist(spark):
     assert _n_cached(spark) == 0
 
 
+def test_persisted_self_join_computes_its_input_once(spark):
+    """The ONE-materialization premise of ``cache.py``: a tracked persist
+    read by both sides of a self-join is computed once, even on a cold
+    cache with both sides' map stages running at once. The task that
+    loses the race for a block waits for it and reads it — Spark's
+    "Block rdd_N_M already exists on this machine; not re-adding it" log
+    line comes from that lock-then-reuse path, not from a recompute. A
+    Python UDF in the persisted projection counts its calls."""
+    from pyspark.sql import functions as F
+
+    n = 20_000
+    calls = spark.sparkContext.accumulator(0)
+
+    def doubled(x):
+        calls.add(1)
+        return 2 * x
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        base = cache.track_persist(
+            spark.range(n).select("id", F.udf(doubled, "long")("id").alias("v"))
+        )
+        # two different projections, so two shuffle map stages (not one
+        # reused exchange), and both value columns survive pruning
+        left = base.select("id", "v")
+        right = base.select("id", (F.col("v") + 1).alias("w"))
+        row = left.join(right, "id").agg(F.sum("v"), F.sum("w")).first()
+        assert tuple(row) == (n * (n - 1), n * (n - 1) + n)
+        assert calls.value == n
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        cache.release_tracked()
+
+
 def test_overlap_orders_results_runs_single_inline_and_settles_siblings():
     """cache.overlap's contract, pure Python: results in input order
     (whatever order the functions finish in), one function runs on the

@@ -33,17 +33,18 @@ _ALLOWED = {
                             "the same bounded control-plane shape as "
                             "Lloyd's centroid collect"),
     "catalog.py": (1, "SHOW TBLPROPERTIES — metadata rows, never data"),
-    "operators/similarity.py": (7, "documented bounded brute-force path "
-                                   "behind the LSH auto-switch cap; semdedup "
+    "operators/similarity.py": (6, "_block_pairs' all-pairs index "
+                                   "collect (MAX_BROADCAST_ROWS-guarded "
+                                   "exactness baseline behind "
+                                   "neardup_pairs_cosine and "
+                                   "quantized_neardup_pairs); semdedup "
                                    "codebook seed collect (≤ k_cells rows, "
                                    "captured by the numpy assignment "
                                    "scorer); Lloyd per-round centroid "
                                    "sums collect (≤ n_shards·k_cells rows "
                                    "— one per (shard, cell), the "
                                    "distributed-k-means driver "
-                                   "round-trip); quantized truth-set matrix "
-                                   "collect (ceiling-guarded exactness "
-                                   "baseline); sharded dims probe (limit-1), "
+                                   "round-trip); sharded dims probe (limit-1), "
                                    "per-shard seed collect (≤ n_shards·"
                                    "k_cells rows, SHARDED_SEED_MAX_ROWS "
                                    "guarded), "

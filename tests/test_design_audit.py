@@ -17,7 +17,11 @@ output schema, whatever its dials. The lexical and hash near-dup family has
 one join per shape: one md5-keyed shingle-overlap join
 (``dedup._shingle_overlap``), one pigeonhole hamming join
 (``dedup.hamming_pairs``) and, in the queries, one shingled documents frame
-(``queries.dedup._docs_with_shingles``).
+(``queries.dedup._docs_with_shingles``). The float-cosine family has one
+numpy sequential fold (``similarity._seq_dot``), one broadcast block-pairs
+scorer (``similarity._block_pairs``), one exact top-k (``cosine_topk``) and,
+in the queries, one IVF nearest-centroid assignment
+(``queries.extras._ivf_ranked``).
 """
 
 from __future__ import annotations
@@ -173,3 +177,36 @@ def test_near_dup_family_has_one_join_per_shape():
     assert _functions_containing('shingles_expr("t", k=3)', PKG / "queries") == [
         "queries/dedup.py:_docs_with_shingles"
     ]
+
+
+def test_float_cosine_family_has_one_path_per_shape():
+    """The numpy ``acc +=`` dims fold lives only in ``_seq_dot``, the IVF
+    centroid fan-out only in ``_ivf_ranked``, the ``mapInPandas`` pair
+    scorer only in ``_block_pairs``, and the all-pairs and top-k operators
+    take no column-name, LSH or ceiling options."""
+    import inspect
+
+    from data_engineer_development_spark.operators import similarity as S
+
+    assert _functions_containing("acc +=", PKG) == [
+        "operators/similarity.py:_seq_dot"
+    ]
+    assert _functions_containing("crossJoin(F.broadcast(cents))", PKG / "queries") == [
+        "queries/extras.py:_ivf_ranked"
+    ]
+    assert _functions_containing(".mapInPandas(score_blocks", PKG / "operators") == [
+        "operators/similarity.py:_block_pairs"
+    ]
+    removed = {"id_col", "vec_col", "use_lsh", "planes", "max_broadcast_rows"}
+    for fn in (
+        S.cosine_topk,
+        S.neardup_pairs_cosine,
+        S.quantized_neardup_pairs,
+        S.semdedup,
+        S.semdedup_incremental,
+        S.semdedup_sharded,
+    ):
+        assert not removed & set(inspect.signature(fn).parameters), fn.__name__
+    assert "dims" not in inspect.signature(S.neardup_pairs_cosine).parameters
+    assert "vec_col" not in inspect.signature(S.bucket_assign).parameters
+    assert not hasattr(S, "cosine")

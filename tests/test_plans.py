@@ -446,7 +446,7 @@ def test_frame_sample_is_mapinpandas_chain(spark):
 #: day-grid bounds, IVF centroid fan-out), and the grid cross of gapfill.
 _CARTESIAN_OK = {
     "sim_cosine_topk",      # brute-force baseline by definition
-    "sim_neardup",          # block-nested-loop kernel, auto-switches to LSH
+    "sim_neardup",          # block-nested-loop kernel (broadcast ceiling)
     "ann_recall_eval",      # contains the brute-force truth side
     "sim_ivf_topk",         # centroid broadcast fan-out (K rows; the
                             # r16 folded entry runs both probe dials)

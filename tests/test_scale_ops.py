@@ -116,25 +116,18 @@ def test_stateful_running_totals_match_batch(spark):
     assert got == batch
 
 
-def test_neardup_exact_autoswitches_to_lsh(spark):
-    # above max_broadcast_rows the exact (driver-collect) path must not run;
-    # the result must equal the explicit LSH path's
-    from data_engineer_development_spark.operators.similarity import (
-        neardup_pairs_cosine,
-    )
+def test_all_pairs_scorers_refuse_past_broadcast_ceiling(spark, monkeypatch):
+    # both all-pairs scorers collect the index side to the driver: past
+    # MAX_BROADCAST_ROWS they must raise, never broadcast the matrix
+    import pytest
 
-    import warnings as _warnings
+    from data_engineer_development_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "MAX_BROADCAST_ROWS", 10)
     vecs = load_table(spark, SF_CORRECT, "embeddings").limit(200)
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        auto = neardup_pairs_cosine(vecs, 0.9, max_broadcast_rows=10)
-    # the switch must be LOUD (recall drops below 1), never silent
-    assert any("LSH" in str(w.message) for w in caught)
-    # the LSH path is a bucket equi-join — no mapInPandas stage in the plan
-    assert "mapInPandas" not in auto._jdf.queryExecution().analyzed().toString()
-    lsh = neardup_pairs_cosine(vecs, 0.9, use_lsh=True)
-    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, lsh.collect()))
+    for fn in (similarity.neardup_pairs_cosine, similarity.quantized_neardup_pairs):
+        with pytest.raises(ValueError, match="ceiling"):
+            fn(vecs, 0.9)
 
 
 def test_shingles_short_docs_are_empty(spark):
@@ -375,10 +368,11 @@ def test_asof_join_no_match_stays_null(spark):
 def test_neardup_pairs_excludes_zero_norm_both_paths(spark):
     """A zero-norm vector's cosine is 0/0 = NaN, and the three backends
     disagree on NaN >= tau (numpy: false; Spark SQL / DuckDB: NaN compares
-    greater than everything) — so the operator must exclude zero-norm
-    vectors identically on the exact and LSH paths."""
+    greater than everything) — so both all-pairs scorers (float and
+    quantized cosine) must exclude zero-norm vectors."""
     from data_engineer_development_spark.operators.similarity import (
         neardup_pairs_cosine,
+        quantized_neardup_pairs,
     )
 
     rows = [
@@ -387,14 +381,11 @@ def test_neardup_pairs_excludes_zero_norm_both_paths(spark):
         (3, [0.0, 0.0, 0.0, 0.0]),  # zero-norm: must never appear in pairs
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for lsh in (False, True):
+    for fn in (neardup_pairs_cosine, quantized_neardup_pairs):
         got = sorted(
-            (r["id1"], r["id2"])
-            for r in neardup_pairs_cosine(
-                vecs, tau=0.5, use_lsh=lsh, planes=2, dims=4
-            ).collect()
+            (r["id1"], r["id2"]) for r in fn(vecs, tau=0.5).collect()
         )
-        assert got == [(1, 2)], f"use_lsh={lsh}: {got}"
+        assert got == [(1, 2)], f"{fn.__name__}: {got}"
 
 
 def test_neardup_pairs_empty_and_all_zero_corpus(spark):

@@ -572,7 +572,7 @@ def test_numpy_assignment_equals_reference(spark):
 
     vecs = load_table(spark, SF_CORRECT, "embeddings")
     q = _with_quantized(vecs, "vec_id", "embedding")
-    cents, dims = _seed_codebook(q, 8, 64, "vec_id")
+    cents, dims = _seed_codebook(q, 8, 64)
     usable = q.filter(
         (F.size("embedding") == dims) & (F.col("qn") > 0)
     ).select("vec_id", "qv", "qn")
@@ -962,10 +962,10 @@ def test_numpy_quantizer_equals_jvm(spark):
     """r18 optimization pin (guide §4.2/§4.4): the Arrow/numpy
     ``_with_quantized`` must reproduce the Spark-SQL HOF formulation
     BIT-FOR-BIT — same max-abs grid (element-wise IEEE double ops in the
-    same order), same int64 self-dot, same NULL-array/empty-array/
-    zero-norm/off-width handling — on a corpus that exercises every edge
-    the fixtures and oracles can reach, plus doubles so large that
-    x·127 overflows to inf (the cast then saturates)."""
+    same order), same int64 self-dot, same NULL-array/NULL-element/
+    empty-array/zero-norm/off-width handling — on a corpus that
+    exercises every edge the fixtures and oracles can reach, plus doubles
+    so large that x·127 overflows to inf (the cast then saturates)."""
     from data_engineer_development_spark.operators.similarity import (
         _with_quantized,
     )
@@ -981,6 +981,9 @@ def test_numpy_quantizer_equals_jvm(spark):
         (7, []),                                 # empty array → qv [], qn 0
         (8, [-0.1, 0.1, -0.1, 0.1]),             # sign symmetry
         (9, [0.7000001, -0.6999999, 0.35, 0.0]), # near-tie magnitudes
+        (12, [1.0, None, 0.5, 0.0]),             # NULL element → NULL qn
+        (13, [None, 0.0, 0.0]),                  # NULL element, mx 0 → qn 0
+        (14, [float("nan"), None, 1.0]),         # NaN and NULL elements
     ]
     doubles = [
         (10, [1e307, -1e307, 1.0, 0.0]),        # x·127 overflows to ±inf
